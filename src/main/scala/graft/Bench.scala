@@ -14,13 +14,14 @@ import org.apache.spark.sql.SparkSession
   *     exception class+message and excluded from "queries"; "value" is
   *     then emitted as null — a crashing build can never be read as a
   *     faster total;
-  *   - CACHE SEMANTICS: no query caches per-query data anymore (round-3
-  *     lifecycle fix), so reps measure real re-execution. The ONE
-  *     deliberate cross-query artifact is the HNSW shared build
-  *     (immutable index tables per sf dir): hnsw_build measures its cold
-  *     construction (it clears the memo and rebuilds every rep), and the
-  *     remaining hnsw_* entries measure search/aggregation over the
-  *     prebuilt index — the realistic serving split;
+  *   - CACHE SEMANTICS: no query caches its own result, so reps measure
+  *     real re-execution. Cross-query artifacts (HNSW shards, the
+  *     NN-Descent graph, IVF index dirs, fitted models — deterministic
+  *     per sf dir) live in the one [[graft.queries.Artifacts]] registry:
+  *     the first query that needs one pays its build, and later queries
+  *     measure search/aggregation over it — the realistic serving split.
+  *     The three cold-build queries, hnsw_build, knn_graph and
+  *     rpt_leaf_stats, drop their artifacts and rebuild on every rep;
   *   - per-query telemetry (GC ms, shuffle spill bytes, peak execution
   *     memory, task count, min/max rep seconds) rides along in the full
   *     JSON so a transient excursion carries its mechanism with it.

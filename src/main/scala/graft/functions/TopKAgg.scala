@@ -11,21 +11,22 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** Bounded max-heap of (dist, id) pairs keeping the k smallest under the
-  * ordering (dist asc, id asc). ~k entries per aggregation buffer — this is
+  * ordering (dist asc, id asc), with Spark's double order: NaN sorts last
+  * and -0.0 ties 0.0. ~k entries per aggregation buffer — this is
   * what makes 100 TB top-k work: each partition reduces to k rows before
   * the shuffle (partial aggregation), instead of sorting |Q|·|B| rows under
   * a rank window (SURVEY.md §4.2, §7.3.5; semantics of
   * py/bruteforce.py:17-18 sort+slice).
   */
 final class TopKBuffer(val k: Int) {
+  import TopKBuffer.cmp
+
   // max-heap: root = worst kept entry under (dist, id)
   val heap = new java.util.PriorityQueue[(Double, Long)](
     math.max(k, 1),
     new java.util.Comparator[(Double, Long)] {
-      def compare(a: (Double, Long), b: (Double, Long)): Int = {
-        val c = java.lang.Double.compare(b._1, a._1)
-        if (c != 0) c else java.lang.Long.compare(b._2, a._2)
-      }
+      def compare(a: (Double, Long), b: (Double, Long)): Int =
+        cmp(b._1, b._2, a._1, a._2)
     }
   )
 
@@ -33,7 +34,7 @@ final class TopKBuffer(val k: Int) {
     if (heap.size < k) heap.add((dist, id))
     else {
       val worst = heap.peek()
-      if (dist < worst._1 || (dist == worst._1 && id < worst._2)) {
+      if (cmp(dist, id, worst._1, worst._2) < 0) {
         heap.poll()
         heap.add((dist, id))
       }
@@ -44,10 +45,16 @@ final class TopKBuffer(val k: Int) {
     val arr = heap.toArray(new Array[(Double, Long)](heap.size))
     scala.util.Sorting.stableSort(
       arr,
-      (a: (Double, Long), b: (Double, Long)) =>
-        a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)
-    )
+      (a: (Double, Long), b: (Double, Long)) => cmp(a._1, a._2, b._1, b._2) < 0)
     arr
+  }
+}
+
+object TopKBuffer {
+  /** (dist, id) order; dists compare as Spark orders doubles. */
+  private def cmp(da: Double, ia: Long, db: Double, ib: Long): Int = {
+    val c = if (da == db) 0 else java.lang.Double.compare(da, db)
+    if (c != 0) c else java.lang.Long.compare(ia, ib)
   }
 }
 

@@ -245,6 +245,14 @@ object RpTree {
             while (wi < ws.length && it.hasNext) {
               val r = it.next()
               if (off == ws(wi)._1) {
+                // the offsets come from the run-length pass over the same
+                // checkpoint; a row of another node means its order moved
+                if (r.getInt(0) != ws(wi)._2 || r.getLong(1) != ws(wi)._3)
+                  throw new IllegalStateException(
+                    s"RpTree.levelMedians: partition $pid row $off is " +
+                      s"(tree ${r.getInt(0)}, node ${r.getLong(1)}), expected " +
+                      s"(tree ${ws(wi)._2}, node ${ws(wi)._3}): row order " +
+                      "differs between the two passes")
                 out += (((ws(wi)._2, ws(wi)._3), r.getDouble(2)))
                 wi += 1
               }

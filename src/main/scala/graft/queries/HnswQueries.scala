@@ -24,81 +24,23 @@ object HnswQueries {
     (emb, q)
   }
 
-  /** The three HNSW queries share one deterministic build per sf dir (the
-    * artifact is immutable tables, so reuse is free). SEMANTICS: this makes
-    * hnsw_* query timings measure SEARCH over a prebuilt index — the build
-    * itself is benchmarked separately (Bench's hnsw_build entry calls
-    * [[clearBuildCache]] first). Bounded by the number of distinct sf dirs
-    * touched in one process (1–3 in practice); [[clearBuildCache]] releases
-    * the Spark-side caches for long-lived sessions.
-    */
-  private val buildCache =
-    scala.collection.concurrent.TrieMap.empty[String, DistributedHnsw.Shards]
-
-  /** Drop all memoized builds and release their executor-storage caches
-    * (the Shards-tracked build caches plus sharedBuild's edge-table cache).
-    */
-  def clearBuildCache(): Unit = {
-    buildCache.values.foreach { s =>
-      s.edges.unpersist(blocking = false)
-      s.unpersist()
-    }
-    buildCache.clear()
-    pqBuildCache.values.foreach { case (s, _) =>
-      s.edges.unpersist(blocking = false)
-      s.unpersist()
-    }
-    pqBuildCache.clear()
-    clusteredCache.values.foreach { case (s, _) =>
-      s.edges.unpersist(blocking = false)
-      s.unpersist()
-    }
-    clusteredCache.clear()
-    searchCache.values.foreach(_.unpersist())
-    searchCache.clear()
-    // checkpoint blocks are reclaimed by the ContextCleaner once the
-    // frames are unreachable
-    exactCache.clear()
-    replayCache.clear()
-  }
-
-  /** hnsw_knn's materialized result per sf dir (|Q|·k rows — tiny), so
-    * hnsw_recall scores THE search it just benchmarked instead of paying a
-    * redundant second shard sweep. Repopulated (old entry unpersisted) on
-    * every hnsw_knn run; released by [[clearBuildCache]].
-    */
-  private val searchCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-
   /** Exact brute-force ground truth per sf dir (|Q|·K rows — tiny,
     * localCheckpoint-materialized): the recall EVALUATION input shared by
-    * hnsw_recall and hnsw_ef_curve, immutable per dir like the build
-    * artifacts, so the eval harness doesn't re-pay a corpus scan per
-    * query entry. The measured operators (build, per-ef searches) are
-    * untouched.
+    * hnsw_recall and hnsw_ef_curve, so the eval harness doesn't re-pay a
+    * corpus scan per query entry. The measured operators (build, per-ef
+    * searches) are untouched.
     */
-  private val exactCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-
-  /** hnsw_knn_replay's deterministic layered artifact per sf dir —
-    * immutable and bit-rebuildable (md5 levels + exact edges), so the
-    * benched query measures the SEARCH replay, the family's declared
-    * serving split. Released by [[clearBuildCache]].
-    */
-  private val replayCache = scala.collection.concurrent.TrieMap
-    .empty[String, HnswReplay.LayeredIndex]
-
   private def sharedExact(
       spark: org.apache.spark.sql.SparkSession,
       dir: String
   ): org.apache.spark.sql.DataFrame =
-    exactCache.getOrElseUpdate(dir, {
+    Artifacts.get("hnsw_exact", dir) {
       val (emb, q) = embAndQueries(spark, dir)
       BruteForceKNN.knn(
         q, emb.select(col("vec_id").as("neighbor_id"), col("vec").as("bv")), K
       ).select(col("query_id"), col("neighbor_id"))
         .localCheckpoint()
-    })
+    }
 
   /** Default bench shard count, and the production-scale one: sharding is
     * exactly what degrades HNSW recall (each shard searches 1/N of the
@@ -109,96 +51,104 @@ object HnswQueries {
   private val DefaultShards = 4
   private val HighShards = 16
 
+  /** Every HNSW artifact in [[Artifacts]]. The shared builds make every
+    * hnsw_* entry but hnsw_build search-only; hnsw_build drops all of
+    * them for its dir, so it times a cold build.
+    */
+  private val HnswArtifacts = Seq(
+    "hnsw_build_det", s"hnsw_build_s$DefaultShards", s"hnsw_build_s$HighShards",
+    "hnsw_build_clustered", "hnsw_build_pq", "hnsw_search", "hnsw_exact",
+    "hnsw_replay")
+
   /** Deterministic-level build (md5-coin level draws, paper formula): the
-    * hash-checkable half of the HNSW build. Memoized alongside the other
-    * builds; released by [[clearBuildCache]].
+    * hash-checkable half of the HNSW build.
     */
   private def sharedDetBuild(
       spark: org.apache.spark.sql.SparkSession,
       dir: String
   ): DistributedHnsw.Shards =
-    buildCache.getOrElseUpdate(
-      s"$dir#det", {
-        val (emb, _) = embAndQueries(spark, dir)
-        val s = DistributedHnsw.build(
-          emb, "vec_id", "vec",
-          HnswParams(m = 16, efConstruction = 100, deterministicLevels = true),
-          DefaultShards, seed = 42
-        )
-        s.edges.cache().count()
-        s
-      }
-    )
+    Artifacts.get("hnsw_build_det", dir) {
+      val (emb, _) = embAndQueries(spark, dir)
+      val s = DistributedHnsw.build(
+        emb, "vec_id", "vec",
+        HnswParams(m = 16, efConstruction = 100, deterministicLevels = true),
+        DefaultShards, seed = 42
+      )
+      s.edges.cache().count()
+      s
+    }
 
   private def sharedBuild(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       numShards: Int = DefaultShards
   ): DistributedHnsw.Shards =
-    buildCache.getOrElseUpdate(
-      s"$dir#$numShards", {
-        val (emb, _) = embAndQueries(spark, dir)
-        val s = DistributedHnsw.build(
-          emb, "vec_id", "vec",
-          HnswParams(m = 16, efConstruction = 100),
-          numShards, seed = 42
-        )
-        s.edges.cache().count()
-        s
-      }
-    )
+    Artifacts.get(s"hnsw_build_s$numShards", dir) {
+      val (emb, _) = embAndQueries(spark, dir)
+      val s = DistributedHnsw.build(
+        emb, "vec_id", "vec",
+        HnswParams(m = 16, efConstruction = 100),
+        numShards, seed = 42
+      )
+      s.edges.cache().count()
+      s
+    }
 
   /** Shared CLUSTER-sharded build per sf dir (SPANN-style: shards are
     * coarse cells under the fixed data-derived centroids, so routed
     * search can probe a subset). Centroids = embeddings vec_id < 8, the
     * same fixed set the IVF queries use.
     */
-  private val clusteredCache = scala.collection.concurrent.TrieMap
-    .empty[String, (DistributedHnsw.Shards, Array[Array[Double]])]
-
   private def sharedClusteredBuild(
       spark: org.apache.spark.sql.SparkSession,
       dir: String
   ): (DistributedHnsw.Shards, Array[Array[Double]]) =
-    clusteredCache.getOrElseUpdate(
-      dir, {
-        val (emb, _) = embAndQueries(spark, dir)
-        val cents = emb.filter(col("vec_id") < 8).orderBy(col("vec_id"))
-          .select(col("vec")).collect().map(_.getSeq[Double](0).toArray)
-        val s = DistributedHnsw.buildClustered(
-          emb, "vec_id", "vec",
-          HnswParams(m = 16, efConstruction = 100), cents, seed = 42)
-        s.edges.cache().count()
-        (s, cents)
-      }
-    )
+    Artifacts.get("hnsw_build_clustered", dir) {
+      val (emb, _) = embAndQueries(spark, dir)
+      val cents = emb.filter(col("vec_id") < 8).orderBy(col("vec_id"))
+        .select(col("vec")).collect().map(_.getSeq[Double](0).toArray)
+      val s = DistributedHnsw.buildClustered(
+        emb, "vec_id", "vec",
+        HnswParams(m = 16, efConstruction = 100), cents, seed = 42)
+      s.edges.cache().count()
+      (s, cents)
+    }
 
   /** Shared PQ-compressed build per sf dir: the index whose shard artifact
     * carries the persisted code table (seeded codebooks, so rebuilds are
     * deterministic). Compressed search cogroups codes — the path
     * hnsw_knn_pq benches.
     */
-  private val pqBuildCache = scala.collection.concurrent.TrieMap
-    .empty[String, (DistributedHnsw.Shards, PQCompression)]
-
   private def sharedPqBuild(
       spark: org.apache.spark.sql.SparkSession,
       dir: String
   ): (DistributedHnsw.Shards, PQCompression) =
-    pqBuildCache.getOrElseUpdate(
-      dir, {
-        val (emb, _) = embAndQueries(spark, dir)
-        val comp = new PQCompression(
-          ProductQuantizer.train(emb, "vec", m = 8, k = 64, seed = 42))
-        val s = DistributedHnsw.build(
-          emb, "vec_id", "vec",
-          HnswParams(m = 16, efConstruction = 100),
-          DefaultShards, seed = 42, compression = Some(comp)
-        )
-        s.edges.cache().count()
-        (s, comp)
-      }
-    )
+    Artifacts.get("hnsw_build_pq", dir) {
+      val (emb, _) = embAndQueries(spark, dir)
+      val comp = new PQCompression(
+        ProductQuantizer.train(emb, "vec", m = 8, k = 64, seed = 42))
+      val s = DistributedHnsw.build(
+        emb, "vec_id", "vec",
+        HnswParams(m = 16, efConstruction = 100),
+        DefaultShards, seed = 42, compression = Some(comp)
+      )
+      s.edges.cache().count()
+      (s, comp)
+    }
+
+  /** The hnsw_*replay* family's deterministic layered artifact per sf dir
+    * — immutable and bit-rebuildable (md5 levels + exact edges), so the
+    * benched queries measure the SEARCH replay, the family's declared
+    * serving split.
+    */
+  private def sharedReplay(
+      spark: org.apache.spark.sql.SparkSession,
+      dir: String
+  ): HnswReplay.LayeredIndex =
+    Artifacts.get("hnsw_replay", dir) {
+      val (emb, _) = embAndQueries(spark, dir)
+      HnswReplay.buildLayered(emb, "vec_id", "vec")
+    }
 
   val all: Seq[GQuery] = Seq(
     // M5 build half: cold index construction, measured on its own — the
@@ -207,7 +157,7 @@ object HnswQueries {
     GQuery(
       "hnsw_build",
       (spark, dir) => {
-        clearBuildCache()
+        HnswArtifacts.foreach(Artifacts.drop(_, dir))
         sharedBuild(spark, dir).edges
           .select(col("shard"), col("layer"), col("src"), col("dst"))
       },
@@ -227,9 +177,8 @@ object HnswQueries {
             col("rnk").cast("long").as("rnk")
           )
         // memoize THIS result for hnsw_recall (replacing any prior run's)
-        searchCache.remove(dir).foreach(_.unpersist())
-        searchCache(dir) = res.cache()
-        res
+        Artifacts.drop("hnsw_search", dir)
+        Artifacts.get("hnsw_search", dir)(res.cache())
       },
       None
     ),
@@ -352,10 +301,10 @@ object HnswQueries {
       "hnsw_recall",
       (spark, dir) => {
         val (_, q) = embAndQueries(spark, dir)
-        val approx = searchCache.getOrElse(dir, {
+        val approx = Artifacts.get("hnsw_search", dir) {
           val shards = sharedBuild(spark, dir)
           DistributedHnsw.search(shards, q, "query_id", "qv", K)
-        })
+        }
         approx
           .select(col("query_id"), col("neighbor_id"))
           .join(sharedExact(spark, dir), Seq("query_id", "neighbor_id"))
@@ -455,8 +404,7 @@ object HnswQueries {
         val q = emb
           .filter(col("vec_id") % 10 === 0)
           .select(col("vec_id").as("query_id"), col("vec").as("qv"))
-        val idx = replayCache.getOrElseUpdate(
-          dir, HnswReplay.buildLayered(emb, "vec_id", "vec"))
+        val idx = sharedReplay(spark, dir)
         HnswReplay
           .searchReplay(idx, q, "query_id", "qv", k = K,
             ef = 16, greedyRounds = 2, beamRounds = 4)
@@ -494,8 +442,7 @@ object HnswQueries {
         val q20 = emb
           .filter(col("vec_id") % 20 === 0)
           .select(col("vec_id").as("query_id"), col("vec").as("qv"))
-        val idx = replayCache.getOrElseUpdate(
-          dir, HnswReplay.buildLayered(emb, "vec_id", "vec"))
+        val idx = sharedReplay(spark, dir)
         val curve = HnswReplay.replayEfCurve(
           idx, q20, "query_id", "qv", K, Seq(10, 16, 32),
           greedyRounds = 2, beamRounds = 4)
@@ -570,8 +517,7 @@ object HnswQueries {
         val q = emb
           .filter(col("vec_id") % 10 === 0)
           .select(col("vec_id").as("query_id"), col("vec").as("qv"))
-        val idx = replayCache.getOrElseUpdate(
-          dir, HnswReplay.buildLayered(emb, "vec_id", "vec"))
+        val idx = sharedReplay(spark, dir)
         val model = replayFixedModel(spark, dir)
         val codes = emb.select(
           col("vec_id").as("cid"),
@@ -630,8 +576,7 @@ object HnswQueries {
         val q = emb
           .filter(col("vec_id") % 10 === 0)
           .select(col("vec_id").as("query_id"), col("vec").as("qv"))
-        val idx = replayCache.getOrElseUpdate(
-          dir, HnswReplay.buildLayered(emb, "vec_id", "vec"))
+        val idx = sharedReplay(spark, dir)
         val allowed = embT.filter(col("label") % 2 === 0).select(col("vec_id"))
         HnswReplay
           .searchReplayFiltered(idx, q, "query_id", "qv", allowed,
@@ -672,8 +617,7 @@ object HnswQueries {
         val q = emb
           .filter(col("vec_id") % 10 === 0)
           .select(col("vec_id").as("query_id"), col("vec").as("qv"))
-        val idx = replayCache.getOrElseUpdate(
-          dir, HnswReplay.buildLayered(emb, "vec_id", "vec"))
+        val idx = sharedReplay(spark, dir)
         val tomb = emb.filter(col("vec_id") % 7 === 0).select(col("vec_id"))
         HnswReplay
           .searchReplayDeleted(idx, q, "query_id", "qv", tomb,
@@ -730,8 +674,7 @@ object HnswQueries {
         val q20 = emb
           .filter(col("vec_id") % 20 === 0)
           .select(col("vec_id").as("query_id"), col("vec").as("qv"))
-        val idx = replayCache.getOrElseUpdate(
-          dir, HnswReplay.buildLayered(emb, "vec_id", "vec"))
+        val idx = sharedReplay(spark, dir)
         val vis = HnswReplay
           .visitedLayer0(
             idx,

@@ -31,98 +31,97 @@ object IvfQueries {
       .collect()
       .map(_.getSeq[Double](0).toArray)
 
+  /** A fresh index path inside a temp dir that is deleted when the JVM
+    * exits.
+    */
+  private def tempIndexPath(prefix: String): String =
+    org.apache.spark.GraftSparkInternals.createTempDir(prefix).getPath + "/index"
+
   /** One cell-partitioned index build per sf dir (immutable artifact —
     * reuse across query invocations is free; same pattern as
     * [[HnswQueries]]'s shared build).
     */
-  private val indexCache = scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def sharedIndex(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       cents: Array[Array[Double]]
   ): String =
-    indexCache.getOrElseUpdate(
-      dir, {
-        val emb = t(spark, dir, "embeddings")
-          .select(
-            col("vec_id"), toDouble(col("embedding")).as("vec"), col("label"))
-        val path = java.nio.file.Files
-          .createTempDirectory("graft-ivf").toString + "/index"
-        IvfIndex.build(
-          spark, emb, "vec_id", "vec", cents, path, extraCols = Seq("label"))
-        path
-      }
-    )
+    Artifacts.get("ivf_index", dir) {
+      val emb = t(spark, dir, "embeddings")
+        .select(
+          col("vec_id"), toDouble(col("embedding")).as("vec"), col("label"))
+      val path = tempIndexPath("graft-ivf")
+      IvfIndex.build(
+        spark, emb, "vec_id", "vec", cents, path, extraCols = Seq("label"))
+      path
+    }
 
-  /** A MAINTAINED index per sf dir: built from 4/5 of the corpus, the
-    * remaining fifth upserted (appended at gen 1 + tombstoned at gen 1),
-    * then every vec_id % 7 == 0 deleted (tombstoned at gen 2). The live
-    * corpus is exactly {vec_id % 7 != 0} — deterministic, so the full
-    * build/append/mask/search path is oracle-checked.
+  /** Build a MAINTAINED index at a fresh path: built from 4/5 of the
+    * corpus, the remaining fifth upserted (appended at gen 1 + tombstoned
+    * at gen 1), then every vec_id % 7 == 0 deleted (tombstoned at gen 2).
+    * The live corpus is exactly {vec_id % 7 != 0} — deterministic, so the
+    * full build/append/mask/search path is oracle-checked.
     */
-  private val maintainedCache = scala.collection.concurrent.TrieMap.empty[String, String]
+  private def buildMaintained(
+      spark: org.apache.spark.sql.SparkSession,
+      dir: String,
+      cents: Array[Array[Double]],
+      prefix: String
+  ): String = {
+    val emb = t(spark, dir, "embeddings")
+      .select(col("vec_id"), toDouble(col("embedding")).as("vec"))
+    val path = tempIndexPath(prefix)
+    IvfIndex.build(
+      spark, emb.filter(col("vec_id") % 5 =!= 0), "vec_id", "vec", cents, path)
+    IvfIndex.upsert(
+      spark, path, emb.filter(col("vec_id") % 5 === 0), "vec_id", "vec", cents)
+    IvfIndex.delete(
+      spark, path, emb.filter(col("vec_id") % 7 === 0).select(col("vec_id")))
+    path
+  }
 
+  /** The maintained index per sf dir ([[buildMaintained]]). */
   private def maintainedIndex(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       cents: Array[Array[Double]]
   ): String =
-    maintainedCache.getOrElseUpdate(
-      dir, {
-        val emb = t(spark, dir, "embeddings")
-          .select(col("vec_id"), toDouble(col("embedding")).as("vec"))
-        val path = java.nio.file.Files
-          .createTempDirectory("graft-ivf-maint").toString + "/index"
-        IvfIndex.build(
-          spark, emb.filter(col("vec_id") % 5 =!= 0), "vec_id", "vec", cents, path)
-        IvfIndex.upsert(
-          spark, path, emb.filter(col("vec_id") % 5 === 0), "vec_id", "vec", cents)
-        IvfIndex.delete(
-          spark, path, emb.filter(col("vec_id") % 7 === 0).select(col("vec_id")))
-        path
-      }
-    )
+    Artifacts.get("ivf_maintained", dir)(
+      buildMaintained(spark, dir, cents, "graft-ivf-maint"))
 
   /** ann_full's maintained SQ-coded artifact per sf dir: TRAIN the codec
     * on the standing 4/5 corpus (frozen before the wave — the production
     * ordering) → ENCODE → BUILD cell-partitioned with (code, label)
     * riding the index → UPSERT the 1/5 wave under the frozen codec
     * (gen-1 append) → DELETE vec_id % 7 == 0 (gen-2 tombstones; live =
-    * % 7 != 0 exactly). Memoized like maintainedIndex/buildCache, so the
+    * % 7 != 0 exactly). Memoized like maintainedIndex, so the
     * benched query measures SERVING over the materialized stages — the
     * declared hnsw/ivf family split.
     */
-  private val annFullCache = scala.collection.concurrent.TrieMap
-    .empty[String, (graft.operators.SQModel, String)]
-
   private def annFullArtifact(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       emb: org.apache.spark.sql.DataFrame,
       cents: Array[Array[Double]]
   ): (graft.operators.SQModel, String) =
-    annFullCache.getOrElseUpdate(
-      dir, {
-        val base = emb.filter(col("vec_id") % 5 =!= 0)
-        val wave = emb.filter(col("vec_id") % 5 === 0)
-        val model = graft.operators.ScalarQuantizer.train(base, "vec")
-        def coded(df: org.apache.spark.sql.DataFrame) =
-          df.join(
-            graft.operators.ScalarQuantizer
-              .encodePartitioned(df, "vec_id", "vec", model),
-            "vec_id")
-        val path = java.nio.file.Files
-          .createTempDirectory("graft-ann-full").toString + "/index"
-        IvfIndex.build(spark, coded(base), "vec_id", "vec", cents, path,
-          extraCols = Seq("code", "label"))
-        IvfIndex.upsert(spark, path, coded(wave), "vec_id", "vec", cents,
-          extraCols = Seq("code", "label"))
-        IvfIndex.delete(spark, path,
-          emb.filter(col("vec_id") % 7 === 0).select(col("vec_id")))
-        (model, path)
-      }
-    )
+    Artifacts.get("ann_full", dir) {
+      val base = emb.filter(col("vec_id") % 5 =!= 0)
+      val wave = emb.filter(col("vec_id") % 5 === 0)
+      val model = graft.operators.ScalarQuantizer.train(base, "vec")
+      def coded(df: org.apache.spark.sql.DataFrame) =
+        df.join(
+          graft.operators.ScalarQuantizer
+            .encodePartitioned(df, "vec_id", "vec", model),
+          "vec_id")
+      val path = tempIndexPath("graft-ann-full")
+      IvfIndex.build(spark, coded(base), "vec_id", "vec", cents, path,
+        extraCols = Seq("code", "label"))
+      IvfIndex.upsert(spark, path, coded(wave), "vec_id", "vec", cents,
+        extraCols = Seq("code", "label"))
+      IvfIndex.delete(spark, path,
+        emb.filter(col("vec_id") % 7 === 0).select(col("vec_id")))
+      (model, path)
+    }
 
   /** ivf_split_search's rebalanced artifact per sf dir: build under the
     * fixed centroids, find the HOTTEST cell (max members, tie → smallest
@@ -133,71 +132,50 @@ object IvfQueries {
     * the split one, plus cells NCELLS+i) and the index path. Memoized —
     * the benched query measures probe+search over the rebalanced index.
     */
-  private val splitCache = scala.collection.concurrent.TrieMap
-    .empty[String, (org.apache.spark.sql.DataFrame, String)]
-
   private def splitIndex(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       cents: Array[Array[Double]]
   ): (org.apache.spark.sql.DataFrame, String) =
-    splitCache.getOrElseUpdate(
-      dir, {
-        import spark.implicits._
-        val emb = t(spark, dir, "embeddings")
-          .select(col("vec_id"), toDouble(col("embedding")).as("vec"))
-        val path = java.nio.file.Files
-          .createTempDirectory("graft-ivf-split").toString + "/index"
-        IvfIndex.build(spark, emb, "vec_id", "vec", cents, path)
-        val hot = IvfIndex.load(spark, path)
-          .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-          .orderBy(col("n").desc, col("cell"))
-          .limit(1).head().getInt(0)
-        val subs = IvfIndex.load(spark, path)
-          .filter(col("cell") === hot)
-          .orderBy(col("id")).limit(2)
-          .select(col("vec")).collect()
-          .map(_.getSeq[Double](0).toArray)
-        val centsDf = cents.zipWithIndex
-          .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "cvec")
-        val newCents = IvfIndex
-          .splitCell(spark, path, centsDf, hot, subs, startCell = NCELLS)
-          .localCheckpoint()
-        (newCents, path)
-      }
-    )
+    Artifacts.get("ivf_split", dir) {
+      import spark.implicits._
+      val emb = t(spark, dir, "embeddings")
+        .select(col("vec_id"), toDouble(col("embedding")).as("vec"))
+      val path = tempIndexPath("graft-ivf-split")
+      IvfIndex.build(spark, emb, "vec_id", "vec", cents, path)
+      val hot = IvfIndex.load(spark, path)
+        .groupBy(col("cell")).agg(count(lit(1)).as("n"))
+        .orderBy(col("n").desc, col("cell"))
+        .limit(1).head().getInt(0)
+      val subs = IvfIndex.load(spark, path)
+        .filter(col("cell") === hot)
+        .orderBy(col("id")).limit(2)
+        .select(col("vec")).collect()
+        .map(_.getSeq[Double](0).toArray)
+      val centsDf = cents.zipWithIndex
+        .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cell", "cvec")
+      val newCents = IvfIndex
+        .splitCell(spark, path, centsDf, hot, subs, startCell = NCELLS)
+        .localCheckpoint()
+      (newCents, path)
+    }
 
   /** ivf_knn_compact's artifact per sf dir: the SAME maintenance
-    * sequence as [[maintainedIndex]] (build 4/5 → upsert 1/5 → delete
-    * % 7 == 0) followed by a MAJOR COMPACTION — live view rewritten at
-    * gen 0, log dropped. Its query shares ivf_knn_upsert's oracle
-    * verbatim: compaction is result-invariant by contract, and the
-    * oracle (not just a spec) now proves it.
+    * sequence as [[maintainedIndex]] followed by a MAJOR COMPACTION —
+    * live view rewritten at gen 0, log dropped. Its query shares
+    * ivf_knn_upsert's oracle verbatim: compaction is result-invariant by
+    * contract, and the oracle (not just a spec) now proves it.
     */
-  private val compactedCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def compactedIndex(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       cents: Array[Array[Double]]
   ): String =
-    compactedCache.getOrElseUpdate(
-      dir, {
-        val emb = t(spark, dir, "embeddings")
-          .select(col("vec_id"), toDouble(col("embedding")).as("vec"))
-        val path = java.nio.file.Files
-          .createTempDirectory("graft-ivf-compact").toString + "/index"
-        IvfIndex.build(
-          spark, emb.filter(col("vec_id") % 5 =!= 0), "vec_id", "vec", cents, path)
-        IvfIndex.upsert(
-          spark, path, emb.filter(col("vec_id") % 5 === 0), "vec_id", "vec", cents)
-        IvfIndex.delete(
-          spark, path, emb.filter(col("vec_id") % 7 === 0).select(col("vec_id")))
-        IvfIndex.compact(spark, path)
-        path
-      }
-    )
+    Artifacts.get("ivf_compacted", dir) {
+      val path = buildMaintained(spark, dir, cents, "graft-ivf-compact")
+      IvfIndex.compact(spark, path)
+      path
+    }
 
   /** The probed-search oracle body shared by the round-12 maintenance
     * rows (`liveFilter` = the live-corpus predicate on the candidate

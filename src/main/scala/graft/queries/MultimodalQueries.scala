@@ -118,15 +118,11 @@ object MultimodalQueries {
     * scene queries measure their DOWNSTREAM census over it, while raw
     * decode cost stays benchmarked by mm_decode_gif/mm_decode_video).
     */
-  private val sceneCutsCache = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.DataFrame]
-
   private def sharedSceneCuts(
       spark: org.apache.spark.sql.SparkSession,
       dir: String
   ): org.apache.spark.sql.DataFrame =
-    sceneCutsCache.getOrElseUpdate(
-      dir,
+    Artifacts.get("scene_cuts", dir)(
       Multimodal.sceneCuts(spark, sceneVids(spark, dir), tau = 4)
         .localCheckpoint())
 

@@ -168,9 +168,6 @@ object PQQueries {
           FROM cent${r - 1} c
           LEFT JOIN mm$r ml ON ml.ck = c.ck)""").mkString(",")}"""
 
-  private val kmFitCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
-
   /** The deterministic fit's final centroids, collected once per sf dir
     * and shared by the eval queries (the fit itself is the distributed
     * [[graft.operators.KMeans.fitDeterministic]] pass).
@@ -178,7 +175,7 @@ object PQQueries {
   private def sharedKmFit(
       spark: org.apache.spark.sql.SparkSession, dir: String
   ): Array[Array[Double]] =
-    kmFitCache.getOrElseUpdate(dir, {
+    Artifacts.get("km_fit", dir) {
       val emb = Q.t(spark, dir, "embeddings")
         .select(col("vec_id"), toDouble(col("embedding")).as("v"))
       val rows = graft.operators.KMeans
@@ -189,10 +186,7 @@ object PQQueries {
         cents(r.getLong(0).toInt)(r.getLong(1).toInt - 1) = r.getDouble(2)
       }
       cents
-    })
-
-  private val skmFitCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
+    }
 
   /** The spherical fit's final unit centroids, collected once per sf dir
     * and shared with the assignment query.
@@ -200,7 +194,7 @@ object PQQueries {
   private def sharedSkmFit(
       spark: org.apache.spark.sql.SparkSession, dir: String
   ): Array[Array[Double]] =
-    skmFitCache.getOrElseUpdate(dir, {
+    Artifacts.get("skm_fit", dir) {
       val emb = Q.t(spark, dir, "embeddings")
         .select(col("vec_id"), toDouble(col("embedding")).as("v"))
       val rows = graft.operators.SphericalKMeans
@@ -211,7 +205,7 @@ object PQQueries {
         cents(r.getLong(0).toInt)(r.getLong(1).toInt - 1) = r.getDouble(2)
       }
       cents
-    })
+    }
 
   /** SQL replay of KMeans.parallelInitDet(k, rounds, l): Bahmani
     * sampling rounds with md5 coins + decimal-exact φ, positional-argmin

@@ -5287,13 +5287,10 @@ object TextQueries {
   // engine materializes it once and both consumers read it (the
   // sharedGraph/sharedForest discipline). Row-local extraction kernel:
   // zero shuffle.
-  private val winnowCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-
   private def sharedWinnow(
       spark: org.apache.spark.sql.SparkSession, dir: String
   ): org.apache.spark.sql.DataFrame =
-    winnowCache.getOrElseUpdate(dir,
+    Artifacts.get("winnow", dir)(
       Dedup
         .winnowFingerprintsRow(Q.t(spark, dir, "documents"),
           "doc_id", "text", k = 5, w = 4)
@@ -5305,13 +5302,10 @@ object TextQueries {
   private case class TextRankShared(
       keywords: org.apache.spark.sql.DataFrame, model: Map[String, Double])
 
-  private val textRankCache =
-    scala.collection.concurrent.TrieMap.empty[String, TextRankShared]
-
   private def sharedTextRank(
       spark: org.apache.spark.sql.SparkSession, dir: String
   ): TextRankShared =
-    textRankCache.getOrElseUpdate(dir, {
+    Artifacts.get("textrank", dir) {
       val kws = graft.operators.TextRank
         .keywords(Q.t(spark, dir, "documents"), "doc_id", "text",
           window = 2, minCount = 5, minLen = 3, rounds = 3, topK = 100)
@@ -5319,7 +5313,7 @@ object TextQueries {
       TextRankShared(
         kws,
         kws.collect().map(r => r.getString(1) -> r.getDouble(2)).toMap)
-    })
+    }
 
   // unigram tokenizer shape shared by train/encode: max piece length 4,
   // weighted minCount 5, additive alpha 0.5, 2 hard-EM rounds.
@@ -5331,14 +5325,10 @@ object TextQueries {
   private final val UniAlpha = 0.5
   private final val UniRounds = 2
 
-  private val unigramCache =
-    scala.collection.concurrent.TrieMap.empty[String, TextAnalysis.UnigramModel]
-
   private def sharedUnigram(
       spark: org.apache.spark.sql.SparkSession, dir: String
   ): TextAnalysis.UnigramModel =
-    unigramCache.getOrElseUpdate(
-      dir,
+    Artifacts.get("unigram", dir)(
       TextAnalysis.unigramTrain(Q.t(spark, dir, "documents"), "text",
         maxPieceLen = UniL, minCount = UniMinC, rounds = UniRounds,
         alpha = UniAlpha))
@@ -5353,13 +5343,10 @@ object TextQueries {
   private case class WordPieceShared(
       merges: org.apache.spark.sql.DataFrame, vocab: Set[String])
 
-  private val wordPieceCache =
-    scala.collection.concurrent.TrieMap.empty[String, WordPieceShared]
-
   private def sharedWordPiece(
       spark: org.apache.spark.sql.SparkSession, dir: String
   ): WordPieceShared =
-    wordPieceCache.getOrElseUpdate(dir, {
+    Artifacts.get("wordpiece", dir) {
       val train = Q.t(spark, dir, "documents").filter(col("source") === "src0")
       val merges = TextAnalysis
         .wordPieceTrain(train, "text", numMerges = WpMerges,
@@ -5367,7 +5354,7 @@ object TextQueries {
         .localCheckpoint()
       WordPieceShared(
         merges, TextAnalysis.wordPieceVocab(train, "text", merges))
-    })
+    }
 
   /** l2-normalized 16-bucket hashed COUNT vectors per document — the
     * text_lsa feature table (doc_id as vec_id, ev DOUBLE[16]); zeros for

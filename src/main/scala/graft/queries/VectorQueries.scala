@@ -134,9 +134,6 @@ object VectorQueries {
                  FROM hsum$i s CROSS JOIN hmi$i m
                  CROSS JOIN hhu$i u CROSS JOIN hhv$i v)"""
 
-  private val hierCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-
   /** (vec_id, c_fine, c_mid, c_coarse) single-linkage cuts, one
     * distributed CC per level off the shared graph, materialized once
     * per sf dir.
@@ -144,7 +141,7 @@ object VectorQueries {
   private def sharedHierarchy(
       spark: org.apache.spark.sql.SparkSession, dir: String
   ): org.apache.spark.sql.DataFrame =
-    hierCache.getOrElseUpdate(dir, {
+    Artifacts.get("vec_hierarchy", dir) {
       val ids = t(spark, dir, "embeddings")
         .select(col("vec_id").cast("long").as("id"))
       val ud = sharedGraph(spark, dir)
@@ -171,7 +168,7 @@ object VectorQueries {
           coalesce(col("c_mid"), col("id")).as("c_mid"),
           coalesce(col("c_coarse"), col("id")).as("c_coarse"))
         .localCheckpoint()
-    })
+    }
 
   /** Undirected view of `g2` + universe degree table — shared by the
     * graph-audit oracles (triangles / kcore / modularity /
@@ -393,17 +390,12 @@ object VectorQueries {
           FROM vsel v JOIN vlast l ON l.src = v.src AND v.step = l.ms)"""
 
   /** Shared NN-Descent graph artifacts per sf dir, mirroring the hnsw_*
-    * bench split (HnswQueries.buildCache): knn_graph measures COLD
-    * construction (clears the memo, rebuilds), knn_graph_vamana measures
-    * the prune stage over the shared graph, knn_graph_search measures
-    * beam search over the shared pruned graph. All three artifacts are
+    * bench split: knn_graph measures COLD construction (drops the
+    * artifacts, rebuilds), knn_graph_vamana measures the prune stage
+    * over the shared graph, knn_graph_search measures beam search over
+    * the shared pruned graph. All three artifacts are
     * localCheckpoint-materialized, so reuse is a scan, not a recompute.
     */
-  private val graphCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-  private val prunedCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-
   private def embOf(spark: org.apache.spark.sql.SparkSession, dir: String) =
     t(spark, dir, "embeddings")
       .select(col("vec_id").as("id"), toDouble(col("embedding")).as("vec"))
@@ -412,24 +404,19 @@ object VectorQueries {
       spark: org.apache.spark.sql.SparkSession,
       dir: String
   ): org.apache.spark.sql.DataFrame =
-    graphCache.getOrElseUpdate(
-      dir,
+    Artifacts.get("knn_graph", dir)(
       NNDescent.knnGraph(embOf(spark, dir), "id", "vec", k = K, iterations = 2))
 
   private def sharedPruned(
       spark: org.apache.spark.sql.SparkSession,
       dir: String
   ): org.apache.spark.sql.DataFrame =
-    prunedCache.getOrElseUpdate(
-      dir,
+    Artifacts.get("knn_pruned", dir)(
       NNDescent
         .robustPrune(
           sharedGraph(spark, dir), embOf(spark, dir), "id", "vec",
           alpha = 1.2, maxDegree = 8)
         .localCheckpoint())
-
-  private val wedgeCache = scala.collection.concurrent.TrieMap
-    .empty[String, graft.operators.GraphAudit.WedgeStats]
 
   /** The SCAN/triangle tier's shared wedge artifact over the shared kNN
     * graph (per-edge common-neighbor counts + degrees), computed once per
@@ -442,14 +429,10 @@ object VectorQueries {
       spark: org.apache.spark.sql.SparkSession,
       dir: String
   ): graft.operators.GraphAudit.WedgeStats =
-    wedgeCache.getOrElseUpdate(
-      dir,
+    Artifacts.get("knn_wedge", dir)(
       graft.operators.GraphAudit.wedgeStats(
         sharedGraph(spark, dir),
         t(spark, dir, "embeddings").select(col("vec_id").cast("long").as("id"))))
-
-  private val pcaModelCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.operators.Pca.PcaModel]
 
   /** The corpus PCA model, fit once per sf dir (the expensive passes are
     * the covariance moments + 2×48 power-iteration rounds) and shared by
@@ -458,14 +441,11 @@ object VectorQueries {
   private def sharedPcaModel(
       spark: org.apache.spark.sql.SparkSession, dir: String
   ): graft.operators.Pca.PcaModel =
-    pcaModelCache.getOrElseUpdate(dir, {
+    Artifacts.get("pca_model", dir) {
       val emb = t(spark, dir, "embeddings")
         .select(col("vec_id"), toDouble(col("embedding")).as("v"))
       graft.operators.Pca.fit(emb, "v", d = 64, p = 2, rounds = PCAR)
-    })
-
-  private val facilityCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[(Long, Long, Double)]]
+    }
 
   /** The facility-location greedy trajectory (rnd, center_id, unrounded
     * gain), run once per sf dir and shared by pipeline_facility and
@@ -475,7 +455,7 @@ object VectorQueries {
   private def sharedFacility(
       spark: org.apache.spark.sql.SparkSession, dir: String
   ): Array[(Long, Long, Double)] =
-    facilityCache.getOrElseUpdate(dir, {
+    Artifacts.get("facility", dir) {
       val emb = t(spark, dir, "embeddings")
         .select(col("vec_id"), toDouble(col("embedding")).as("v"))
       graft.operators.FacilityLocation
@@ -483,10 +463,7 @@ object VectorQueries {
         .orderBy(col("rnd"))
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    })
-
-  private val walkCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
+    }
 
   /** The DeepWalk walk table over the shared kNN graph (every 5th node
     * starts one 5-step walk, salt "v1"), computed once per sf dir and
@@ -496,13 +473,13 @@ object VectorQueries {
   private def sharedWalks(
       spark: org.apache.spark.sql.SparkSession, dir: String
   ): org.apache.spark.sql.DataFrame =
-    walkCache.getOrElseUpdate(dir, {
+    Artifacts.get("walks", dir) {
       val starts = t(spark, dir, "embeddings")
         .filter(col("vec_id") % 5 === 0).select(col("vec_id"))
       graft.operators.RandomWalk
         .uniformWalks(sharedGraph(spark, dir), starts, steps = 5, salt = "v1")
         .localCheckpoint()
-    })
+    }
 
   /** Unrolled SQL replay of the shared DeepWalk table: undirected ranked
     * adjacency over g2, then one CTE per step picking neighbor rank
@@ -527,9 +504,6 @@ object VectorQueries {
           s"SELECT walk_id, CAST($t AS BIGINT) AS step, cur AS id FROM w$t")
           .mkString(" UNION ALL ")})"""
 
-  private val bfsCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-
   /** The multi-source BFS hop table (every 100th node a source, 4
     * rounds) over the shared kNN graph, computed once per sf dir and
     * shared by knn_graph_distances (hop histogram) and
@@ -538,13 +512,13 @@ object VectorQueries {
   private def sharedBfs(
       spark: org.apache.spark.sql.SparkSession, dir: String
   ): org.apache.spark.sql.DataFrame =
-    bfsCache.getOrElseUpdate(dir, {
+    Artifacts.get("bfs", dir) {
       val sources = t(spark, dir, "embeddings")
         .filter(col("vec_id") % 100 === 0).select(col("vec_id"))
       graft.operators.GraphAudit
         .multiSourceBfs(sharedGraph(spark, dir), sources, rounds = 4)
         .localCheckpoint()
-    })
+    }
 
   /** Unrolled SQL replay of [[sharedBfs]]: frontier-BFS rounds over
     * `wund` (needs [[walkCtes]] in scope); leaves b4 = the cumulative
@@ -562,9 +536,6 @@ object VectorQueries {
         b$t AS MATERIALIZED (SELECT * FROM b${t - 1}
               UNION ALL SELECT s, id, $t AS hop FROM f$t)""").mkString(",")}"""
 
-  private val louvainP1Cache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-
   /** The phase-1 Louvain partition (3 sync rounds over the shared kNN
     * graph), computed once per sf dir and shared by knn_graph_louvain
     * (serves it directly) and knn_graph_louvain2 (contracts it).
@@ -572,7 +543,7 @@ object VectorQueries {
   private def sharedLouvainP1(
       spark: org.apache.spark.sql.SparkSession, dir: String
   ): org.apache.spark.sql.DataFrame =
-    louvainP1Cache.getOrElseUpdate(dir, {
+    Artifacts.get("louvain_p1", dir) {
       val emb = t(spark, dir, "embeddings")
       graft.operators.Louvain
         .louvainSync(
@@ -580,21 +551,17 @@ object VectorQueries {
           emb.select(col("vec_id").cast("long").as("id")),
           rounds = 3)
         .localCheckpoint()
-    })
+    }
 
   // RP-tree forest shape (rpt_*): 2 trees × depth 4 over the 64-d table
   private val RPT_T = 2
   private val RPT_D = 4
 
-  private val forestCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.operators.RpTree.Forest]
-
   private def sharedForest(
       spark: org.apache.spark.sql.SparkSession,
       dir: String
   ): graft.operators.RpTree.Forest =
-    forestCache.getOrElseUpdate(
-      dir,
+    Artifacts.get("rpt_forest", dir)(
       graft.operators.RpTree.build(
         embOf(spark, dir), "id", "vec",
         numTrees = RPT_T, depth = RPT_D, dim = 64))
@@ -954,10 +921,9 @@ object VectorQueries {
       "knn_graph",
       (spark, dir) => {
         // cold-construction semantics (the hnsw_build convention): drop
-        // the shared artifacts, rebuild, re-memoize
-        graphCache.remove(dir)
-        prunedCache.remove(dir)
-        wedgeCache.remove(dir) // derives from the graph
+        // the shared graph and the artifacts derived from it, rebuild,
+        // re-memoize
+        Seq("knn_graph", "knn_pruned", "knn_wedge").foreach(Artifacts.drop(_, dir))
         sharedGraph(spark, dir)
           .select(
             col("src"), col("dst"),
@@ -1013,14 +979,15 @@ object VectorQueries {
       (spark, dir) => {
         // measures the PRUNE stage over the shared (memoized) graph, and
         // hands the materialized result to knn_graph_search (the
-        // hnsw_knn -> searchCache pattern: the next stage scores THE
+        // hnsw_knn -> hnsw_search pattern: the next stage scores THE
         // artifact this query just benchmarked, not a recompute)
         val pruned = NNDescent
           .robustPrune(
             sharedGraph(spark, dir), embOf(spark, dir), "id", "vec",
             alpha = 1.2, maxDegree = 8)
           .localCheckpoint()
-        prunedCache.put(dir, pruned)
+        Artifacts.drop("knn_pruned", dir)
+        Artifacts.get("knn_pruned", dir)(pruned)
         pruned.select(col("src"), col("dst"), round(col("dist"), 4).as("dist"))
       },
       Some(s"""
@@ -1805,7 +1772,7 @@ object VectorQueries {
     GQuery(
       "rpt_leaf_stats",
       (spark, dir) => {
-        forestCache.remove(dir)
+        Artifacts.drop("rpt_forest", dir)
         sharedForest(spark, dir).leaves
           .groupBy(col("tree"), col("leaf"))
           .agg(count(lit(1)).as("n"))

@@ -30,6 +30,13 @@ class ExtensionsSpec extends SparkSpec {
     assert(entries.map(_.getDouble(0)) == Seq(1.0, 3.0))
   }
 
+  test("graft_topk buffer: NaN orders last, so finite entries displace it") {
+    val buf = new graft.functions.TopKBuffer(3)
+    buf.add(Double.NaN, 1L)
+    Seq((2.0, 9L), (0.5, 7L), (2.0, 4L)).foreach { case (d, i) => buf.add(d, i) }
+    assert(buf.sortedEntries.toSeq == Seq((0.5, 7L), (2.0, 4L), (2.0, 9L)))
+  }
+
   test("graft_nfc: decomposed composes, normalized passes through, null-safe") {
     GraftExtensions.register(spark)
     val r = spark.sql(
