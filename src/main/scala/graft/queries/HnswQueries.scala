@@ -295,8 +295,8 @@ object HnswQueries {
     ),
     // D8: per-query Recall@10 of the sharded HNSW vs exact brute force.
     // Scores the memoized hnsw_knn result when present instead of paying
-    // a redundant second shard sweep; falls back to its own search when
-    // run standalone.
+    // a redundant second shard sweep; run before hnsw_knn, it memoizes
+    // its own uncached search plan, which re-runs the sweep every time.
     GQuery(
       "hnsw_recall",
       (spark, dir) => {
