@@ -1,5 +1,8 @@
 package graft.operators
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -279,28 +282,16 @@ object DistributedHnsw {
       k: Int,
       efSearch: Int = -1,
       compression: Option[VectorCompression] = None
-  ): DataFrame = {
-    val spark = shards.vectors.sparkSession
-    import spark.implicits._
-    val nShards = shards.numShards
-    val queryRdd = queries
-      .select(col(qidCol).cast("long"), col(qvecCol).cast("array<double>"))
-      .as[(Long, Seq[Double])]
-      .rdd.flatMap { case (id, v) =>
-        (0 until nShards).iterator.map(s => (s, (id, v)))
-      }
-    searchQueryRdd(shards, queryRdd, qidCol, k, efSearch, compression)
-  }
+  ): DataFrame =
+    searchIndexed(shards, fanOut(shards, queries, qidCol, qvecCol), qidCol,
+      k, Seq(efSearch), compression).drop("ef")
 
   /** Operating-curve search: ONE shard cogroup (one adjacency rebuild,
     * one upper-layer descent per query) serving EVERY efSearch setting —
-    * the per-ef work is only the layer-0 beam. A curve that calls
-    * [[search]] per setting pays the searcher assembly and the
-    * ef-independent descent × |efs| for identical routing (the r13
-    * hnsw_ef_curve cost). Each ef slice is bit-equal to [[search]] at
-    * that ef (spec-gated). Returns (ef, query_id, neighbor_id, dist,
-    * rnk) with the same bounded-heap global top-k merge, keyed per
-    * (ef, query).
+    * the per-ef work is only the layer-0 beam. [[search]] is this curve
+    * at one ef, so each ef slice is bit-equal to [[search]] at that ef
+    * (spec-gated). Returns (ef, query_id, neighbor_id, dist, rnk) with
+    * the same bounded-heap global top-k merge, keyed per (ef, query).
     */
   def searchEfCurve(
       shards: Shards,
@@ -311,57 +302,12 @@ object DistributedHnsw {
       efs: Seq[Int],
       compression: Option[VectorCompression] = None
   ): DataFrame = {
-    val spark = shards.vectors.sparkSession
-    import spark.implicits._
-    val nShards = shards.numShards
-    val params = shards.params
-    val efArr = efs.toArray
-    val queryRdd = queries
-      .select(col(qidCol).cast("long"), col(qvecCol).cast("array<double>"))
-      .as[(Long, Seq[Double])]
-      .rdd.flatMap { case (id, v) =>
-        (0 until nShards).iterator.map(s => (s, (id, v)))
-      }
-    val edgeRdd = shards.edges
-      .as[(Int, Int, Long, Long)]
-      .rdd.map { case (s, l, a, b) => (s, (l, a, b)) }
-    val entryRdd = shards.entries
-      .as[(Int, Long, Int)]
-      .rdd.map { case (s, ep, h) => (s, (ep, h)) }
-    val raw = (compression match {
-      case Some(c) =>
-        val codeRdd = shards.codes.getOrElse(shardCodes(shards.vectors, c))
-          .select(col("shard"), col("id"), col("code"))
-          .as[(Int, Long, Seq[Short])]
-          .rdd.map { case (s, id, cd) => (s, (id, cd)) }
-        searchShardsMulti[Seq[Short]](
-          codeRdd, edgeRdd, entryRdd, queryRdd, k, efArr,
-          (codes, height) => LocalGraphSearcher.compressed(
-            codes.map(_.toArray), height, params, c)
-        )
-      case None =>
-        val vecRdd = shards.vectors
-          .select(col("shard"), col("id"), col("vec"))
-          .as[(Int, Long, Seq[Double])]
-          .rdd.map { case (s, id, v) => (s, (id, v)) }
-        searchShardsMulti[Seq[Double]](
-          vecRdd, edgeRdd, entryRdd, queryRdd, k, efArr,
-          (vecs, height) => LocalGraphSearcher.raw(
-            vecs.map(_.toArray), height, params)
-        )
-    }).toDF("ef", "query_id", "neighbor_id", "dist")
-    raw
-      .groupBy(col("ef"), col("query_id"))
-      .agg(topK(col("dist"), col("neighbor_id"), k).as("tk"))
-      .select(col("ef"), col("query_id"),
-        posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(
-        col("ef").cast("long").as("ef"),
-        col("query_id").as(qidCol),
-        col("e.id").as("neighbor_id"),
-        col("e.dist").as("dist"),
-        (col("pos") + 1).cast("int").as("rnk")
-      )
+    // a repeated ef would put every neighbor twice into one (ef, query)
+    // top-k: the merge heap does not dedupe ids
+    require(efs.distinct.length == efs.length,
+      s"searchEfCurve: duplicate efs in ${efs.mkString("[", ", ", "]")}")
+    searchIndexed(shards, fanOut(shards, queries, qidCol, qvecCol), qidCol,
+      k, efs, compression)
   }
 
   /** Routed search over a [[buildClustered]] index: each query visits
@@ -393,68 +339,8 @@ object DistributedHnsw {
         col(qvecCol).cast("array<double>"))
       .as[(Int, Long, Seq[Double])]
       .rdd.map { case (s, id, v) => (s, (id, v)) }
-    searchQueryRdd(shards, queryRdd, qidCol, k, efSearch, compression)
-  }
-
-  /** Search kernel shared by the fan-out and routed paths: co-locate base
-    * table / edges / entry / the (shard, query) pairs per shard, rebuild a
-    * local index (graph replay — no random level draws, so exactly the
-    * built graph), merge per-query.
-    */
-  private def searchQueryRdd(
-      shards: Shards,
-      queryRdd: org.apache.spark.rdd.RDD[(Int, (Long, Seq[Double]))],
-      qidCol: String,
-      k: Int,
-      efSearch: Int,
-      compression: Option[VectorCompression]
-  ): DataFrame = {
-    val spark = shards.vectors.sparkSession
-    import spark.implicits._
-    val params = shards.params
-
-    val edgeRdd = shards.edges
-      .as[(Int, Int, Long, Long)]
-      .rdd.map { case (s, l, a, b) => (s, (l, a, b)) }
-    val entryRdd = shards.entries
-      .as[(Int, Long, Int)]
-      .rdd.map { case (s, ep, h) => (s, (ep, h)) }
-
-    val results = (compression match {
-      case Some(c) =>
-        val codeRdd = shards.codes.getOrElse(shardCodes(shards.vectors, c))
-          .select(col("shard"), col("id"), col("code"))
-          .as[(Int, Long, Seq[Short])]
-          .rdd.map { case (s, id, cd) => (s, (id, cd)) }
-        searchShards[Seq[Short]](
-          codeRdd, edgeRdd, entryRdd, queryRdd, k, efSearch,
-          (codes, height) => LocalGraphSearcher.compressed(
-            codes.map(_.toArray), height, params, c)
-        )
-      case None =>
-        val vecRdd = shards.vectors
-          .select(col("shard"), col("id"), col("vec"))
-          .as[(Int, Long, Seq[Double])]
-          .rdd.map { case (s, id, v) => (s, (id, v)) }
-        searchShards[Seq[Double]](
-          vecRdd, edgeRdd, entryRdd, queryRdd, k, efSearch,
-          (vecs, height) => LocalGraphSearcher.raw(
-            vecs.map(_.toArray), height, params)
-        )
-    }).toDF("query_id", "neighbor_id", "dist")
-
-    // global merge: bounded-heap top-k per query (partial agg per shard
-    // output partition, O(|Q|*k) shuffle)
-    results
-      .groupBy(col("query_id"))
-      .agg(topK(col("dist"), col("neighbor_id"), k).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(
-        col("query_id").as(qidCol),
-        col("e.id").as("neighbor_id"),
-        col("e.dist").as("dist"),
-        (col("pos") + 1).cast("int").as("rnk")
-      )
+    searchIndexed(shards, queryRdd, qidCol, k, Seq(efSearch), compression)
+      .drop("ef")
   }
 
   /** Attribute-filtered batch search (the graph half of the filtered-ANN
@@ -540,39 +426,15 @@ object DistributedHnsw {
     val spark = shards.vectors.sparkSession
     import spark.implicits._
     val params = shards.params
-    val nShards = shards.numShards
-
-    val baseRdd = flagged
+    val base = flagged
       .as[(Int, Long, Seq[Double], Boolean)]
       .rdd.map { case (s, id, v, ok) => (s, (id, (v, ok))) }
-    val edgeRdd = shards.edges
-      .as[(Int, Int, Long, Long)]
-      .rdd.map { case (s, l, a, b) => (s, (l, a, b)) }
-    val entryRdd = shards.entries
-      .as[(Int, Long, Int)]
-      .rdd.map { case (s, ep, h) => (s, (ep, h)) }
-    val queryRdd = queries
-      .select(col(qidCol).cast("long"), col(qvecCol).cast("array<double>"))
-      .as[(Long, Seq[Double])]
-      .rdd.flatMap { case (id, v) =>
-        (0 until nShards).iterator.map(s => (s, (id, v)))
-      }
-    val results = searchShards[(Seq[Double], Boolean)](
-      baseRdd, edgeRdd, entryRdd, queryRdd, k, efSearch,
+    searchShards[(Seq[Double], Boolean)](
+      shards, base, fanOut(shards, queries, qidCol, qvecCol), qidCol, k,
+      Seq(efSearch),
       (payload, height) => LocalGraphSearcher.rawFiltered(
         payload.map(_._1.toArray), payload.map(_._2), height, params)
-    ).toDF("query_id", "neighbor_id", "dist")
-
-    results
-      .groupBy(col("query_id"))
-      .agg(topK(col("dist"), col("neighbor_id"), k).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(
-        col("query_id").as(qidCol),
-        col("e.id").as("neighbor_id"),
-        col("e.dist").as("dist"),
-        (col("pos") + 1).cast("int").as("rnk")
-      )
+    ).drop("ef")
   }
 
   /** Shard-scoped compaction — the physical half of delete maintenance:
@@ -641,52 +503,87 @@ object DistributedHnsw {
     )
   }
 
-  /** The shard-cogroup search kernel, generic over the per-node payload
-    * (raw vectors or codes): replay the shard's edge table into a local
-    * searcher, run every query of the shard's query slice through it.
-    */
-  private def searchShards[V: scala.reflect.ClassTag](
-      base: org.apache.spark.rdd.RDD[(Int, (Long, V))],
-      edges: org.apache.spark.rdd.RDD[(Int, (Int, Long, Long))],
-      entries: org.apache.spark.rdd.RDD[(Int, (Long, Int))],
-      queries: org.apache.spark.rdd.RDD[(Int, (Long, Seq[Double]))],
-      k: Int,
-      efSearch: Int,
-      mkSearcher: (Array[V], Int) => LocalGraphSearcher
-  ): org.apache.spark.rdd.RDD[(Long, Long, Double)] =
-    base.cogroup(edges, entries, queries)
-      .flatMap { case (_, (nodes, es, ens, qs)) =>
-        if (nodes.isEmpty || ens.isEmpty || qs.isEmpty) Iterator.empty
-        else {
-          val sorted = nodes.toArray.sortBy(_._1)
-          val ids = sorted.map(_._1)
-          val localOf = ids.zipWithIndex.toMap
-          val (ep, height) = ens.head
-          val searcher = mkSearcher(sorted.map(_._2), height)
-          es.foreach { case (l, a, b) =>
-            searcher.addEdge(l, localOf(a), localOf(b))
-          }
-          searcher.setEntry(localOf(ep))
-          qs.iterator.flatMap { case (qid, qv) =>
-            searcher.search(qv.toArray, k, efSearch).map { case (d, local) =>
-              (qid, ids(local), d)
-            }
-          }
-        }
+  /** Every query replicated to every shard: the (shard, query) input of
+    * the hash-sharded searches. */
+  private def fanOut(
+      shards: Shards,
+      queries: DataFrame,
+      qidCol: String,
+      qvecCol: String
+  ): RDD[(Int, (Long, Seq[Double]))] = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val nShards = shards.numShards
+    queries
+      .select(col(qidCol).cast("long"), col(qvecCol).cast("array<double>"))
+      .as[(Long, Seq[Double])]
+      .rdd.flatMap { case (id, v) =>
+        (0 until nShards).iterator.map(s => (s, (id, v)))
       }
+  }
 
-  /** [[searchShards]] for a whole ef curve: identical shard assembly (one
-    * sort, one adjacency rebuild), one descent per query shared across
-    * every ef via [[LocalGraphSearcher.searchMulti]]. */
-  private def searchShardsMulti[V: scala.reflect.ClassTag](
-      base: org.apache.spark.rdd.RDD[(Int, (Long, V))],
-      edges: org.apache.spark.rdd.RDD[(Int, (Int, Long, Long))],
-      entries: org.apache.spark.rdd.RDD[(Int, (Long, Int))],
-      queries: org.apache.spark.rdd.RDD[(Int, (Long, Seq[Double]))],
+  /** [[searchShards]] over the index's raw vectors, or over its code table
+    * when a codec is given. */
+  private def searchIndexed(
+      shards: Shards,
+      queries: RDD[(Int, (Long, Seq[Double]))],
+      qidCol: String,
       k: Int,
-      efs: Array[Int],
+      efs: Seq[Int],
+      compression: Option[VectorCompression]
+  ): DataFrame = {
+    val spark = shards.vectors.sparkSession
+    import spark.implicits._
+    val params = shards.params
+    compression match {
+      case Some(c) =>
+        val codeRdd = shards.codes.getOrElse(shardCodes(shards.vectors, c))
+          .select(col("shard"), col("id"), col("code"))
+          .as[(Int, Long, Seq[Short])]
+          .rdd.map { case (s, id, cd) => (s, (id, cd)) }
+        searchShards[Seq[Short]](
+          shards, codeRdd, queries, qidCol, k, efs,
+          (codes, height) => LocalGraphSearcher.compressed(
+            codes.map(_.toArray), height, params, c))
+      case None =>
+        val vecRdd = shards.vectors
+          .select(col("shard"), col("id"), col("vec"))
+          .as[(Int, Long, Seq[Double])]
+          .rdd.map { case (s, id, v) => (s, (id, v)) }
+        searchShards[Seq[Double]](
+          shards, vecRdd, queries, qidCol, k, efs,
+          (vecs, height) => LocalGraphSearcher.raw(
+            vecs.map(_.toArray), height, params))
+    }
+  }
+
+  /** The shard-cogroup search kernel, generic over the per-node payload
+    * (raw vectors, codes, or vectors with an allow flag): co-locate base
+    * table / edges / entry / the (shard, query) pairs per shard, replay
+    * the shard's edge table into a local searcher (no random level draws,
+    * so exactly the built graph), run every query of the shard's slice
+    * through it at every ef, then merge globally with a bounded-heap top-k
+    * per (ef, query) — partial agg per shard output partition, O(|Q|·k)
+    * shuffle per ef. Returns (ef, qidCol, neighbor_id, dist, rnk).
+    */
+  private def searchShards[V: ClassTag](
+      shards: Shards,
+      base: RDD[(Int, (Long, V))],
+      queries: RDD[(Int, (Long, Seq[Double]))],
+      qidCol: String,
+      k: Int,
+      efs: Seq[Int],
       mkSearcher: (Array[V], Int) => LocalGraphSearcher
-  ): org.apache.spark.rdd.RDD[(Int, Long, Long, Double)] =
+  ): DataFrame = {
+    val spark = shards.vectors.sparkSession
+    import spark.implicits._
+    val edges = shards.edges
+      .as[(Int, Int, Long, Long)]
+      .rdd.map { case (s, l, a, b) => (s, (l, a, b)) }
+    val entries = shards.entries
+      .as[(Int, Long, Int)]
+      .rdd.map { case (s, ep, h) => (s, (ep, h)) }
+    val efArr = efs.toArray
     base.cogroup(edges, entries, queries)
       .flatMap { case (_, (nodes, es, ens, qs)) =>
         if (nodes.isEmpty || ens.isEmpty || qs.isEmpty) Iterator.empty
@@ -701,21 +598,41 @@ object DistributedHnsw {
           }
           searcher.setEntry(localOf(ep))
           qs.iterator.flatMap { case (qid, qv) =>
-            searcher.searchMulti(qv.toArray, k, efs).map { case (e, d, local) =>
+            // the distance kernels loop over the query's length: a shorter
+            // query would silently score a prefix of every vector
+            require(qv.length == searcher.width,
+              s"query $qid has width ${qv.length}, the indexed vectors " +
+                s"have width ${searcher.width}")
+            searcher.search(qv.toArray, k, efArr).map { case (e, d, local) =>
               (e, qid, ids(local), d)
             }
           }
         }
       }
+      .toDF("ef", "query_id", "neighbor_id", "dist")
+      .groupBy(col("ef"), col("query_id"))
+      .agg(topK(col("dist"), col("neighbor_id"), k).as("tk"))
+      .select(col("ef"), col("query_id"),
+        posexplode(col("tk")).as(Seq("pos", "e")))
+      .select(
+        col("ef").cast("long").as("ef"),
+        col("query_id").as(qidCol),
+        col("e.id").as("neighbor_id"),
+        col("e.dist").as("dist"),
+        (col("pos") + 1).cast("int").as("rnk")
+      )
+  }
 }
 
 /** Read-only shard searcher: the [[HnswIndex]] search path over a replayed
   * edge table (adjacency arrays, no build machinery). Distance evaluation
   * is injected — raw L2² over vectors, or asymmetric query-to-code over a
-  * persisted code table (nothing encodes at search time).
+  * persisted code table (nothing encodes at search time). `width` is the
+  * indexed vectors' dimension, the only query width the distance accepts.
   */
 final class LocalGraphSearcher private (
     n: Int,
+    val width: Int,
     height: Int,
     params: HnswParams,
     distQ: (Array[Double], Int) => Double,
@@ -732,67 +649,33 @@ final class LocalGraphSearcher private (
 
   def setEntry(e: Int): Unit = entry = e
 
-  private def searchLayer(
-      q: Array[Double],
-      ep: Int,
-      ef: Int,
-      layer: Int
-  ): IndexedSeq[(Double, Int)] =
-    HnswTraversal.searchLayer(
-      distQ(q, _), adj(layer).getOrElse(_, Iterable.empty), ep, ef
-    )
-
-  def search(
-      q: Array[Double],
-      topK: Int,
-      efSearch: Int = -1
-  ): IndexedSeq[(Double, Int)] = {
-    if (n == 0) return IndexedSeq.empty
-    val ef = math.max(if (efSearch > 0) efSearch else params.efSearch, topK)
-    var ep = entry
-    var lc = height - 1
-    // upper layers route only (their result never enters W) — descent is
-    // unfiltered even in a filtered search, the hnswlib semantics
-    while (lc > 0) {
-      ep = searchLayer(q, ep, 1, lc).head._2
-      lc -= 1
-    }
-    if (allow == null) searchLayer(q, ep, ef, 0).take(topK)
-    else
-      HnswTraversal.searchLayerFiltered(
-        distQ(q, _), adj(0).getOrElse(_, Iterable.empty), ep, ef, allow
-      ).take(topK)
-  }
-
-  /** Multi-ef search sharing the ef-INDEPENDENT work: the upper-layer
-    * greedy descent routes with ef=1 regardless of efSearch, so an
-    * operating curve that re-descends per setting pays |layers| greedy
-    * walks × |efs| for identical routing. One descent, then one layer-0
-    * beam per ef — each (ef, result) is bit-equal to [[search]] at that
-    * ef (spec-gated). Returns (ef, dist, localId) triples.
+  /** k-NN search at every ef of `efs` (ref: py/hnsw.py:394-410), sharing
+    * the ef-INDEPENDENT work: the upper-layer greedy descent routes with
+    * ef=1 regardless of efSearch, so it runs once, then one layer-0 beam
+    * per ef (ef ≤ 0 means the index default, raised to `topK`). Upper
+    * layers route only — their result never enters W — so the descent is
+    * unfiltered even in a filtered search, the hnswlib semantics. Returns
+    * (ef, dist, localId) triples, ascending (dist, id) within each ef.
     */
-  def searchMulti(
+  def search(
       q: Array[Double],
       topK: Int,
       efs: Array[Int]
   ): Iterator[(Int, Double, Int)] = {
     if (n == 0) return Iterator.empty
+    val dist = distQ(q, _: Int)
+    def layer(l: Int): Int => Iterable[Int] = adj(l).getOrElse(_, Iterable.empty)
     var ep = entry
     var lc = height - 1
     while (lc > 0) {
-      ep = searchLayer(q, ep, 1, lc).head._2
+      ep = HnswTraversal.searchLayer(dist, layer(lc), ep, 1).head._2
       lc -= 1
     }
     val ep0 = ep
     efs.iterator.flatMap { e =>
       val ef = math.max(if (e > 0) e else params.efSearch, topK)
-      val res =
-        if (allow == null) searchLayer(q, ep0, ef, 0).take(topK)
-        else
-          HnswTraversal.searchLayerFiltered(
-            distQ(q, _), adj(0).getOrElse(_, Iterable.empty), ep0, ef, allow
-          ).take(topK)
-      res.iterator.map { case (d, local) => (e, d, local) }
+      HnswTraversal.searchLayer(dist, layer(0), ep0, ef, allow)
+        .iterator.take(topK).map { case (d, local) => (e, d, local) }
     }
   }
 }
@@ -806,7 +689,7 @@ object LocalGraphSearcher {
       params: HnswParams
   ): LocalGraphSearcher =
     new LocalGraphSearcher(
-      vecs.length, height, params,
+      vecs.length, vecs.headOption.fold(0)(_.length), height, params,
       (q, id) => KMeansLocal.l2Sq(q, vecs(id)))
 
   /** Attribute-filtered: exact L2² plus a per-node admission flag. The
@@ -819,7 +702,7 @@ object LocalGraphSearcher {
       params: HnswParams
   ): LocalGraphSearcher =
     new LocalGraphSearcher(
-      vecs.length, height, params,
+      vecs.length, vecs.headOption.fold(0)(_.length), height, params,
       (q, id) => KMeansLocal.l2Sq(q, vecs(id)),
       allow = flags(_))
 
@@ -834,6 +717,6 @@ object LocalGraphSearcher {
       c: VectorCompression
   ): LocalGraphSearcher =
     new LocalGraphSearcher(
-      codes.length, height, params,
-      (q, id) => c.queryDistance(q, codes(id)))
+      codes.length, codes.headOption.fold(0)(c.decode(_).length), height,
+      params, (q, id) => c.queryDistance(q, codes(id)))
 }

@@ -53,11 +53,22 @@ final case class HnswParams(
 private[operators] object HnswTraversal {
   import scala.collection.mutable
 
+  /** One layer's beam. `allow` (null = every id) is the attribute filter
+    * of the hnswlib filter-function semantics: the walk routes THROUGH
+    * every node — disallowed nodes still expand, otherwise a selective
+    * predicate disconnects the graph — but only allowed nodes enter `W`.
+    * With every id allowed this is EXACTLY the reference loop: while `W`
+    * is under `ef` nothing has been evicted, so the popped candidate is
+    * always ≤ the furthest of `W` and the `work.size >= ef` guard on the
+    * break can never fire earlier than the reference's — spec-gated by an
+    * exact-equality test and by the build's edge fingerprints.
+    */
   def searchLayer(
       dist: Int => Double,
       neighbors: Int => Iterable[Int],
       ep: Int,
-      ef: Int
+      ef: Int,
+      allow: Int => Boolean = null
   ): IndexedSeq[(Double, Int)] = {
     val visited = mutable.HashSet(ep)
     val minOrd: Ordering[(Double, Int)] =
@@ -67,63 +78,19 @@ private[operators] object HnswTraversal {
     val work = mutable.PriorityQueue.empty[(Double, Int)](maxOrd) // furthest-first
     val d0 = dist(ep)
     cand.enqueue((d0, ep))
-    work.enqueue((d0, ep))
+    if (allow == null || allow(ep)) work.enqueue((d0, ep))
     var done = false
     while (cand.nonEmpty && !done) {
       val (dc, c) = cand.dequeue()
-      if (dc > work.head._1) done = true // ref: py/hnsw.py:260-261
+      if (work.size >= ef && dc > work.head._1) done = true // ref: py/hnsw.py:260-261
       else {
         for (e <- neighbors(c) if visited.add(e)) {
           val de = dist(e)
-          if (de < work.head._1 || work.size < ef) { // ref: py/hnsw.py:271
+          if (work.size < ef || de < work.head._1) { // ref: py/hnsw.py:271
             cand.enqueue((de, e))
-            work.enqueue((de, e))
-            if (work.size > ef) work.dequeue() // ref: py/hnsw.py:275-276
-          }
-        }
-      }
-    }
-    work.toIndexedSeq.sortBy(x => (x._1, x._2))
-  }
-
-  /** Attribute-filtered layer traversal (the hnswlib filter-function
-    * semantics): the walk routes THROUGH every node — disallowed nodes
-    * still expand, otherwise a selective predicate disconnects the
-    * graph — but only allowed nodes enter the working set `W`. With
-    * `allow` constantly true this reduces EXACTLY to [[searchLayer]]:
-    * while `W` is under `ef` nothing has been evicted, so the popped
-    * candidate is always ≤ the furthest of `W` and the extra
-    * `work.size >= ef` guard on the break can never fire earlier than
-    * the reference's — spec-gated by an exact-equality test.
-    */
-  def searchLayerFiltered(
-      dist: Int => Double,
-      neighbors: Int => Iterable[Int],
-      ep: Int,
-      ef: Int,
-      allow: Int => Boolean
-  ): IndexedSeq[(Double, Int)] = {
-    val visited = mutable.HashSet(ep)
-    val minOrd: Ordering[(Double, Int)] =
-      Ordering.by[(Double, Int), (Double, Int)](x => (-x._1, -x._2))
-    val maxOrd: Ordering[(Double, Int)] = Ordering.by(x => (x._1, -x._2))
-    val cand = mutable.PriorityQueue.empty[(Double, Int)](minOrd)
-    val work = mutable.PriorityQueue.empty[(Double, Int)](maxOrd)
-    val d0 = dist(ep)
-    cand.enqueue((d0, ep))
-    if (allow(ep)) work.enqueue((d0, ep))
-    var done = false
-    while (cand.nonEmpty && !done) {
-      val (dc, c) = cand.dequeue()
-      if (work.size >= ef && dc > work.head._1) done = true
-      else {
-        for (e <- neighbors(c) if visited.add(e)) {
-          val de = dist(e)
-          if (work.size < ef || de < work.head._1) {
-            cand.enqueue((de, e))
-            if (allow(e)) {
+            if (allow == null || allow(e)) {
               work.enqueue((de, e))
-              if (work.size > ef) work.dequeue()
+              if (work.size > ef) work.dequeue() // ref: py/hnsw.py:275-276
             }
           }
         }

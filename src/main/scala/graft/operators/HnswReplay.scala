@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -126,9 +129,6 @@ object HnswReplay {
       .toDF("layer", "src", "dst")
   }
 
-  /** Deterministic layered search replay. Returns
-    * (query_id, neighbor_id, dist, rnk) with rnk ≤ k per query.
-    */
   /** The deterministic layered index as an immutable artifact:
     * (id, vec, level) plus the idealized per-layer edge table, both
     * localCheckpoint-materialized — rebuildable bit-identically from
@@ -226,88 +226,28 @@ object HnswReplay {
     LayeredIndex(base, idealEdges(base, m, m0).localCheckpoint())
   }
 
+  /** Deterministic layered search replay over a prebuilt [[LayeredIndex]]:
+    * [[replayEfCurve]] at one ef. Returns (query_id, neighbor_id, dist,
+    * rnk) with rnk ≤ k per query.
+    */
   def searchReplay(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
+      idx: LayeredIndex,
       queries: DataFrame,
       qidCol: String,
       qvecCol: String,
       k: Int,
-      m: Int = 8,
-      m0: Int = 16,
-      ef: Int = 16,
-      greedyRounds: Int = 2,
-      beamRounds: Int = 4,
-      seed: Long = 42,
-      mLevels: Int = 16
+      ef: Int,
+      greedyRounds: Int,
+      beamRounds: Int
   ): DataFrame =
-    searchReplay(
-      buildLayered(emb, idCol, vecCol, m, m0, seed, mLevels),
-      queries, qidCol, qvecCol, k, ef, greedyRounds, beamRounds)
-
-  /** Search over a prebuilt [[LayeredIndex]] — ONE narrow
-    * mapPartitions pass over the queries against the broadcast index
-    * (bit-identical to [[searchReplayRelational]], spec-pinned).
-    */
-  def searchReplay(
-      idx: LayeredIndex,
-      queries: DataFrame,
-      qidCol: String,
-      qvecCol: String,
-      k: Int,
-      ef: Int,
-      greedyRounds: Int,
-      beamRounds: Int
-  ): DataFrame = {
-    require(k <= ef, s"k=$k must be <= ef=$ef")
-    // the local walks return the greedy entry at beamRounds = 0 while the
-    // relational twins NPE — the equality contract only covers >= 1, so
-    // both spellings reject the unsupported configuration identically
-    require(beamRounds >= 1, s"beamRounds must be >= 1, got $beamRounds")
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val bc = idx.local
-    queries
-      .select(col(qidCol).cast("long"), col(qvecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val li = bc.value
-        it.flatMap { case (qid, qv) =>
-          val last = beamLocal(
-            li, qv, greedyLocal(li, qv, greedyRounds), ef, beamRounds)
-          val n = math.min(k, last.length)
-          (0 until n).iterator.map(i =>
-            (qid, li.ids(last(i)._1), last(i)._2, (i + 1).toLong))
-        }
-      }
-      .toDF("query_id", "neighbor_id", "dist", "rnk")
-  }
-
-  /** The original iterative-join spelling, kept as the reference twin
-    * for the local-walk equality spec (HnswReplaySpec pins
-    * local == relational bit-for-bit on the test corpus).
-    */
-  private[graft] def searchReplayRelational(
-      idx: LayeredIndex,
-      queries: DataFrame,
-      qidCol: String,
-      qvecCol: String,
-      k: Int,
-      ef: Int,
-      greedyRounds: Int,
-      beamRounds: Int
-  ): DataFrame = {
-    val qs = queries
-      .select(col(qidCol).cast("long").as("qid"), col(qvecCol).as("qv"))
-    val cur = greedyDescent(idx, qs, greedyRounds)
-    layer0Beam(idx, qs, cur, k, ef, beamRounds)
-  }
+    replayEfCurve(idx, queries, qidCol, qvecCol, k, Seq(ef), greedyRounds,
+      beamRounds).drop("ef")
 
   /** Recall-vs-ef operating curve over the SAME artifact: the greedy
     * descent is ef-independent, so it runs ONCE per query and each ef
-    * setting re-runs only the layer-0 beam — all inside the same local
-    * walk. Returns one (ef, query_id, neighbor_id, dist, rnk) block per
+    * setting re-runs only the layer-0 beam — all inside ONE narrow
+    * mapPartitions pass over the queries against the broadcast index.
+    * Returns one (query_id, neighbor_id, dist, rnk, ef) block per
     * setting — the first ef curve in the suite whose index AND searches
     * are fully hash-checkable.
     */
@@ -321,51 +261,20 @@ object HnswReplay {
       greedyRounds: Int,
       beamRounds: Int
   ): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val bc = idx.local
-    queries
-      .select(col(qidCol).cast("long"), col(qvecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val li = bc.value
-        it.flatMap { case (qid, qv) =>
-          val start = greedyLocal(li, qv, greedyRounds)
-          efs.iterator.flatMap { ef =>
-            val last = beamLocal(li, qv, start, ef, beamRounds)
-            val n = math.min(k, last.length)
-            (0 until n).iterator.map(i =>
-              (qid, li.ids(last(i)._1), last(i)._2, (i + 1).toLong, ef.toLong))
+    require(efs.distinct.length == efs.length,
+      s"replayEfCurve: duplicate efs in ${efs.mkString("[", ", ", "]")}")
+    efs.foreach(requireWalk(k, _, beamRounds))
+    perQuery(idx, queries, qidCol, qvecCol) { (li, qid, qv) =>
+      val dist = l2Of(li, qv)
+      val start = greedyLocal(li, dist, greedyRounds)
+      efs.iterator.flatMap { ef =>
+        beamLocal(li, dist, start, ef, beamRounds)._1
+          .iterator.take(k).zipWithIndex.map { case ((i, d), pos) =>
+            (qid, li.ids(i), d, (pos + 1).toLong, ef.toLong)
           }
-        }
       }
-      .toDF("query_id", "neighbor_id", "dist", "rnk", "ef")
+    }.toDF("query_id", "neighbor_id", "dist", "rnk", "ef")
   }
-
-  /** Reference twin of [[replayEfCurve]] (see
-    * [[searchReplayRelational]]). */
-  private[graft] def replayEfCurveRelational(
-      idx: LayeredIndex,
-      queries: DataFrame,
-      qidCol: String,
-      qvecCol: String,
-      k: Int,
-      efs: Seq[Int],
-      greedyRounds: Int,
-      beamRounds: Int
-  ): DataFrame = {
-    val qs = queries
-      .select(col(qidCol).cast("long").as("qid"), col(qvecCol).as("qv"))
-    val cur = greedyDescent(idx, qs, greedyRounds).localCheckpoint()
-    efs
-      .map(ef =>
-        layer0Beam(idx, qs, cur, k, ef, beamRounds)
-          .withColumn("ef", lit(ef.toLong)))
-      .reduce(_.unionByName(_))
-  }
-
-  private def layerEdges(idx: LayeredIndex, l: Int): DataFrame =
-    idx.edges.filter(col("layer") === l).select(col("src"), col("dst"))
 
   /** Attribute-filtered search replay — the hnswlib filter contract
     * ([[DistributedHnsw.searchFiltered]] / LocalGraphSearcher.rawFiltered:
@@ -404,11 +313,7 @@ object HnswReplay {
       beamRounds: Int,
       negate: Boolean = false
   ): DataFrame = {
-    require(k <= ef, s"k=$k must be <= ef=$ef")
-    // the local walks return the greedy entry at beamRounds = 0 while the
-    // relational twins NPE — the equality contract only covers >= 1, so
-    // both spellings reject the unsupported configuration identically
-    require(beamRounds >= 1, s"beamRounds must be >= 1, got $beamRounds")
+    requireWalk(k, ef, beamRounds)
     val qs = queries
       .select(col(qidCol).cast("long").as("qid"), col(qvecCol).as("qv"))
     val visited = visitedLayer0(idx, qs, ef, greedyRounds, beamRounds)
@@ -444,69 +349,15 @@ object HnswReplay {
       ef: Int,
       greedyRounds: Int,
       beamRounds: Int
-  ): DataFrame = {
-    val spark = qs.sparkSession
-    import spark.implicits._
-    val bc = idx.local
-    qs
-      .select(col("qid").cast("long"), col("qv").cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val li = bc.value
-        it.flatMap { case (qid, qv) =>
-          visitedLocal(li, qv, greedyLocal(li, qv, greedyRounds), ef,
-            beamRounds)
-            .iterator.map { case (i, d) => (qid, li.ids(i), d) }
-        }
+  ): DataFrame =
+    perQuery(idx, qs, "qid", "qv") { (li, qid, qv) =>
+      val dist = l2Of(li, qv)
+      val seen = beamLocal(
+        li, dist, greedyLocal(li, dist, greedyRounds), ef, beamRounds)._2
+      seen.entrySet.iterator.asScala.map { e =>
+        (qid, li.ids(e.getKey), e.getValue.doubleValue)
       }
-      .toDF("qid", "cid", "d")
-  }
-
-  /** Reference twin of [[visitedLayer0]] (see
-    * [[searchReplayRelational]]). */
-  private[graft] def visitedLayer0Relational(
-      idx: LayeredIndex,
-      qs: DataFrame, // (qid, qv)
-      ef: Int,
-      greedyRounds: Int,
-      beamRounds: Int
-  ): DataFrame = {
-    import graft.functions.VectorExpressions.l2SqFast
-    val cur = greedyDescent(idx, qs, greedyRounds)
-    val edges0 = layerEdges(idx, 0)
-    val vecsOf = idx.base.select(col("id").as("cid"), col("vec"))
-    var beam = cur.select(col("qid"), col("cur").as("cid"))
-    var visited: DataFrame = null
-    for (_ <- 1 to beamRounds) {
-      val expanded = beam
-        .join(edges0, col("cid") === col("src"), "left")
-        .select(col("qid"),
-          explode(array(col("cid"), col("dst"))).as("cid2"))
-        .filter(col("cid2").isNotNull)
-        .groupBy(col("qid"))
-        .agg(collect_set(col("cid2")).as("cs"))
-        .select(col("qid"), explode(col("cs")).as("cid"))
-      // materialized per round: BOTH the next beam and the cumulative
-      // visited union read this frame — without the checkpoint the
-      // union's branches each re-execute the full prior-round lineage
-      // (no cross-branch CSE), an O(rounds²) recompute
-      val scored = expanded
-        .join(qs, "qid")
-        .join(vecsOf, "cid")
-        .withColumn("d", l2SqFast(col("qv"), col("vec")))
-        .select(col("qid"), col("cid"), col("d"))
-        .localCheckpoint()
-      visited = if (visited == null) scored else visited.unionByName(scored)
-      beam = scored
-        .withColumn("rn",
-          row_number().over(
-            Window.partitionBy(col("qid")).orderBy(col("d"), col("cid"))))
-        .filter(col("rn") <= ef)
-        .select(col("qid"), col("cid"))
-    }
-    // d is a pure function of (qid, cid): duplicates are identical rows
-    visited.dropDuplicates("qid", "cid")
-  }
+    }.toDF("qid", "cid", "d")
 
   /** Tombstone-excluding search replay — deleted ids stay routable
     * waypoints, never results ([[DistributedHnsw.searchWithTombstones]]).
@@ -554,257 +405,36 @@ object HnswReplay {
       greedyRounds: Int,
       beamRounds: Int
   ): DataFrame = {
-    require(k <= ef, s"k=$k must be <= ef=$ef")
-    // the local walks return the greedy entry at beamRounds = 0 while the
-    // relational twins NPE — the equality contract only covers >= 1, so
-    // both spellings reject the unsupported configuration identically
-    require(beamRounds >= 1, s"beamRounds must be >= 1, got $beamRounds")
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val bc = idx.local
+    requireWalk(k, ef, beamRounds)
     val li0 = idx.local.value // driver-side: map cid → node index
     val codesByIdx = new Array[Array[Short]](li0.ids.length)
     codes.select(col("cid").cast("long"), col("code")).collect().foreach { r =>
       val i = java.util.Arrays.binarySearch(li0.ids, r.getLong(0))
       if (i >= 0) codesByIdx(i) = r.getSeq[Short](1).toArray
     }
-    // full coverage is part of the contract: on a PARTIAL code table the
-    // local walk keeps routing through codeless nodes (scored +Inf) while
-    // the relational twin's inner join drops them — requiring coverage
-    // here keeps the spec-pinned equality meaningful instead of silently
+    // full coverage is part of the contract: the relational spelling's
+    // inner join against the code table drops a codeless node from the
+    // walk, which a per-node scorer cannot express — requiring coverage
+    // keeps the spec-pinned equality meaningful instead of silently
     // choosing one semantics
     val missingCode = codesByIdx.indexWhere(_ == null)
     require(missingCode < 0,
       s"searchReplayAdc: node id=${li0.ids(math.max(missingCode, 0))} has " +
         "no PQ code — the code table must cover every index id")
-    val codesBc = spark.sparkContext.broadcast(codesByIdx)
+    val codesBc = queries.sparkSession.sparkContext.broadcast(codesByIdx)
     val (flatCb, m, kCb, dp) = (model.flatCodebook, model.m, model.k, model.dp)
-    queries
-      .select(col(qidCol).cast("long"), col(qvecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val li = bc.value
-        val cds = codesBc.value
-        it.flatMap { case (qid, qv) =>
-          val lut = lutLocal(flatCb, m, kCb, dp, qv)
-          // a node without a code never scores (the relational spelling's
-          // inner join against the code table drops it)
-          def adc(i: Int): Double =
-            if (cds(i) == null) Double.PositiveInfinity
-            else adcLocal(lut, kCb, cds(i))
-          // greedy descent scored by ADC
-          var cur = li.entryIdx
-          var l = MaxLevel
-          while (l >= 1) {
-            var r = 0
-            while (r < greedyRounds) {
-              var bestI = cur
-              var bestD = adc(cur)
-              val nbs = li.adj(l)(cur)
-              var j = 0
-              while (j < nbs.length) {
-                val nb = nbs(j)
-                val dd = adc(nb)
-                if (dd < bestD || (dd == bestD && li.ids(nb) < li.ids(bestI))) {
-                  bestI = nb; bestD = dd
-                }
-                j += 1
-              }
-              cur = bestI
-              r += 1
-            }
-            l -= 1
-          }
-          // layer-0 beam scored by ADC
-          var beam = Array(cur)
-          var r = 0
-          while (r < beamRounds) {
-            val cand = expandLocal(li, beam).filter(i => cds(i) != null)
-            val scored = rankLocal(li, cand, adc, ef)
-            beam = scored.map(_._1)
-            r += 1
-          }
-          // exact rerank of the ef survivors — the only raw-vector read
-          val reranked = rankLocal(
-            li, beam, i => l2Local(li.flat, i * li.d, li.d, qv), k)
-          reranked.iterator.zipWithIndex.map { case ((i, d), pos) =>
-            (qid, li.ids(i), d, (pos + 1).toLong)
-          }
+    perQuery(idx, queries, qidCol, qvecCol) { (li, qid, qv) =>
+      val lut = lutLocal(flatCb, m, kCb, dp, qv)
+      val cds = codesBc.value
+      val adc = (i: Int) => adcLocal(lut, kCb, cds(i))
+      val beam = beamLocal(
+        li, adc, greedyLocal(li, adc, greedyRounds), ef, beamRounds)._1
+      // exact rerank of the ef survivors — the only raw-vector read
+      rankLocal(li, beam.map(_._1), l2Of(li, qv), k)
+        .iterator.zipWithIndex.map { case ((i, d), pos) =>
+          (qid, li.ids(i), d, (pos + 1).toLong)
         }
-      }
-      .toDF("query_id", "neighbor_id", "dist", "rnk")
-  }
-
-  /** Reference twin of [[searchReplayAdc]] (see
-    * [[searchReplayRelational]]). */
-  private[graft] def searchReplayAdcRelational(
-      idx: LayeredIndex,
-      codes: DataFrame, // (cid, code) — PQ codes of every indexed node
-      model: PQModel,
-      queries: DataFrame,
-      qidCol: String,
-      qvecCol: String,
-      k: Int,
-      ef: Int,
-      greedyRounds: Int,
-      beamRounds: Int
-  ): DataFrame = {
-    import graft.functions.VectorExpressions.l2SqFast
-    require(k <= ef, s"k=$k must be <= ef=$ef")
-    // the local walks return the greedy entry at beamRounds = 0 while the
-    // relational twins NPE — the equality contract only covers >= 1, so
-    // both spellings reject the unsupported configuration identically
-    require(beamRounds >= 1, s"beamRounds must be >= 1, got $beamRounds")
-    val qs = queries
-      .select(col(qidCol).cast("long").as("qid"), col(qvecCol).as("qv"))
-      .withColumn("lut", ProductQuantizer.lutCol(model, col("qv")))
-      .localCheckpoint() // |Q| rows × M·K doubles, scored every round
-    val cds = codes.select(col("cid").cast("long").as("cid"), col("code"))
-    def adcScore(cand: DataFrame): DataFrame = // (qid, cid) -> + d
-      cand
-        .join(qs.select(col("qid"), col("lut")), "qid")
-        .join(cds, "cid")
-        .withColumn("d",
-          ProductQuantizer.adcFromLutCol(model, col("lut"), col("code")))
-        .select(col("qid"), col("cid"), col("d"))
-    val entry = idx.base
-      .orderBy(col("level").desc, col("id"))
-      .limit(1)
-      .select(col("id").as("cur"))
-    var cur = qs.select(col("qid")).crossJoin(broadcast(entry))
-    for (l <- MaxLevel to 1 by -1; _ <- 1 to greedyRounds) {
-      val cand = cur
-        .join(layerEdges(idx, l), col("cur") === col("src"), "left")
-        .select(col("qid"), explode(array(col("cur"), col("dst"))).as("cid"))
-        .filter(col("cid").isNotNull)
-      cur = adcScore(cand)
-        .groupBy(col("qid"))
-        .agg(min(struct(col("d"), col("cid"))).as("best"))
-        .select(col("qid"), col("best").getField("cid").as("cur"))
-    }
-    val edges0 = layerEdges(idx, 0)
-    var beam = cur.select(col("qid"), col("cur").as("cid"))
-    for (_ <- 1 to beamRounds) {
-      val expanded = beam
-        .join(edges0, col("cid") === col("src"), "left")
-        .select(col("qid"), explode(array(col("cid"), col("dst"))).as("cid2"))
-        .filter(col("cid2").isNotNull)
-        .groupBy(col("qid"))
-        .agg(collect_set(col("cid2")).as("cs"))
-        .select(col("qid"), explode(col("cs")).as("cid"))
-      beam = adcScore(expanded)
-        .withColumn("rn",
-          row_number().over(
-            Window.partitionBy(col("qid")).orderBy(col("d"), col("cid"))))
-        .filter(col("rn") <= ef)
-        .select(col("qid"), col("cid"))
-    }
-    // exact rerank: the only raw-vector read, |Q|·ef rows
-    beam
-      .join(qs.select(col("qid"), col("qv")), "qid")
-      .join(idx.base.select(col("id").as("cid"), col("vec")), "cid")
-      .withColumn("d", l2SqFast(col("qv"), col("vec")))
-      .withColumn("rnk",
-        row_number().over(
-          Window.partitionBy(col("qid")).orderBy(col("d"), col("cid"))))
-      .filter(col("rnk") <= k)
-      .select(
-        col("qid").as("query_id"),
-        col("cid").as("neighbor_id"),
-        col("d").as("dist"),
-        col("rnk").cast("long").as("rnk"))
-  }
-
-  /** Greedy descent, MaxLevel..1: per round the next position is the
-    * (dist, id)-argmin over {cur} ∪ neighbors(cur) at that layer.
-    * Returns (qid, cur).
-    */
-  private def greedyDescent(
-      idx: LayeredIndex,
-      qs: DataFrame, // (qid, qv)
-      greedyRounds: Int
-  ): DataFrame = {
-    import graft.functions.VectorExpressions.l2SqFast
-    val entry = idx.base
-      .orderBy(col("level").desc, col("id"))
-      .limit(1)
-      .select(col("id").as("cur"))
-    val vecsOf = idx.base.select(col("id").as("cid"), col("vec"))
-    var cur = qs.select(col("qid")).crossJoin(broadcast(entry))
-    for (l <- MaxLevel to 1 by -1; _ <- 1 to greedyRounds) {
-      // no dedup shuffle: the (d, cid)-argmin is duplicate-insensitive
-      val cand = cur
-        .join(layerEdges(idx, l), col("cur") === col("src"), "left")
-        .select(col("qid"),
-          explode(array(col("cur"), col("dst"))).as("cid"))
-        .filter(col("cid").isNotNull)
-      cur = cand
-        .join(qs, "qid")
-        .join(vecsOf, "cid")
-        .withColumn("d", l2SqFast(col("qv"), col("vec")))
-        .groupBy(col("qid"))
-        .agg(min(struct(col("d"), col("cid"))).as("best"))
-        .select(col("qid"), col("best").getField("cid").as("cur"))
-    }
-    cur
-  }
-
-  /** Layer-0 synchronized beam of width ef for beamRounds rounds; the
-    * final top-k is the LAST round's own (d, cid) ranking cut at k —
-    * re-ranking the ef survivors would reproduce rn exactly, so the
-    * last round is fused instead of re-joined. Returns
-    * (query_id, neighbor_id, dist, rnk).
-    */
-  private def layer0Beam(
-      idx: LayeredIndex,
-      qs: DataFrame, // (qid, qv)
-      cur: DataFrame, // (qid, cur) from greedyDescent
-      k: Int,
-      ef: Int,
-      beamRounds: Int
-  ): DataFrame = {
-    import graft.functions.VectorExpressions.l2SqFast
-    require(k <= ef, s"k=$k must be <= ef=$ef")
-    // the local walks return the greedy entry at beamRounds = 0 while the
-    // relational twins NPE — the equality contract only covers >= 1, so
-    // both spellings reject the unsupported configuration identically
-    require(beamRounds >= 1, s"beamRounds must be >= 1, got $beamRounds")
-    val edges0 = layerEdges(idx, 0)
-    val vecsOf = idx.base.select(col("id").as("cid"), col("vec"))
-    var beam = cur.select(col("qid"), col("cur").as("cid"))
-    var lastScored: DataFrame = null
-    for (_ <- 1 to beamRounds) {
-      // dedup via collect_set on the SAME qid key every stage uses: the
-      // frontier is hash-partitioned by qid once at the top of the
-      // search, and broadcast edge/query/vector joins preserve it, so
-      // neither this agg nor the ranking window below inserts an
-      // exchange — the whole multi-round search runs off ONE shuffle
-      val expanded = beam
-        .join(edges0, col("cid") === col("src"), "left")
-        .select(col("qid"),
-          explode(array(col("cid"), col("dst"))).as("cid2"))
-        .filter(col("cid2").isNotNull)
-        .groupBy(col("qid"))
-        .agg(collect_set(col("cid2")).as("cs"))
-        .select(col("qid"), explode(col("cs")).as("cid"))
-      lastScored = expanded
-        .join(qs, "qid")
-        .join(vecsOf, "cid")
-        .withColumn("d", l2SqFast(col("qv"), col("vec")))
-        .withColumn("rn",
-          row_number().over(
-            Window.partitionBy(col("qid")).orderBy(col("d"), col("cid"))))
-        .filter(col("rn") <= ef)
-      beam = lastScored.select(col("qid"), col("cid"))
-    }
-
-    lastScored
-      .filter(col("rn") <= k)
-      .select(
-        col("qid").as("query_id"),
-        col("cid").as("neighbor_id"),
-        col("d").as("dist"),
-        col("rn").cast("long").as("rnk"))
+    }.toDF("query_id", "neighbor_id", "dist", "rnk")
   }
 
   // ---- local walk kernels -------------------------------------------------
@@ -812,7 +442,38 @@ object HnswReplay {
   // the same ascending-index double sum as L2SqExpr / PQLutExpr /
   // PQAdcLutExpr, argmin and ranking the same (d, id) lexicographic order
   // as min(struct(d, cid)) / row_number over (d, cid). Every public search
-  // above is spec-pinned equal to its *Relational twin.
+  // above is spec-pinned equal to its twin in the test-side
+  // HnswReplayRelational object.
+
+  /** The walk contract of every search: at beamRounds = 0 the local walks
+    * have no layer-0 round to rank while the relational twins NPE — the
+    * equality contract only covers >= 1, so both spellings reject the
+    * unsupported configuration identically.
+    */
+  private def requireWalk(k: Int, ef: Int, beamRounds: Int): Unit = {
+    require(k <= ef, s"k=$k must be <= ef=$ef")
+    require(beamRounds >= 1, s"beamRounds must be >= 1, got $beamRounds")
+  }
+
+  /** `walk` over every query in ONE narrow mapPartitions pass against the
+    * broadcast index. */
+  private def perQuery[T <: Product: TypeTag](
+      idx: LayeredIndex,
+      queries: DataFrame,
+      qidCol: String,
+      qvecCol: String
+  )(walk: (ReplayLocalIndex, Long, Array[Double]) => Iterator[T]): Dataset[T] = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val bc = idx.local
+    queries
+      .select(col(qidCol).cast("long"), col(qvecCol).cast("array<double>"))
+      .as[(Long, Array[Double])]
+      .mapPartitions { it =>
+        val li = bc.value
+        it.flatMap { case (qid, qv) => walk(li, qid, qv) }
+      }
+  }
 
   /** Same ascending-index sum as [[graft.functions.L2SqExpr]]. */
   private def l2Local(
@@ -824,23 +485,27 @@ object HnswReplay {
     s
   }
 
+  /** Exact L2² from `qv` to node i. */
+  private def l2Of(li: ReplayLocalIndex, qv: Array[Double]): Int => Double =
+    i => l2Local(li.flat, i * li.d, li.d, qv)
+
   /** Greedy descent MaxLevel..1: per round argmin by (d, id) over
     * {cur} ∪ neighbors_l(cur) — `min(struct(d, cid))` locally.
     */
   private def greedyLocal(
-      li: ReplayLocalIndex, qv: Array[Double], greedyRounds: Int): Int = {
+      li: ReplayLocalIndex, dist: Int => Double, greedyRounds: Int): Int = {
     var cur = li.entryIdx
     var l = MaxLevel
     while (l >= 1) {
       var r = 0
       while (r < greedyRounds) {
         var bestI = cur
-        var bestD = l2Local(li.flat, cur * li.d, li.d, qv)
+        var bestD = dist(cur)
         val nbs = li.adj(l)(cur)
         var j = 0
         while (j < nbs.length) {
           val nb = nbs(j)
-          val dd = l2Local(li.flat, nb * li.d, li.d, qv)
+          val dd = dist(nb)
           if (dd < bestD || (dd == bestD && li.ids(nb) < li.ids(bestI))) {
             bestI = nb; bestD = dd
           }
@@ -898,68 +563,37 @@ object HnswReplay {
       .take(cut)
   }
 
-  /** Synchronized ef-beam; returns the LAST round's ranked survivors
-    * (≤ ef entries, (d, id)-ascending — rnk is the array position + 1).
+  /** Synchronized layer-0 ef-beam from `start`, scoring each node once.
+    * Returns the LAST round's ranked survivors (≤ ef entries,
+    * (d, id)-ascending — rnk is the array position + 1) and every node
+    * any round scored (beam ∪ neighbors per round) with its distance, in
+    * first-scored order — the cumulative visited set W.
     */
   private def beamLocal(
       li: ReplayLocalIndex,
-      qv: Array[Double],
+      dist: Int => Double,
       start: Int,
       ef: Int,
-      beamRounds: Int): Array[(Int, Double)] = {
-    val memo = new java.util.HashMap[Integer, java.lang.Double]()
-    def dist(i: Int): Double = {
-      val c = memo.get(Integer.valueOf(i))
+      beamRounds: Int
+  ): (Array[(Int, Double)], java.util.LinkedHashMap[Integer, java.lang.Double]) = {
+    val seen = new java.util.LinkedHashMap[Integer, java.lang.Double]()
+    def memo(i: Int): Double = {
+      val c = seen.get(Integer.valueOf(i))
       if (c != null) c.doubleValue()
       else {
-        val v = l2Local(li.flat, i * li.d, li.d, qv)
-        memo.put(Integer.valueOf(i), java.lang.Double.valueOf(v)); v
+        val v = dist(i)
+        seen.put(Integer.valueOf(i), java.lang.Double.valueOf(v)); v
       }
     }
     var beam = Array(start)
-    var last: Array[(Int, Double)] = Array((start, dist(start)))
+    var last = Array.empty[(Int, Double)]
     var r = 0
     while (r < beamRounds) {
-      last = rankLocal(li, expandLocal(li, beam), dist, ef)
+      last = rankLocal(li, expandLocal(li, beam), memo, ef)
       beam = last.map(_._1)
       r += 1
     }
-    last
-  }
-
-  /** Every node any beam round scored (beam ∪ neighbors per round),
-    * with its exact distance — the cumulative visited set W.
-    */
-  private def visitedLocal(
-      li: ReplayLocalIndex,
-      qv: Array[Double],
-      start: Int,
-      ef: Int,
-      beamRounds: Int): Array[(Int, Double)] = {
-    val visited = new java.util.LinkedHashMap[Integer, java.lang.Double]()
-    def dist(i: Int): Double = {
-      val c = visited.get(Integer.valueOf(i))
-      if (c != null) c.doubleValue()
-      else {
-        val v = l2Local(li.flat, i * li.d, li.d, qv)
-        visited.put(Integer.valueOf(i), java.lang.Double.valueOf(v)); v
-      }
-    }
-    var beam = Array(start)
-    var r = 0
-    while (r < beamRounds) {
-      val cand = expandLocal(li, beam)
-      beam = rankLocal(li, cand, dist, ef).map(_._1)
-      r += 1
-    }
-    val out = new Array[(Int, Double)](visited.size)
-    val it = visited.entrySet().iterator()
-    var p = 0
-    while (it.hasNext) {
-      val e = it.next()
-      out(p) = (e.getKey.intValue(), e.getValue.doubleValue()); p += 1
-    }
-    out
+    (last, seen)
   }
 
   /** Same loop order as [[graft.functions.PQLutExpr]]. */

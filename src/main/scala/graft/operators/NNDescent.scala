@@ -132,13 +132,7 @@ object NNDescent {
         .unionAll(g.select(col("src"), col("dst"), col("dist")))
         .groupBy(col("src"), col("dst"))
         .agg(min(col("dist")).as("dist"))
-      g = merged
-        .groupBy(col("src"))
-        .agg(topK(col("dist"), col("dst"), k).as("tk"))
-        .select(col("src"), posexplode(col("tk")).as(Seq("pos", "e")))
-        .select(
-          col("src"), col("e.id").as("dst"), col("e.dist").as("dist"),
-          (col("pos") + 1).cast("long").as("rnk"))
+      g = bestPer(merged, "src", "dst", k)
       // the loop references g three times (two undirect arms + merge):
       // truncate the lineage each round or the plan tree grows 3^it
       if (truncateLineage) g = g.localCheckpoint()
@@ -259,7 +253,6 @@ object NNDescent {
     val q = queries.select(
       col(qidCol).cast("long").as("qid"),
       col(qvecCol).cast("array<double>").as("qvec"))
-    val edges = graph.select(col("src"), col("dst"))
 
     def scored(cand: DataFrame): DataFrame = // (qid, id) -> + dist
       cand
@@ -273,37 +266,8 @@ object NNDescent {
     require(
       v.filter(col("id") === entryId).limit(1).count() == 1,
       s"beamSearch: entryId $entryId is not an id in the vector table")
-    var state = scored(q.select(col("qid"), lit(entryId).as("id")))
-    var r = 0
-    while (r < rounds) {
-      val expanded = state
-        .join(edges.withColumnRenamed("src", "id"), "id")
-        .select(col("qid"), col("dst").as("id"))
-        .distinct()
-      state = scored(expanded)
-        .unionAll(state)
-        .groupBy(col("qid"), col("id"))
-        .agg(min(col("dist")).as("dist"))
-        .groupBy(col("qid"))
-        .agg(topK(col("dist"), col("id"), beam).as("tk"))
-        .select(col("qid"), posexplode(col("tk")).as(Seq("pos", "e")))
-        .select(col("qid"), col("e.id").as("id"), col("e.dist").as("dist"))
-        // each round references the previous state TWICE (expansion +
-        // merge), so an unmaterialized lineage grows ~3^rounds; truncate
-        // it — the state is |Q|·beam rows, the iterative-algorithm
-        // analog of distributedRank's evaluate-once checkpoint
-        .localCheckpoint()
-      r += 1
-    }
-    state
-      .groupBy(col("qid"))
-      .agg(topK(col("dist"), col("id"), k).as("tk"))
-      .select(col("qid"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(
-        col("qid").as("query_id"),
-        col("e.id").as("neighbor_id"),
-        col("e.dist").as("dist"),
-        (col("pos") + 1).cast("long").as("rnk"))
+    neighbors(bestPer(
+      beamWalk(q, graph, scored, beam, rounds, entryId), "qid", "id", k))
   }
 
   /** [[beamSearch]] in the DiskANN serving layout: the WALK reads only a
@@ -349,7 +313,6 @@ object NNDescent {
       // the LUT table is |Q| rows × M·K doubles — evaluate once, every
       // round's scoring joins it
       .localCheckpoint()
-    val edges = graph.select(col("src"), col("dst"))
 
     def scoredAdc(cand: DataFrame): DataFrame = // (qid, id) -> + ADC dist
       cand
@@ -361,42 +324,18 @@ object NNDescent {
     require(
       c.filter(col("id") === entryId).limit(1).count() == 1,
       s"beamSearchCompressed: entryId $entryId is not in the code table")
-    var state = scoredAdc(q.select(col("qid"), lit(entryId).as("id")))
-    var r = 0
-    while (r < rounds) {
-      val expanded = state
-        .join(edges.withColumnRenamed("src", "id"), "id")
-        .select(col("qid"), col("dst").as("id"))
-        .distinct()
-      state = scoredAdc(expanded)
-        .unionAll(state)
-        .groupBy(col("qid"), col("id"))
-        .agg(min(col("dist")).as("dist"))
-        .groupBy(col("qid"))
-        .agg(topK(col("dist"), col("id"), beam).as("tk"))
-        .select(col("qid"), posexplode(col("tk")).as(Seq("pos", "e")))
-        .select(col("qid"), col("e.id").as("id"), col("e.dist").as("dist"))
-        .localCheckpoint() // same 3^rounds lineage argument as beamSearch
-      r += 1
-    }
+    val state = beamWalk(q, graph, scoredAdc, beam, rounds, entryId)
     // exact rerank: the ONLY raw-vector read, over ≤ |Q|·beam rows
     val v = vecs.select(
       col(idCol).cast("long").as("id"),
       col(vecCol).cast("array<double>").as("vec"))
-    state
+    val reranked = state
       .select(col("qid"), col("id"))
       .join(v, "id")
       .join(q.select(col("qid"), col("qvec")), "qid")
       .select(col("qid"), col("id"),
         l2SqFast(col("qvec"), col("vec")).as("dist"))
-      .groupBy(col("qid"))
-      .agg(topK(col("dist"), col("id"), k).as("tk"))
-      .select(col("qid"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(
-        col("qid").as("query_id"),
-        col("e.id").as("neighbor_id"),
-        col("e.dist").as("dist"),
-        (col("pos") + 1).cast("long").as("rnk"))
+    neighbors(bestPer(reranked, "qid", "id", k))
   }
 
   /** Recall of an approximate kNN graph against the exact one (both as
@@ -416,4 +355,59 @@ object NNDescent {
       .join(v.select(col("id").as("dst"), col("vec").as("dv")), "dst")
       .select(
         col("src"), col("dst"), l2SqFast(col("sv"), col("dv")).as("dist"))
+
+  /** The beam walk both beam searches share: from `entryId`, each round
+    * expands every node of each query's beam through the edge table,
+    * scores the expansion with `scored` ((qid, id) -> + dist), unions the
+    * old beam, keeps each id's min distance and the best `beam` per
+    * query. Returns the final beam as (qid, id, dist).
+    */
+  private def beamWalk(
+      q: DataFrame, // qid, ...
+      graph: DataFrame, // src long, dst long
+      scored: DataFrame => DataFrame,
+      beam: Int,
+      rounds: Int,
+      entryId: Long
+  ): DataFrame = {
+    val edges = graph.select(col("src").as("id"), col("dst"))
+    var state = scored(q.select(col("qid"), lit(entryId).as("id")))
+    var r = 0
+    while (r < rounds) {
+      val expanded = state
+        .join(edges, "id")
+        .select(col("qid"), col("dst").as("id"))
+        .distinct()
+      state = bestPer(
+        scored(expanded)
+          .unionAll(state)
+          .groupBy(col("qid"), col("id"))
+          .agg(min(col("dist")).as("dist")),
+        "qid", "id", beam)
+        .select(col("qid"), col("id"), col("dist"))
+        // each round references the previous state TWICE (expansion +
+        // merge), so an unmaterialized lineage grows ~3^rounds; truncate
+        // it — the state is |Q|·beam rows, the iterative-algorithm
+        // analog of distributedRank's evaluate-once checkpoint
+        .localCheckpoint()
+      r += 1
+    }
+    state
+  }
+
+  /** The best `k` rows by (dist, id) per `key` — the bounded-heap [[topK]]
+    * merge — as (key, id, dist, rnk), rnk 1..k. */
+  private def bestPer(df: DataFrame, key: String, id: String, k: Int): DataFrame =
+    df.groupBy(col(key))
+      .agg(topK(col("dist"), col(id), k).as("tk"))
+      .select(col(key), posexplode(col("tk")).as(Seq("pos", "e")))
+      .select(
+        col(key), col("e.id").as(id), col("e.dist").as("dist"),
+        (col("pos") + 1).cast("long").as("rnk"))
+
+  /** A search's (qid, id, dist, rnk) as (query_id, neighbor_id, dist, rnk). */
+  private def neighbors(best: DataFrame): DataFrame =
+    best.select(
+      col("qid").as("query_id"), col("id").as("neighbor_id"),
+      col("dist"), col("rnk"))
 }

@@ -399,11 +399,7 @@ object HnswQueries {
     GQuery(
       "hnsw_knn_replay",
       (spark, dir) => {
-        val emb = t(spark, dir, "embeddings")
-          .select(col("vec_id"), toDouble(col("embedding")).as("vec"))
-        val q = emb
-          .filter(col("vec_id") % 10 === 0)
-          .select(col("vec_id").as("query_id"), col("vec").as("qv"))
+        val (_, q) = embAndQueries(spark, dir)
         val idx = sharedReplay(spark, dir)
         HnswReplay
           .searchReplay(idx, q, "query_id", "qv", k = K,
@@ -512,11 +508,7 @@ object HnswQueries {
     GQuery(
       "hnsw_replay_pq",
       (spark, dir) => {
-        val emb = t(spark, dir, "embeddings")
-          .select(col("vec_id"), toDouble(col("embedding")).as("vec"))
-        val q = emb
-          .filter(col("vec_id") % 10 === 0)
-          .select(col("vec_id").as("query_id"), col("vec").as("qv"))
+        val (emb, q) = embAndQueries(spark, dir)
         val idx = sharedReplay(spark, dir)
         val model = replayFixedModel(spark, dir)
         val codes = emb.select(
@@ -612,11 +604,7 @@ object HnswQueries {
     GQuery(
       "hnsw_replay_deleted",
       (spark, dir) => {
-        val emb = t(spark, dir, "embeddings")
-          .select(col("vec_id"), toDouble(col("embedding")).as("vec"))
-        val q = emb
-          .filter(col("vec_id") % 10 === 0)
-          .select(col("vec_id").as("query_id"), col("vec").as("qv"))
+        val (emb, q) = embAndQueries(spark, dir)
         val idx = sharedReplay(spark, dir)
         val tomb = emb.filter(col("vec_id") % 7 === 0).select(col("vec_id"))
         HnswReplay

@@ -18,13 +18,15 @@ class HnswReplaySpec extends SparkSpec {
   private lazy val q = emb
     .filter(col("vec_id") % 10 === 0)
     .select(col("vec_id").as("query_id"), col("vec").as("qv"))
+  private lazy val layered = HnswReplay.buildLayered(emb, "vec_id", "vec")
 
   test("replay recall@10 >= 0.95 vs exact kNN at sf0.01") {
     val exact = BruteForceKNN
       .knn(q, emb.select(col("vec_id").as("neighbor_id"), col("vec").as("bv")), 10)
       .select(col("query_id"), col("neighbor_id"))
     val got = HnswReplay
-      .searchReplay(emb, "vec_id", "vec", q, "query_id", "qv", k = 10)
+      .searchReplay(layered, q, "query_id", "qv", k = 10, ef = 16,
+        greedyRounds = 2, beamRounds = 4)
       .select(col("query_id"), col("neighbor_id"))
     val denom = exact.count().toDouble
     val matched = got.join(exact, Seq("query_id", "neighbor_id")).count()
@@ -35,7 +37,8 @@ class HnswReplaySpec extends SparkSpec {
 
   test("output shape: k rows per query, rnk dense 1..k, dist ascending") {
     val got = HnswReplay
-      .searchReplay(emb, "vec_id", "vec", q, "query_id", "qv", k = 10)
+      .searchReplay(layered, q, "query_id", "qv", k = 10, ef = 16,
+        greedyRounds = 2, beamRounds = 4)
       .collect()
       .groupBy(_.getLong(0))
     assert(got.size == q.count())
@@ -66,6 +69,11 @@ class HnswReplaySpec extends SparkSpec {
     assert(byEf(10L) <= byEf(16L) + 1e-9 && byEf(16L) <= byEf(32L) + 1e-9,
       s"recall not monotone in ef: $byEf")
     assert(byEf(32L) >= 0.97, s"ef=32 recall too low: ${byEf(32L)}")
+    // a repeated ef would emit its whole block twice
+    intercept[IllegalArgumentException] {
+      HnswReplay.replayEfCurve(idx, q, "query_id", "qv", k = 10,
+        efs = Seq(16, 16), greedyRounds = 2, beamRounds = 4)
+    }
   }
 
   test("idealized edges: per-(layer,src) degree bound, members only, no self") {
@@ -85,7 +93,8 @@ class HnswReplaySpec extends SparkSpec {
     // query itself (dist 0, smallest id tie), the strongest cheap
     // structural signal that edges reach true nearest neighbors
     val got = HnswReplay
-      .searchReplay(emb, "vec_id", "vec", q, "query_id", "qv", k = 10)
+      .searchReplay(layered, q, "query_id", "qv", k = 10, ef = 16,
+        greedyRounds = 2, beamRounds = 4)
       .filter(col("rnk") === 1)
       .collect()
     got.foreach { r =>
@@ -244,21 +253,21 @@ class HnswReplaySpec extends SparkSpec {
     val sLoc = asSet(HnswReplay.searchReplay(
       idx, q, "query_id", "qv", k = 10, ef = 16,
       greedyRounds = 2, beamRounds = 4))
-    val sRel = asSet(HnswReplay.searchReplayRelational(
+    val sRel = asSet(HnswReplayRelational.searchReplayRelational(
       idx, q, "query_id", "qv", k = 10, ef = 16,
       greedyRounds = 2, beamRounds = 4))
     assert(sLoc == sRel, "searchReplay local != relational")
     val cLoc = asSet(HnswReplay.replayEfCurve(
       idx, q, "query_id", "qv", k = 10, efs = Seq(10, 16, 32),
       greedyRounds = 2, beamRounds = 4))
-    val cRel = asSet(HnswReplay.replayEfCurveRelational(
+    val cRel = asSet(HnswReplayRelational.replayEfCurveRelational(
       idx, q, "query_id", "qv", k = 10, efs = Seq(10, 16, 32),
       greedyRounds = 2, beamRounds = 4))
     assert(cLoc == cRel, "replayEfCurve local != relational")
     val qs = q.select(col("query_id").as("qid"), col("qv"))
     val vLoc = asSet(HnswReplay.visitedLayer0(
       idx, qs, ef = 16, greedyRounds = 2, beamRounds = 4))
-    val vRel = asSet(HnswReplay.visitedLayer0Relational(
+    val vRel = asSet(HnswReplayRelational.visitedLayer0Relational(
       idx, qs, ef = 16, greedyRounds = 2, beamRounds = 4))
     assert(vLoc == vRel, "visitedLayer0 local != relational")
     // ADC walk, fixed 16-codeword model over the real corpus
@@ -276,7 +285,7 @@ class HnswReplaySpec extends SparkSpec {
     val aLoc = asSet(HnswReplay.searchReplayAdc(
       idx, codes, model, q, "query_id", "qv",
       k = 10, ef = 16, greedyRounds = 2, beamRounds = 4))
-    val aRel = asSet(HnswReplay.searchReplayAdcRelational(
+    val aRel = asSet(HnswReplayRelational.searchReplayAdcRelational(
       idx, codes, model, q, "query_id", "qv",
       k = 10, ef = 16, greedyRounds = 2, beamRounds = 4))
     assert(aLoc == aRel, "searchReplayAdc local != relational")
@@ -320,5 +329,22 @@ class HnswReplaySpec extends SparkSpec {
       .map(r => (r.getLong(1), r.getLong(3))).toSet
     assert(del == filt.map(r => (r.getLong(1), r.getLong(3))).toSet,
       "tombstone walk diverged from the equivalent allow-list walk")
+  }
+
+  test("no relational twin under src/main: the reference spellings live in HnswReplayRelational") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"missing $root")
+    val twin = """def \w*Relational""".r
+    val stream = java.nio.file.Files.walk(root)
+    val offenders =
+      try stream.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala"))
+        .filter(p => twin.findFirstIn(
+          new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).isDefined)
+        .toList
+      finally stream.close()
+    assert(offenders.isEmpty,
+      s"relational twin in $offenders: reference implementations belong in src/test")
   }
 }

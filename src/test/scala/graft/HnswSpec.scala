@@ -440,21 +440,63 @@ class HnswSpec extends SparkSpec {
       .select(col("vec_id"),
         graft.functions.VectorFunctions.toDouble(col("embedding")).as("vec"))
     val p = HnswParams(m = 8, efConstruction = 50)
-    val shards = DistributedHnsw.build(emb, "vec_id", "vec", p, 2, seed = 5)
     val q = emb.filter(col("vec_id") % 25 === 0)
       .select(col("vec_id").as("query_id"), col("vec").as("qv"))
-    val curve = DistributedHnsw
-      .searchEfCurve(shards, q, "query_id", "qv", 10, Seq(10, 200))
-      .localCheckpoint()
-    for (ef <- Seq(10, 200)) {
-      val slice = curve.filter(col("ef") === ef)
-        .select(col("query_id"), col("neighbor_id"), col("dist"), col("rnk"))
-      val single = DistributedHnsw
-        .search(shards, q, "query_id", "qv", 10, efSearch = ef)
-      assert(slice.except(single).count() == 0
-          && single.except(slice).count() == 0,
-        s"ef=$ef slice diverges from single-ef search")
+    val pq: Option[VectorCompression] = Some(new PQCompression(
+      ProductQuantizer.train(emb, "vec", m = 8, k = 16, seed = 5)))
+    for (comp <- Seq(None, pq)) {
+      val shards = DistributedHnsw.build(emb, "vec_id", "vec", p, 2, seed = 5,
+        compression = comp)
+      val curve = DistributedHnsw
+        .searchEfCurve(shards, q, "query_id", "qv", 10, Seq(10, 200), comp)
+        .localCheckpoint()
+      for (ef <- Seq(10, 200)) {
+        val slice = curve.filter(col("ef") === ef)
+          .select(col("query_id"), col("neighbor_id"), col("dist"), col("rnk"))
+        val single = DistributedHnsw
+          .search(shards, q, "query_id", "qv", 10, efSearch = ef, comp)
+        assert(slice.count() == q.count() * 10, s"ef=$ef ${comp.isDefined}")
+        assert(slice.except(single).count() == 0
+            && single.except(slice).count() == 0,
+          s"ef=$ef slice diverges from single-ef search (compressed=${comp.isDefined})")
+      }
+      // a repeated ef would put every neighbor twice into one top-k
+      intercept[IllegalArgumentException] {
+        DistributedHnsw.searchEfCurve(shards, q, "query_id", "qv", 10,
+          Seq(16, 16), comp)
+      }
+      shards.unpersist()
     }
+  }
+
+  test("search rejects a query whose width differs from the indexed vectors'") {
+    val emb = graft.queries.Q.t(spark, sf0001, "embeddings")
+      .select(col("vec_id"),
+        graft.functions.VectorFunctions.toDouble(col("embedding")).as("vec"))
+    val d = emb.head().getSeq[Double](1).length
+    val shards = DistributedHnsw.build(
+      emb, "vec_id", "vec", HnswParams(m = 8, efConstruction = 50), 2, seed = 5)
+    val allowed = emb.select(col("vec_id"))
+    for (w <- Seq(d - 1, d + 1)) {
+      val q = Seq((7L, Seq.fill(w)(0.5))).toDF("query_id", "qv")
+      for ((name, run) <- Seq[(String, () => Unit)](
+          "search" -> (() =>
+            DistributedHnsw.search(shards, q, "query_id", "qv", 5).collect()),
+          "searchFiltered" -> (() =>
+            DistributedHnsw.searchFiltered(shards, q, "query_id", "qv", 5,
+              allowed).collect()))) {
+        val e = intercept[Exception](run())
+        val chain = Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).toList
+        assert(
+          chain.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+            c.getMessage.contains("query 7") &&
+            c.getMessage.contains(s"width $w") &&
+            c.getMessage.contains(s"width $d")),
+          s"$name at width $w: ${chain.map(_.toString).mkString(" <- ")}")
+      }
+    }
+    shards.unpersist()
   }
 
   test("hnsw_ef_curve: recall non-decreasing in efSearch, ef=200 floor") {
