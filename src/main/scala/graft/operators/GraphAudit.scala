@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -63,12 +63,12 @@ object GraphAudit {
     * distance-distribution audit of the graph tier (hop histogram =
     * effective-radius census; Palmer et al. 2002 measure the same curve
     * approximately, here it is exact over a declared source slice, the
-    * audit-sampling discipline of eval_dedup_blocking). FRONTIER-based:
-    * round t joins only the nodes first reached at t−1 against the
-    * adjacency, then anti-joins the visited set, so per-round work is
-    * |frontier|·avg-degree, never |visited|·degree; localCheckpoint
-    * truncates lineage per round (the [[PageRank]] pattern). Integer
-    * state end to end — replays exactly as unrolled SQL.
+    * audit-sampling discipline of eval_dedup_blocking). The undirected
+    * graph is collected once into a broadcast [[LocalGraph]] (capped at
+    * [[LocalGraph.MaxAuditNodes]] nodes) and each source ROW runs one
+    * integer BFS in ONE mapPartitions pass, so the job count does not
+    * grow with `rounds`. Integer state end to end — replays exactly as
+    * unrolled SQL.
     *
     * @param sources one column: the BFS source ids
     * @return (s, id, hop) — hop 0 is the source itself
@@ -79,26 +79,30 @@ object GraphAudit {
       rounds: Int
   ): DataFrame = {
     require(rounds >= 1, s"multiSourceBfs needs >= 1 round, got $rounds")
-    val adj = undBoth(edges).localCheckpoint()
-    var visited = sources
-      .select(col(sources.columns.head).cast("long").as("s"))
-      .withColumn("id", col("s"))
-      .withColumn("hop", lit(0))
-      .localCheckpoint()
-    var frontier = visited.select(col("s"), col("id"))
-    for (t <- 1 to rounds) {
-      frontier = frontier
-        .join(adj, Seq("id"))
-        .select(col("s"), col("nb").as("id"))
-        .distinct()
-        .join(visited, Seq("s", "id"), "left_anti")
-        .localCheckpoint()
-      visited = visited
-        .unionByName(frontier.withColumn("hop", lit(t)))
-        .localCheckpoint()
-    }
-    visited
+    val spark = sources.sparkSession
+    import spark.implicits._
+    val local = LocalGraph.undirected("multiSourceBfs", edges)
+    perSource[(Option[Long], Option[Long], Int)](sources) { it =>
+      val g = local.value
+      it.flatMap {
+        case None => Iterator((None, None, 0))
+        case src @ Some(s) =>
+          val i = g.indexOf(s)
+          if (i < 0) Iterator((src, src, 0))
+          else g.levels(i, rounds)._1.iterator.zipWithIndex.flatMap { case (lv, hop) =>
+            lv.iterator.map(v => (src, Some(g.ids(v)), hop))
+          }
+      }
+    }.toDF("s", "id", "hop")
   }
+
+  /** The source ids of `sources` (its first column), one mapPartitions
+    * pass; a null source is None. */
+  private def perSource[T: Encoder](sources: DataFrame)(
+      f: Iterator[Option[Long]] => Iterator[T]): Dataset[T] =
+    sources.select(col(sources.columns.head).cast("long"))
+      .mapPartitions((it: Iterator[Row]) =>
+        f(it.map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))))
 
   /** k-truss peeling trajectory (Cohen 2008) — the EDGE-cohesion audit
     * next to [[coreness]]'s node view: round t recomputes every
@@ -151,16 +155,19 @@ object GraphAudit {
     * sampling of Brandes–Pich 2007 / Bader et al. 2007): exact Brandes
     * forward/backward passes from each source in `sources`, horizon
     * `rounds`, so bw(v) = Σ_s δ_s(v) over the pivot slice — the standard
-    * corpus-scale estimator (full Brandes is O(nm); pivots make it
-    * O(\|S\|·m) with every pass a keyed join).
+    * estimator (full Brandes is O(nm); pivots make it O(\|S\|·m)).
     *
     * Forward: BFS levels carrying the shortest-path COUNT σ (integer —
     * σ(w) = Σ σ(v) over hop-(t−1) predecessors). Backward: the
-    * dependency recurrence δ(v) = Σ_w (σ_v/σ_w)(1+δ_w) accumulated
+    * dependency recurrence δ(v) = Σ_w (σv/σw)(1+δw) accumulated
     * level by level; each term is a double divided/multiplied
     * identically on every engine and cast to DECIMAL(38,20) inside the
     * sum (the [[PageRank]] decimal-routing discipline), so the whole
     * trajectory is partition-order-exact and replays as unrolled SQL.
+    * Both passes run per source against a broadcast [[LocalGraph]]
+    * (capped at [[LocalGraph.MaxAuditNodes]] nodes) in ONE mapPartitions
+    * pass ([[LocalGraph.dependencies]]); the per-id decimal sum over
+    * sources and the join against `ids` stay relational.
     *
     * @return (id, bw) for every node in `ids` (0.0 when never interior);
     *         bw excludes δ_s(s) per Brandes.
@@ -172,66 +179,19 @@ object GraphAudit {
       rounds: Int
   ): DataFrame = {
     require(rounds >= 1, s"betweennessBrandes needs >= 1 round, got $rounds")
-    val dec = DecimalType(38, 20)
-    val adj = undBoth(edges).localCheckpoint()
-    val l0 = sources
-      .select(col(sources.columns.head).cast("long").as("s"))
-      .withColumn("id", col("s"))
-      .withColumn("sig", lit(1L))
-      .localCheckpoint()
-    // forward: levels(t) = (s, id, sig), visited = union of levels
-    val levels = scala.collection.mutable.ArrayBuffer(l0)
-    var visited = l0.select(col("s"), col("id"))
-    for (t <- 1 to rounds) {
-      val lt = levels(t - 1)
-        .join(adj, Seq("id"))
-        .select(col("s"), col("nb").as("id"), col("sig"))
-        .join(visited, Seq("s", "id"), "left_anti")
-        .groupBy(col("s"), col("id"))
-        .agg(sum(col("sig")).as("sig"))
-        .localCheckpoint()
-      levels += lt
-      visited = visited
-        .unionByName(lt.select(col("s"), col("id")))
-        .localCheckpoint()
-    }
-    // predecessor DAG edges between consecutive levels:
-    // (s, v@t−1, σv, w@t, σw)
-    def predEdges(t: Int): DataFrame =
-      levels(t - 1)
-        .select(col("s"), col("id").as("v"), col("sig").as("sv"))
-        .join(adj.select(col("id").as("v"), col("nb").as("w")), Seq("v"))
-        .join(
-          levels(t).select(
-            col("s"), col("id").as("w"), col("sig").as("sw")),
-          Seq("s", "w"))
-    // backward: δ at the deepest level is 0; each level's δ is the
-    // decimal-exact sum of (σv/σw)(1+δw) over its successors
-    var delta = levels(rounds)
-      .select(col("s"), col("id"), lit(0.0).as("dl"))
-    val acc = scala.collection.mutable.ArrayBuffer(delta)
-    for (t <- rounds to 1 by -1) {
-      val contrib = predEdges(t)
-        .join(
-          delta.select(col("s"), col("id").as("w"), col("dl")),
-          Seq("s", "w"))
-        .groupBy(col("s"), col("v").as("id"))
-        .agg(
-          sum(((col("sv").cast("double") / col("sw")) * (lit(1.0) + col("dl")))
-            .cast(dec)).cast("double").as("acc"))
-      delta = levels(t - 1)
-        .select(col("s"), col("id"))
-        .join(contrib, Seq("s", "id"), "left")
-        .select(col("s"), col("id"), coalesce(col("acc"), lit(0.0)).as("dl"))
-        .localCheckpoint()
-      acc += delta
-    }
-    val all = acc.map(_.filter(col("id") =!= col("s"))).reduce(_.unionByName(_))
+    val spark = sources.sparkSession
+    import spark.implicits._
+    val local = LocalGraph.undirected("betweennessBrandes", edges)
+    val all = perSource[(Long, Double)](sources) { it =>
+      val g = local.value
+      it.flatMap(_.map(g.indexOf).filter(_ >= 0).iterator)
+        .flatMap(g.dependencies(_, rounds))
+    }.toDF("id", "dl")
     ids
       .select(col(ids.columns.head).cast("long").as("id"))
       .join(
         all.groupBy(col("id"))
-          .agg(sum(col("dl").cast(dec)).cast("double").as("bw")),
+          .agg(sum(col("dl").cast(DecimalType(38, 20))).cast("double").as("bw")),
         Seq("id"), "left")
       .select(col("id"), coalesce(col("bw"), lit(0.0)).as("bw"))
   }

@@ -133,6 +133,9 @@ final class HnswIndex(
   /** Layered adjacency state (ref: py/hnsw.py:9-117). */
   val graph = new LayeredGraph
   var entryPoint: Int = 0
+  /** The first inserted vector's width — the only query width [[search]]
+    * accepts. */
+  private var width = -1
 
   def size: Int = if (compression.isDefined) codes.length else raw.length
   def height: Int = graph.height
@@ -222,6 +225,7 @@ final class HnswIndex(
     graph.addNode(0, idx)
     if (idx == 0) { // first insert short-circuits (ref: py/hnsw.py:358-359)
       entryPoint = 0
+      width = v.length
       return idx
     }
     val dist = (id: Int) => distIds(idx, id)
@@ -268,6 +272,8 @@ final class HnswIndex(
       efSearch: Int = -1
   ): IndexedSeq[(Double, Int)] = {
     if (size == 0) return IndexedSeq.empty
+    require(q.length == width,
+      s"query has width ${q.length}, the indexed vectors have width $width")
     val ef = math.max(if (efSearch > 0) efSearch else params.efSearch, topK)
     val dist = (id: Int) => distQ(q, id)
     var ep = entryPoint

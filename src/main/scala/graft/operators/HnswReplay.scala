@@ -1,9 +1,9 @@
 package graft.operators
 
 import scala.jdk.CollectionConverters._
-import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,9 +33,9 @@ import org.apache.spark.sql.functions._
   * given index". Scale shape: the per-layer exact-kNN edge build is the
   * AUDIT-scale half (the same bounded-heap TypedImperativeAggregate as
   * knn_bruteforce — quadratic by nature, run at audit slices); the
-  * search replay itself is |Q|-bounded joins against the edge tables
-  * and would serve fine over a corpus-scale index. The production build
-  * and search stay [[DistributedHnsw]].
+  * search replay walks the index as one broadcast [[LocalGraph]], under
+  * the same [[LocalGraph.MaxAuditNodes]] cap. The production build and
+  * search stay [[DistributedHnsw]].
   */
 object HnswReplay {
 
@@ -53,15 +53,6 @@ object HnswReplay {
     floor(-log(u) * lit(1.0 / math.log(m.toDouble))).cast("int")
   }
 
-  /** Node cap for the idealized edge build: it broadcasts the layer-node
-    * matrix (an exact all-kNN is quadratic by nature), so it is an
-    * AUDIT-scale component by contract — the same bounded-audit
-    * discipline as [[Dedup.auditSample]] / eval_dedup_blocking's exact
-    * side. 200k nodes ≈ 100 MB at d=64. Production ANN is
-    * [[DistributedHnsw]] / [[IvfIndex]].
-    */
-  val MaxAuditNodes = 200000
-
   /** Idealized per-layer edges in ONE pass: broadcast the (id, level,
     * vec) matrix, then each node computes its distance row once and
     * selects top-m (top-m0 at layer 0) per layer it occupies, ties
@@ -76,8 +67,8 @@ object HnswReplay {
       .as[(Long, Seq[Double], Int)]
       .collect()
       .sortBy(_._1)
-    require(rows.length <= MaxAuditNodes,
-      s"idealEdges is the audit-scale path: ${rows.length} nodes > cap $MaxAuditNodes")
+    require(rows.length <= LocalGraph.MaxAuditNodes,
+      s"idealEdges is the audit-scale path: ${rows.length} nodes > cap ${LocalGraph.MaxAuditNodes}")
     require(rows.nonEmpty, "idealEdges on empty input")
     val n = rows.length
     val d = rows(0)._2.length
@@ -135,10 +126,10 @@ object HnswReplay {
     * the corpus (levels are md5 coins, edges exact top-m), so it can be
     * memoized per sf dir like the hnsw family's shared builds.
     *
-    * `local` is the same artifact as one broadcast value (ids, flat
-    * vector matrix, per-layer adjacency) — legal at this component's
+    * `local` is the same artifact as one broadcast [[LocalGraph]] (ids,
+    * flat vector matrix, per-layer adjacency) — legal at this component's
     * declared audit scale (the edge build already collects and
-    * broadcasts the full matrix under [[MaxAuditNodes]]), and it turns
+    * broadcasts the full matrix under [[LocalGraph.MaxAuditNodes]]), and it turns
     * every |Q|-bounded search walk into ONE narrow mapPartitions pass
     * instead of 10+ rounds of tiny joins/windows (guide §1.2 step 1:
     * fix the distributed algorithm before anything else — the replay
@@ -146,69 +137,9 @@ object HnswReplay {
     * kilobyte frontiers).
     */
   final case class LayeredIndex(base: DataFrame, edges: DataFrame) {
-    @transient lazy val local
-        : org.apache.spark.broadcast.Broadcast[ReplayLocalIndex] = {
-      val spark = base.sparkSession
-      val rows = base.select(col("id"), col("vec"), col("level"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getInt(2)))
-        .sortBy(_._1)
-      val n = rows.length
-      // mirror idealEdges' audit gate: buildLayered-produced indexes are
-      // bounded by construction, but a hand-assembled LayeredIndex must
-      // not silently collect an unbounded corpus to the driver
-      require(n <= MaxAuditNodes,
-        s"LayeredIndex.local: $n base rows exceed the $MaxAuditNodes-node audit bound")
-      val d = if (n == 0) 0 else rows(0)._2.length
-      val ids = rows.map(_._1)
-      val flat = new Array[Double](n * d)
-      var i = 0
-      while (i < n) {
-        System.arraycopy(rows(i)._2, 0, flat, i * d, d); i += 1
-      }
-      // entry: max level, tie → smallest id (ids ascending ⇒ first max)
-      var entryIdx = 0
-      var bestLvl = Int.MinValue
-      i = 0
-      while (i < n) {
-        if (rows(i)._3 > bestLvl) { bestLvl = rows(i)._3; entryIdx = i }
-        i += 1
-      }
-      val bufs = Array.fill(MaxLevel + 1, n)(
-        null: scala.collection.mutable.ArrayBuffer[Int])
-      edges.select(col("layer"), col("src"), col("dst")).collect().foreach {
-        r =>
-          val l = r.getInt(0)
-          val s = java.util.Arrays.binarySearch(ids, r.getLong(1))
-          val t = java.util.Arrays.binarySearch(ids, r.getLong(2))
-          // fail with the offending row, not an opaque AIOOBE, when an
-          // edge references an id absent from base or an out-of-range
-          // layer (possible only for hand-assembled LayeredIndex values)
-          require(l >= 0 && l <= MaxLevel && s >= 0 && t >= 0,
-            s"LayeredIndex.local: edge (layer=$l, src=${r.getLong(1)}, " +
-              s"dst=${r.getLong(2)}) references a layer > $MaxLevel or an " +
-              "id absent from base")
-          if (bufs(l)(s) == null)
-            bufs(l)(s) = scala.collection.mutable.ArrayBuffer.empty[Int]
-          bufs(l)(s) += t
-      }
-      val adj = bufs.map(_.map(b => if (b == null) Array.empty[Int] else b.toArray))
-      spark.sparkContext.broadcast(new ReplayLocalIndex(ids, flat, d, adj, entryIdx))
-    }
+    @transient private[operators] lazy val local: Broadcast[LocalGraph] =
+      LocalGraph.layered(base, edges)
   }
-
-  /** Broadcast-local spelling of [[LayeredIndex]]: id-sorted vector
-    * matrix plus per-layer adjacency by node index. Immutable,
-    * audit-bounded (≤ [[MaxAuditNodes]] nodes by the edge build's own
-    * require).
-    */
-  final class ReplayLocalIndex(
-      val ids: Array[Long],
-      val flat: Array[Double], // n*d, id-ascending
-      val d: Int,
-      val adj: Array[Array[Array[Int]]], // adj(layer)(idx) = neighbor idxs
-      val entryIdx: Int
-  ) extends Serializable
 
   def buildLayered(
       emb: DataFrame,
@@ -264,13 +195,13 @@ object HnswReplay {
     require(efs.distinct.length == efs.length,
       s"replayEfCurve: duplicate efs in ${efs.mkString("[", ", ", "]")}")
     efs.foreach(requireWalk(k, _, beamRounds))
-    perQuery(idx, queries, qidCol, qvecCol) { (li, qid, qv) =>
-      val dist = l2Of(li, qv)
-      val start = greedyLocal(li, dist, greedyRounds)
+    LocalGraph.perQuery(idx.local, queries, qidCol, qvecCol) { (g, qid, qv) =>
+      val dist = g.l2(qv)
+      val start = g.greedy(dist, greedyRounds)
       efs.iterator.flatMap { ef =>
-        beamLocal(li, dist, start, ef, beamRounds)._1
+        g.beam(dist, start, ef, beamRounds)._1
           .iterator.take(k).zipWithIndex.map { case ((i, d), pos) =>
-            (qid, li.ids(i), d, (pos + 1).toLong, ef.toLong)
+            (qid, g.ids(i), d, (pos + 1).toLong, ef.toLong)
           }
       }
     }.toDF("query_id", "neighbor_id", "dist", "rnk", "ef")
@@ -350,12 +281,11 @@ object HnswReplay {
       greedyRounds: Int,
       beamRounds: Int
   ): DataFrame =
-    perQuery(idx, qs, "qid", "qv") { (li, qid, qv) =>
-      val dist = l2Of(li, qv)
-      val seen = beamLocal(
-        li, dist, greedyLocal(li, dist, greedyRounds), ef, beamRounds)._2
+    LocalGraph.perQuery(idx.local, qs, "qid", "qv") { (g, qid, qv) =>
+      val dist = g.l2(qv)
+      val seen = g.beam(dist, g.greedy(dist, greedyRounds), ef, beamRounds)._2
       seen.entrySet.iterator.asScala.map { e =>
-        (qid, li.ids(e.getKey), e.getValue.doubleValue)
+        (qid, g.ids(e.getKey), e.getValue.doubleValue)
       }
     }.toDF("qid", "cid", "d")
 
@@ -406,44 +336,21 @@ object HnswReplay {
       beamRounds: Int
   ): DataFrame = {
     requireWalk(k, ef, beamRounds)
-    val li0 = idx.local.value // driver-side: map cid → node index
-    val codesByIdx = new Array[Array[Short]](li0.ids.length)
-    codes.select(col("cid").cast("long"), col("code")).collect().foreach { r =>
-      val i = java.util.Arrays.binarySearch(li0.ids, r.getLong(0))
-      if (i >= 0) codesByIdx(i) = r.getSeq[Short](1).toArray
-    }
-    // full coverage is part of the contract: the relational spelling's
-    // inner join against the code table drops a codeless node from the
-    // walk, which a per-node scorer cannot express — requiring coverage
-    // keeps the spec-pinned equality meaningful instead of silently
-    // choosing one semantics
-    val missingCode = codesByIdx.indexWhere(_ == null)
-    require(missingCode < 0,
-      s"searchReplayAdc: node id=${li0.ids(math.max(missingCode, 0))} has " +
-        "no PQ code — the code table must cover every index id")
-    val codesBc = queries.sparkSession.sparkContext.broadcast(codesByIdx)
-    val (flatCb, m, kCb, dp) = (model.flatCodebook, model.m, model.k, model.dp)
-    perQuery(idx, queries, qidCol, qvecCol) { (li, qid, qv) =>
-      val lut = lutLocal(flatCb, m, kCb, dp, qv)
+    val codesBc = queries.sparkSession.sparkContext.broadcast(
+      LocalGraph.codesByIndex("searchReplayAdc", idx.local.value,
+        codes.select(col("cid"), col("code")), model))
+    LocalGraph.perQuery(idx.local, queries, qidCol, qvecCol) { (g, qid, qv) =>
+      val lut = model.adcLut(qv)
       val cds = codesBc.value
-      val adc = (i: Int) => adcLocal(lut, kCb, cds(i))
-      val beam = beamLocal(
-        li, adc, greedyLocal(li, adc, greedyRounds), ef, beamRounds)._1
+      val adc = (i: Int) => model.adcFromLut(lut, cds(i))
+      val beam = g.beam(adc, g.greedy(adc, greedyRounds), ef, beamRounds)._1
       // exact rerank of the ef survivors — the only raw-vector read
-      rankLocal(li, beam.map(_._1), l2Of(li, qv), k)
-        .iterator.zipWithIndex.map { case ((i, d), pos) =>
-          (qid, li.ids(i), d, (pos + 1).toLong)
-        }
+      g.hits(qid, g.rank(beam.map(_._1), g.l2(qv), k))
     }.toDF("query_id", "neighbor_id", "dist", "rnk")
   }
 
-  // ---- local walk kernels -------------------------------------------------
-  // Bit-exact local spellings of the relational walk stages: distances are
-  // the same ascending-index double sum as L2SqExpr / PQLutExpr /
-  // PQAdcLutExpr, argmin and ranking the same (d, id) lexicographic order
-  // as min(struct(d, cid)) / row_number over (d, cid). Every public search
-  // above is spec-pinned equal to its twin in the test-side
-  // HnswReplayRelational object.
+  // Every public search above is spec-pinned equal to its twin in the
+  // test-side HnswReplayRelational object.
 
   /** The walk contract of every search: at beamRounds = 0 the local walks
     * have no layer-0 round to rank while the relational twins NPE — the
@@ -453,180 +360,5 @@ object HnswReplay {
   private def requireWalk(k: Int, ef: Int, beamRounds: Int): Unit = {
     require(k <= ef, s"k=$k must be <= ef=$ef")
     require(beamRounds >= 1, s"beamRounds must be >= 1, got $beamRounds")
-  }
-
-  /** `walk` over every query in ONE narrow mapPartitions pass against the
-    * broadcast index. */
-  private def perQuery[T <: Product: TypeTag](
-      idx: LayeredIndex,
-      queries: DataFrame,
-      qidCol: String,
-      qvecCol: String
-  )(walk: (ReplayLocalIndex, Long, Array[Double]) => Iterator[T]): Dataset[T] = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val bc = idx.local
-    queries
-      .select(col(qidCol).cast("long"), col(qvecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val li = bc.value
-        it.flatMap { case (qid, qv) => walk(li, qid, qv) }
-      }
-  }
-
-  /** Same ascending-index sum as [[graft.functions.L2SqExpr]]. */
-  private def l2Local(
-      flat: Array[Double], off: Int, d: Int, qv: Array[Double]): Double = {
-    val n = math.min(qv.length, d)
-    var s = 0.0
-    var i = 0
-    while (i < n) { val df = qv(i) - flat(off + i); s += df * df; i += 1 }
-    s
-  }
-
-  /** Exact L2² from `qv` to node i. */
-  private def l2Of(li: ReplayLocalIndex, qv: Array[Double]): Int => Double =
-    i => l2Local(li.flat, i * li.d, li.d, qv)
-
-  /** Greedy descent MaxLevel..1: per round argmin by (d, id) over
-    * {cur} ∪ neighbors_l(cur) — `min(struct(d, cid))` locally.
-    */
-  private def greedyLocal(
-      li: ReplayLocalIndex, dist: Int => Double, greedyRounds: Int): Int = {
-    var cur = li.entryIdx
-    var l = MaxLevel
-    while (l >= 1) {
-      var r = 0
-      while (r < greedyRounds) {
-        var bestI = cur
-        var bestD = dist(cur)
-        val nbs = li.adj(l)(cur)
-        var j = 0
-        while (j < nbs.length) {
-          val nb = nbs(j)
-          val dd = dist(nb)
-          if (dd < bestD || (dd == bestD && li.ids(nb) < li.ids(bestI))) {
-            bestI = nb; bestD = dd
-          }
-          j += 1
-        }
-        cur = bestI
-        r += 1
-      }
-      l -= 1
-    }
-    cur
-  }
-
-  /** One beam expansion: beam ∪ layer-0 neighbors, deduped (the
-    * collect_set). Order is irrelevant — every consumer re-sorts by the
-    * total (d, id) order.
-    */
-  private def expandLocal(li: ReplayLocalIndex, beam: Array[Int]): Array[Int] = {
-    val set = new java.util.HashSet[Integer]()
-    var i = 0
-    while (i < beam.length) {
-      val b = beam(i)
-      set.add(b)
-      val nbs = li.adj(0)(b)
-      var j = 0
-      while (j < nbs.length) { set.add(nbs(j)); j += 1 }
-      i += 1
-    }
-    val out = new Array[Int](set.size)
-    val it = set.iterator
-    var p = 0
-    while (it.hasNext) { out(p) = it.next(); p += 1 }
-    out
-  }
-
-  /** Score + rank by (d, id) ascending, cut at `cut` — the
-    * row_number-over-(d, cid) window locally.
-    */
-  private def rankLocal(
-      li: ReplayLocalIndex,
-      cand: Array[Int],
-      score: Int => Double,
-      cut: Int): Array[(Int, Double)] = {
-    val scored = cand.map(i => (i, score(i)))
-    // java.lang.Double.compare, not (<, ==): the primitive comparators
-    // are not a total order when a distance is NaN (TimSort can throw
-    // "Comparison method violates its general contract"), and compare's
-    // NaN-last ordering matches how the relational twins' window sort
-    // orders NaN in Spark
-    scored
-      .sortWith { case ((i1, d1), (i2, d2)) =>
-        val c = java.lang.Double.compare(d1, d2)
-        c < 0 || (c == 0 && li.ids(i1) < li.ids(i2))
-      }
-      .take(cut)
-  }
-
-  /** Synchronized layer-0 ef-beam from `start`, scoring each node once.
-    * Returns the LAST round's ranked survivors (≤ ef entries,
-    * (d, id)-ascending — rnk is the array position + 1) and every node
-    * any round scored (beam ∪ neighbors per round) with its distance, in
-    * first-scored order — the cumulative visited set W.
-    */
-  private def beamLocal(
-      li: ReplayLocalIndex,
-      dist: Int => Double,
-      start: Int,
-      ef: Int,
-      beamRounds: Int
-  ): (Array[(Int, Double)], java.util.LinkedHashMap[Integer, java.lang.Double]) = {
-    val seen = new java.util.LinkedHashMap[Integer, java.lang.Double]()
-    def memo(i: Int): Double = {
-      val c = seen.get(Integer.valueOf(i))
-      if (c != null) c.doubleValue()
-      else {
-        val v = dist(i)
-        seen.put(Integer.valueOf(i), java.lang.Double.valueOf(v)); v
-      }
-    }
-    var beam = Array(start)
-    var last = Array.empty[(Int, Double)]
-    var r = 0
-    while (r < beamRounds) {
-      last = rankLocal(li, expandLocal(li, beam), memo, ef)
-      beam = last.map(_._1)
-      r += 1
-    }
-    (last, seen)
-  }
-
-  /** Same loop order as [[graft.functions.PQLutExpr]]. */
-  private def lutLocal(
-      flat: Array[Double], m: Int, k: Int, dp: Int,
-      qv: Array[Double]): Array[Double] = {
-    require(qv.length == m * dp,
-      s"query vector length ${qv.length} != ${m * dp}")
-    val out = new Array[Double](m * k)
-    var mi = 0
-    while (mi < m) {
-      val off = mi * dp
-      var ki = 0
-      while (ki < k) {
-        val coff = (mi * k + ki) * dp
-        var s = 0.0
-        var j = 0
-        while (j < dp) {
-          val d = qv(off + j) - flat(coff + j); s += d * d; j += 1
-        }
-        out(mi * k + ki) = s
-        ki += 1
-      }
-      mi += 1
-    }
-    out
-  }
-
-  /** Same m-ordered LUT sum as [[graft.functions.PQAdcLutExpr]]. */
-  private def adcLocal(lut: Array[Double], k: Int, code: Array[Short]): Double = {
-    var s = 0.0
-    var mi = 0
-    while (mi < code.length) { s += lut(mi * k + code(mi)); mi += 1 }
-    s
   }
 }

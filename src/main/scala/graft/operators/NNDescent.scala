@@ -217,16 +217,21 @@ object NNDescent {
       .toDF("src", "dst", "dist")
   }
 
-  /** Relational beam search over a navigable graph (the serving half of
-    * the DiskANN story; Subramanya et al. 2019 §3): from a fixed entry
-    * node, repeatedly expand every node in each query's current beam
-    * through the edge table, score the neighbors, and keep the best
-    * `beam` per query — greedy best-first search restructured as
-    * BFS-beam so it is PURE JOINS: frontier ⋈ edges (equi on the node
-    * id) → ⋈ vectors → bounded-heap top-beam. The graph and corpus stay
-    * sharded; queries ride the frontier rows; nothing is broadcast but
-    * the per-round frontier (|Q|·beam rows). Small-world graphs reach
-    * their fixpoint in O(diameter) ≈ log N rounds — `rounds` bounds it.
+  /** Beam search over a navigable graph (the serving half of the DiskANN
+    * story; Subramanya et al. 2019 §3): from a fixed entry node, each
+    * round expands every node in a query's beam through the graph,
+    * scores beam ∪ neighbors, and keeps the best `beam` by (dist, id) —
+    * greedy best-first search restructured as a synchronized BFS-beam,
+    * the one-layer case of the [[HnswReplay]] walk. Small-world graphs
+    * reach their fixpoint in O(diameter) ≈ log N rounds — `rounds`
+    * bounds it.
+    *
+    * The graph and its vectors are collected once into a broadcast
+    * [[LocalGraph]] (capped at [[LocalGraph.MaxAuditNodes]] nodes) and
+    * every query walks it in ONE mapPartitions pass, so the job count
+    * does not grow with `rounds`. An edge to an id with no vector row is
+    * skipped; `entryId` must be a vector id and every query as wide as
+    * the vectors, or the call fails by name.
     *
     * Monotone by construction: the new beam is top-beam of (old beam ∪
     * expansions), so per-query best-k never regresses with more rounds
@@ -247,38 +252,20 @@ object NNDescent {
   ): DataFrame = {
     require(beam >= k, "beam must be at least k")
     require(rounds >= 1, "beamSearch needs at least one expansion round")
-    val v = vecs.select(
-      col(idCol).cast("long").as("id"),
-      col(vecCol).cast("array<double>").as("vec"))
-    val q = queries.select(
-      col(qidCol).cast("long").as("qid"),
-      col(qvecCol).cast("array<double>").as("qvec"))
-
-    def scored(cand: DataFrame): DataFrame = // (qid, id) -> + dist
-      cand
-        .join(v, "id")
-        .join(q, "qid")
-        .select(col("qid"), col("id"),
-          l2SqFast(col("qvec"), col("vec")).as("dist"))
-
-    // a missing entry node silently inner-joins to an empty seed, which
-    // would return "no neighbors" for every query — fail loudly instead
-    require(
-      v.filter(col("id") === entryId).limit(1).count() == 1,
-      s"beamSearch: entryId $entryId is not an id in the vector table")
-    neighbors(bestPer(
-      beamWalk(q, graph, scored, beam, rounds, entryId), "qid", "id", k))
+    val local = LocalGraph.vectors("beamSearch", vecs, idCol, vecCol, graph, entryId)
+    LocalGraph.perQuery(local, queries, qidCol, qvecCol) { (g, qid, qv) =>
+      g.hits(qid, g.beam(g.l2(qv), g.entry, beam, rounds)._1.take(k))
+    }.toDF("query_id", "neighbor_id", "dist", "rnk")
   }
 
-  /** [[beamSearch]] in the DiskANN serving layout: the WALK reads only a
-    * PQ code table (~M bytes/node) and per-query dot LUTs — never a raw
-    * vector — and the raw corpus is touched once at the end, by an exact
-    * rerank of the ≤ |Q|·beam surviving candidates (Subramanya et al.
-    * 2019 §3: "compressed vectors guide the search, full-precision
-    * vectors re-rank"). At graph scale this is the difference between
-    * shipping D·8 bytes and M bytes per expanded node through every
-    * round's join — the same codes-not-vectors argument as the persisted
-    * HNSW shard code table.
+  /** [[beamSearch]] in the DiskANN serving layout: the WALK scores only
+    * PQ codes (~M bytes/node) through a per-query LUT — never a raw
+    * vector — and the raw vectors are read once at the end, by an exact
+    * rerank of the `beam` survivors (Subramanya et al. 2019 §3:
+    * "compressed vectors guide the search, full-precision vectors
+    * re-rank"); the shape of [[HnswReplay.searchReplayAdc]] without the
+    * greedy descent. The code table must cover every vector id, or the
+    * call fails by name.
     *
     * ADC distances are approximate, so the walk can locally deviate from
     * the raw-vector walk; the exact rerank restores precision on
@@ -302,40 +289,18 @@ object NNDescent {
   ): DataFrame = {
     require(beam >= k, "beam must be at least k")
     require(rounds >= 1, "beamSearchCompressed needs at least one round")
-    val c = codes.select(col("id").cast("long").as("id"), col("code"))
-    val q = queries
-      .select(
-        col(qidCol).cast("long").as("qid"),
-        col(qvecCol).cast("array<double>").as("qvec"))
-      .select(
-        col("qid"), col("qvec"),
-        ProductQuantizer.lutCol(model, col("qvec")).as("lut"))
-      // the LUT table is |Q| rows × M·K doubles — evaluate once, every
-      // round's scoring joins it
-      .localCheckpoint()
-
-    def scoredAdc(cand: DataFrame): DataFrame = // (qid, id) -> + ADC dist
-      cand
-        .join(c, "id")
-        .join(q.select(col("qid"), col("lut")), "qid")
-        .select(col("qid"), col("id"),
-          ProductQuantizer.adcFromLutCol(model, col("lut"), col("code")).as("dist"))
-
-    require(
-      c.filter(col("id") === entryId).limit(1).count() == 1,
-      s"beamSearchCompressed: entryId $entryId is not in the code table")
-    val state = beamWalk(q, graph, scoredAdc, beam, rounds, entryId)
-    // exact rerank: the ONLY raw-vector read, over ≤ |Q|·beam rows
-    val v = vecs.select(
-      col(idCol).cast("long").as("id"),
-      col(vecCol).cast("array<double>").as("vec"))
-    val reranked = state
-      .select(col("qid"), col("id"))
-      .join(v, "id")
-      .join(q.select(col("qid"), col("qvec")), "qid")
-      .select(col("qid"), col("id"),
-        l2SqFast(col("qvec"), col("vec")).as("dist"))
-    neighbors(bestPer(reranked, "qid", "id", k))
+    val local = LocalGraph.vectors(
+      "beamSearchCompressed", vecs, idCol, vecCol, graph, entryId)
+    val codesBc = queries.sparkSession.sparkContext.broadcast(
+      LocalGraph.codesByIndex("beamSearchCompressed", local.value,
+        codes.select(col("id"), col("code")), model))
+    LocalGraph.perQuery(local, queries, qidCol, qvecCol) { (g, qid, qv) =>
+      val lut = model.adcLut(qv)
+      val cds = codesBc.value
+      val walked = g.beam(i => model.adcFromLut(lut, cds(i)), g.entry, beam, rounds)._1
+      // exact rerank: the ONLY raw-vector read, over the beam survivors
+      g.hits(qid, g.rank(walked.map(_._1), g.l2(qv), k))
+    }.toDF("query_id", "neighbor_id", "dist", "rnk")
   }
 
   /** Recall of an approximate kNN graph against the exact one (both as
@@ -356,45 +321,6 @@ object NNDescent {
       .select(
         col("src"), col("dst"), l2SqFast(col("sv"), col("dv")).as("dist"))
 
-  /** The beam walk both beam searches share: from `entryId`, each round
-    * expands every node of each query's beam through the edge table,
-    * scores the expansion with `scored` ((qid, id) -> + dist), unions the
-    * old beam, keeps each id's min distance and the best `beam` per
-    * query. Returns the final beam as (qid, id, dist).
-    */
-  private def beamWalk(
-      q: DataFrame, // qid, ...
-      graph: DataFrame, // src long, dst long
-      scored: DataFrame => DataFrame,
-      beam: Int,
-      rounds: Int,
-      entryId: Long
-  ): DataFrame = {
-    val edges = graph.select(col("src").as("id"), col("dst"))
-    var state = scored(q.select(col("qid"), lit(entryId).as("id")))
-    var r = 0
-    while (r < rounds) {
-      val expanded = state
-        .join(edges, "id")
-        .select(col("qid"), col("dst").as("id"))
-        .distinct()
-      state = bestPer(
-        scored(expanded)
-          .unionAll(state)
-          .groupBy(col("qid"), col("id"))
-          .agg(min(col("dist")).as("dist")),
-        "qid", "id", beam)
-        .select(col("qid"), col("id"), col("dist"))
-        // each round references the previous state TWICE (expansion +
-        // merge), so an unmaterialized lineage grows ~3^rounds; truncate
-        // it — the state is |Q|·beam rows, the iterative-algorithm
-        // analog of distributedRank's evaluate-once checkpoint
-        .localCheckpoint()
-      r += 1
-    }
-    state
-  }
-
   /** The best `k` rows by (dist, id) per `key` — the bounded-heap [[topK]]
     * merge — as (key, id, dist, rnk), rnk 1..k. */
   private def bestPer(df: DataFrame, key: String, id: String, k: Int): DataFrame =
@@ -404,10 +330,4 @@ object NNDescent {
       .select(
         col(key), col("e.id").as(id), col("e.dist").as("dist"),
         (col("pos") + 1).cast("long").as("rnk"))
-
-  /** A search's (qid, id, dist, rnk) as (query_id, neighbor_id, dist, rnk). */
-  private def neighbors(best: DataFrame): DataFrame =
-    best.select(
-      col("qid").as("query_id"), col("id").as("neighbor_id"),
-      col("dist"), col("rnk"))
 }

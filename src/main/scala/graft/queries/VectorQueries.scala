@@ -999,10 +999,11 @@ object VectorQueries {
       """)
     ),
     // The DiskANN serving pipeline end to end: NN-Descent graph →
-    // Vamana α-prune → relational BEAM SEARCH (greedy best-first as
-    // BFS-beam joins: frontier ⋈ edges ⋈ vectors → bounded-heap
-    // top-beam per round; graph and corpus stay sharded, nothing
-    // broadcast but the |Q|·beam frontier). Deterministic, and
+    // Vamana α-prune → BEAM SEARCH (greedy best-first as a synchronized
+    // BFS-beam: expand beam ∪ neighbors, keep the (dist, id) top-beam
+    // per round), every query walked in one pass against the graph and
+    // vectors broadcast as one in-memory graph — capped at
+    // LocalGraph.MaxAuditNodes = 200k nodes. Deterministic, and
     // hash-checked end to end: the oracle chains the graph replay, the
     // vamana-prune recursion, and a second recursive CTE that replays
     // all 6 beam rounds (state = the sorted top-beam id list per query;
@@ -3418,7 +3419,7 @@ object VectorQueries {
     // seed (the smallest node id), take the farthest node u (ties to
     // the smallest id), BFS again from u; ecc(u) within the horizon is
     // the classic lower bound that is near-exact in practice. Two
-    // frontier-BFS chains + two 1-row argmax collects — the k-row
+    // one-pass BFS walks + two 1-row argmax collects — the k-row
     // driver budget.
     GQuery(
       "knn_graph_diameter",
@@ -3506,8 +3507,10 @@ object VectorQueries {
     // carries integer shortest-path counts σ, the backward dependency
     // recurrence δ(v) = Σ (σv/σw)(1+δw) is decimal-routed per term, so
     // the whole forward+backward trajectory hash-checks against an
-    // unrolled SQL replay. Every pass is a keyed join — O(|S|·m) total,
-    // the corpus-scale shape (full Brandes' O(nm) never materializes).
+    // unrolled SQL replay. Both passes run per source in one pass
+    // against the graph broadcast in memory — O(|S|·m) total, capped at
+    // LocalGraph.MaxAuditNodes = 200k nodes (full Brandes' O(nm) never
+    // runs); the per-id decimal sum stays relational.
     GQuery(
       "knn_graph_betweenness",
       (spark, dir) => {

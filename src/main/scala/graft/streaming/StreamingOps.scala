@@ -366,7 +366,9 @@ object StreamingOps {
     *   1. appends its vectors to the store,
     *   2. finds each NEW node's neighbors by [[NNDescent.beamSearch]]
     *      over the EXISTING graph (the HNSW-style insert route — O(batch ·
-    *      beam · rounds) work, never a rebuild),
+    *      beam · rounds) work, never a rebuild; the search collects the
+    *      graph and the store into one broadcast in-memory graph, so the
+    *      store is capped at `LocalGraph.MaxAuditNodes` = 200k nodes),
     *   3. adds a batch-local NN-Descent graph so intra-batch near pairs
     *      are not missed (new↔new edges beam search over old nodes cannot
     *      see),

@@ -331,6 +331,30 @@ class HnswReplaySpec extends SparkSpec {
       "tombstone walk diverged from the equivalent allow-list walk")
   }
 
+  test("replay rejects a query whose width differs from the indexed vectors'") {
+    import spark.implicits._
+    val d = emb.head().getSeq[Double](1).length
+    for (w <- Seq(d - 1, d + 1)) {
+      val qw = Seq((7L, Seq.fill(w)(0.5))).toDF("query_id", "qv")
+      for ((name, run) <- Seq[(String, () => Unit)](
+          "searchReplay" -> (() => HnswReplay.searchReplay(layered, qw, "query_id", "qv",
+            k = 5, ef = 16, greedyRounds = 2, beamRounds = 4).collect()),
+          "searchReplayFiltered" -> (() => HnswReplay.searchReplayFiltered(layered, qw,
+            "query_id", "qv", emb.select(col("vec_id")), k = 5, ef = 16,
+            greedyRounds = 2, beamRounds = 4).collect()))) {
+        val e = intercept[Exception](run())
+        val chain = Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).toList
+        assert(
+          chain.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+            c.getMessage.contains("query 7") &&
+            c.getMessage.contains(s"width $w") &&
+            c.getMessage.contains(s"width $d")),
+          s"$name at width $w: ${chain.map(_.toString).mkString(" <- ")}")
+      }
+    }
+  }
+
   test("no relational twin under src/main: the reference spellings live in HnswReplayRelational") {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")

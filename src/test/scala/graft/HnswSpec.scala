@@ -63,6 +63,18 @@ class HnswSpec extends SparkSpec {
     assert(r.forall(_._1 == 0.0))
   }
 
+  test("HnswIndex.search rejects a query whose width differs from the indexed vectors'") {
+    val rng = new Random(3)
+    val index = new HnswIndex(HnswParams(m = 4, efConstruction = 10), seed = 3)
+    (0 until 20).foreach(_ => index.insert(Array.fill(4)(rng.nextDouble())))
+    for (w <- Seq(3, 5)) {
+      val e = intercept[IllegalArgumentException](index.search(Array.fill(w)(0.5), topK = 3))
+      assert(e.getMessage.contains(s"width $w") && e.getMessage.contains("width 4"),
+        e.getMessage)
+    }
+    assert(index.search(Array.fill(4)(0.5), topK = 3).length == 3)
+  }
+
   test("single-shard recall 1.0 on seeded uniform vectors (py/test_hnsw.py:346-360)") {
     val rng = new Random(42)
     val data = Array.fill(200)(Array.fill(16)(rng.nextDouble()))
