@@ -11,7 +11,8 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * (`c*d + j`) as a codegen reference object — the same plan-embedding
   * tactic as the PQ expressions: no per-row Seq boxing, no broadcast
   * dereference, whole-stage codegen end to end. Validates the input type
-  * at analysis and the vector length at runtime.
+  * at analysis and the vector length at runtime. Interpreted eval and
+  * generated code both call the one kernel, [[ArgminCentroidExpr.argmin]].
   */
 case class ArgminCentroidExpr(child: Expression, flat: Array[Double], k: Int, d: Int)
     extends UnaryExpression {
@@ -22,9 +23,24 @@ case class ArgminCentroidExpr(child: Expression, flat: Array[Double], k: Int, d:
   override def checkInputDataTypes(): TypeCheckResult =
     PQCheck.vecType(child.dataType, prettyName)
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    PQCheck.requireLen(v, d, "vector", prettyName)
+  override protected def nullSafeEval(input: Any): Any =
+    ArgminCentroidExpr.argmin(flat, k, d, input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => {
+      val cb = ctx.addReferenceObj("centroids", flat, "double[]")
+      s"graft.functions.ArgminCentroidExpr.argmin($cb, $k, $d, $a)"
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object ArgminCentroidExpr {
+  /** The kernel shared by interpreted eval and generated code: the index
+    * of the nearest of the `k` centroids in `flat` (k×d). */
+  def argmin(flat: Array[Double], k: Int, d: Int, v: ArrayData): Int = {
+    PQCheck.requireLen(v, d, "vector", "centroid_argmin")
     var best = 0
     var bestD = Double.MaxValue
     var c = 0
@@ -38,33 +54,4 @@ case class ArgminCentroidExpr(child: Expression, flat: Array[Double], k: Int, d:
     }
     best
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cb = ctx.addReferenceObj("centroids", flat, "double[]")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      val c = ctx.freshName("c")
-      val j = ctx.freshName("j")
-      val s = ctx.freshName("s")
-      val df = ctx.freshName("df")
-      val off = ctx.freshName("off")
-      s"""
-        |${PQCheck.helper}.checkLen($a.numElements(), $d, "vector", "$prettyName");
-        |int $best = 0; double $bestD = Double.MAX_VALUE;
-        |for (int $c = 0; $c < $k; $c++) {
-        |  int $off = $c * $d;
-        |  double $s = 0.0;
-        |  for (int $j = 0; $j < $d; $j++) {
-        |    double $df = $a.getDouble($j) - $cb[$off + $j];
-        |    $s += $df * $df;
-        |  }
-        |  if ($s < $bestD) { $bestD = $s; $best = $c; }
-        |}
-        |${ev.value} = $best;
-      """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -23,7 +23,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * probability ~2⁻⁶⁴·pairs — so downstream span output is identical to
   * the digest formulation, the DuckDB oracle (which groups by its own md5)
   * included. One multiply-add per character, no per-window string
-  * allocation, no digest, fused into whole-stage codegen.
+  * allocation, no digest.
+  *
+  * One kernel: interpreted eval, generated code (one static call to
+  * [[RollingHashWindowsExpr.compute]]) and the streaming span scrub all
+  * run [[RollingHashWindowsExpr.computeLongs]], so batch and stream hash
+  * bit-for-bit alike by construction.
   *
   * Windows are over Unicode CODE POINTS, matching Spark's `substring`/
   * `length` character semantics (and DuckDB's).
@@ -41,34 +46,7 @@ case class RollingHashWindowsExpr(child: Expression, w: Int)
     RollingHashWindowsExpr.compute(t.asInstanceOf[UTF8String], w)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val cps = ctx.freshName("cps")
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val bw = ctx.freshName("bw")
-      val h = ctx.freshName("h")
-      val i = ctx.freshName("i")
-      val B = RollingHashWindowsExpr.B
-      s"""
-        |int[] $cps = $c.toString().codePoints().toArray();
-        |int $n = $cps.length;
-        |long[] $out = new long[java.lang.Math.max(0, $n - $w + 1)];
-        |if ($n >= $w) {
-        |  long $bw = 1L;
-        |  for (int $i = 0; $i < $w - 1; $i++) $bw *= ${B}L;
-        |  long $h = 0L;
-        |  for (int $i = 0; $i < $w; $i++) $h = $h * ${B}L + $cps[$i];
-        |  $out[0] = $h;
-        |  for (int $i = 1; $i <= $n - $w; $i++) {
-        |    $h = ($h - $cps[$i - 1] * $bw) * ${B}L + $cps[$i + $w - 1];
-        |    $out[$i] = $h;
-        |  }
-        |}
-        |${ev.value} =
-        |  org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        |    .fromPrimitiveArray($out);
-      """.stripMargin
-    })
+    defineCodeGen(ctx, ev, c => s"graft.functions.RollingHashWindowsExpr.compute($c, $w)")
 
   override def prettyName: String = "rolling_hash_windows"
 
@@ -85,9 +63,8 @@ object RollingHashWindowsExpr {
   def compute(s: UTF8String, w: Int): ArrayData =
     UnsafeArrayData.fromPrimitiveArray(computeLongs(s.toString, w))
 
-  /** The raw kernel, for executor-side consumers outside the expression
-    * (e.g. the streaming span scrub) — identical arithmetic to the
-    * codegen path, so batch and stream hash bit-for-bit alike.
+  /** The raw kernel, also called by executor-side consumers outside the
+    * expression (e.g. the streaming span scrub).
     */
   def computeLongs(s: String, w: Int): Array[Long] = {
     val cps = s.codePoints().toArray()

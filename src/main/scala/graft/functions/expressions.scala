@@ -9,11 +9,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Native Catalyst expressions for the vector distance kernels (SURVEY.md
   * §2.H): tight primitive loops over `ArrayData`, no per-pair array
-  * allocation, fused into whole-stage codegen. Semantically identical to
-  * the `aggregate(zip_with(...))` formulations in [[VectorFunctions]]
-  * (double accumulation in array order — ref: py/bruteforce.py:5-9), just
-  * faster: the zip_with path materializes an intermediate array per row
-  * pair; these don't.
+  * allocation. Semantically identical to the `aggregate(zip_with(...))`
+  * formulations in [[VectorFunctions]] (double accumulation in array
+  * order — ref: py/bruteforce.py:5-9), just faster: the zip_with path
+  * materializes an intermediate array per row pair; these don't.
+  *
+  * One kernel per expression: each loop is written once, as a static
+  * method of [[VectorKernels]]. `nullSafeEval` calls it, and `doGenCode`
+  * emits one call to it, so interpreted eval (e.g. `TopKAgg.update`) and
+  * whole-stage codegen run the same arithmetic by construction. The only
+  * logic in a template is the MaxSim empty-right-bag NULL test.
   *
   * SQL-surface contract (`graft_l2sq`/`graft_dot`):
   *  - inputs must be numeric arrays; any numeric element type implicitly
@@ -34,13 +39,11 @@ abstract class VectorBinaryExpression extends BinaryExpression
     Seq(ArrayType(DoubleType), ArrayType(DoubleType))
 }
 
-/** Squared L2 distance over two double arrays. */
-case class L2SqExpr(left: Expression, right: Expression)
-    extends VectorBinaryExpression {
+/** The distance kernels shared by interpreted eval and generated code. */
+object VectorKernels {
+  private[functions] val Name = "graft.functions.VectorKernels"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def l2Sq(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0.0
     var i = 0
@@ -52,36 +55,7 @@ case class L2SqExpr(left: Expression, right: Expression)
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      // fresh names: several instances may fuse into one codegen function
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      s"""
-        |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        |double $s = 0.0;
-        |for (int $i = 0; $i < $n; $i++) {
-        |  double $d = $a.getDouble($i) - $b.getDouble($i);
-        |  $s += $d * $d;
-        |}
-        |${ev.value} = $s;
-      """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Dot product over two double arrays. */
-case class DotExpr(left: Expression, right: Expression)
-    extends VectorBinaryExpression {
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def dot(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0.0
     var i = 0
@@ -92,48 +66,7 @@ case class DotExpr(left: Expression, right: Expression)
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      s"""
-        |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        |double $s = 0.0;
-        |for (int $i = 0; $i < $n; $i++) {
-        |  $s += $a.getDouble($i) * $b.getDouble($i);
-        |}
-        |${ev.value} = $s;
-      """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** RaBitQ sign dot: `Σ_j (bit j of left set ? right[j] : -right[j])` —
-  * the 1-bit serving inner loop (bq_rabitq_rerank), with the sign bits
-  * packed 16 per int word LSB-first (word `j >> 4`, bit `j & 15` — the
-  * BQModel packing). Bit-identical to the HOF formulation
-  * `aggregate(sequence(0, n-1), 0D, (acc, j) -> acc + IF(bit, rq[j],
-  * -rq[j]))` — same ascending-j fold — but one primitive loop in
-  * whole-stage codegen instead of a per-element lambda walk on the
-  * |Q|·N candidate hot path. `j` ranges over the right (query) array;
-  * missing high words read as 0-bits would be out-of-bounds instead, so
-  * the loop is bounded by both sides.
-  */
-case class BitSignDotExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(IntegerType), ArrayType(DoubleType))
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val w = a.asInstanceOf[ArrayData]
-    val r = b.asInstanceOf[ArrayData]
+  def bitSignDot(w: ArrayData, r: ArrayData): Double = {
     val n = math.min(r.numElements(), w.numElements() * 16)
     var s = 0.0
     var j = 0
@@ -145,22 +78,126 @@ case class BitSignDotExpr(left: Expression, right: Expression)
     s
   }
 
+  /** True where MaxSim is NULL: tokens on the left, none on the right
+    * (array_max of an empty list). */
+  def emptyRightBag(q: ArrayData, d: ArrayData): Boolean =
+    q.numElements() > 0 && d.numElements() == 0
+
+  /** MaxSim over a non-[[emptyRightBag]] pair. */
+  def maxSim(q: ArrayData, d: ArrayData): Double = {
+    val nq = q.numElements()
+    val nd = d.numElements()
+    var total = 0.0
+    var t = 0
+    while (t < nq) {
+      val qt = q.getArray(t)
+      var best = Double.NegativeInfinity
+      var u = 0
+      while (u < nd) {
+        val s = dot(qt, d.getArray(u))
+        // NaN is the greatest element under Spark's Double ordering, so
+        // array_max would return it — mirror that, or the two documented-
+        // identical forms diverge on NaN inputs
+        if (s > best || java.lang.Double.isNaN(s)) best = s
+        u += 1
+      }
+      total += best
+      t += 1
+    }
+    total
+  }
+
+  /** ADC MaxSim over a non-[[emptyRightBag]] pair; a code outside its
+    * LUT fails by name. */
+  def maxSimAdc(q: ArrayData, d: ArrayData): Double = {
+    val nq = q.numElements()
+    val nd = d.numElements()
+    var total = 0.0
+    var t = 0
+    while (t < nq) {
+      val luts = q.getArray(t) // [s][k]
+      val ns = luts.numElements()
+      var best = Double.NegativeInfinity
+      var u = 0
+      while (u < nd) {
+        val codes = d.getArray(u) // [s]
+        val m = math.min(ns, codes.numElements())
+        var s = 0.0
+        var si = 0
+        while (si < m) {
+          val lut = luts.getArray(si)
+          val code = codes.getShort(si).toInt
+          if (code < 0 || code >= lut.numElements()) {
+            throw new IllegalArgumentException(
+              s"maxsim_adc: code $code out of range for LUT of ${lut.numElements()} entries (subspace $si)")
+          }
+          s += lut.getDouble(code)
+          si += 1
+        }
+        // NaN = greatest, matching array_max (see maxSim)
+        if (s > best || java.lang.Double.isNaN(s)) best = s
+        u += 1
+      }
+      total += best
+      t += 1
+    }
+    total
+  }
+}
+
+/** Squared L2 distance over two double arrays. */
+case class L2SqExpr(left: Expression, right: Expression)
+    extends VectorBinaryExpression {
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.l2Sq(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val j = ctx.freshName("j")
-      val v = ctx.freshName("v")
-      s"""
-        |int $n = java.lang.Math.min($b.numElements(), $a.numElements() * 16);
-        |double $s = 0.0;
-        |for (int $j = 0; $j < $n; $j++) {
-        |  double $v = $b.getDouble($j);
-        |  $s += ((($a.getInt($j >> 4) >> ($j & 15)) & 1) == 1) ? $v : -$v;
-        |}
-        |${ev.value} = $s;
-      """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"${VectorKernels.Name}.l2Sq($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** Dot product over two double arrays. */
+case class DotExpr(left: Expression, right: Expression)
+    extends VectorBinaryExpression {
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"${VectorKernels.Name}.dot($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** RaBitQ sign dot: `Σ_j (bit j of left set ? right[j] : -right[j])` —
+  * the 1-bit serving inner loop (bq_rabitq_rerank), with the sign bits
+  * packed 16 per int word LSB-first (word `j >> 4`, bit `j & 15` — the
+  * BQModel packing). Bit-identical to the HOF formulation
+  * `aggregate(sequence(0, n-1), 0D, (acc, j) -> acc + IF(bit, rq[j],
+  * -rq[j]))` — same ascending-j fold — but one primitive loop instead of
+  * a per-element lambda walk on the |Q|·N candidate hot path. `j` ranges
+  * over the right (query) array; missing high words read as 0-bits would
+  * be out-of-bounds instead, so the loop is bounded by both sides.
+  */
+case class BitSignDotExpr(left: Expression, right: Expression)
+    extends BinaryExpression with ImplicitCastInputTypes {
+
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(IntegerType), ArrayType(DoubleType))
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.bitSignDot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"${VectorKernels.Name}.bitSignDot($a, $b)")
 
   override def prettyName: String = "bit_sign_dot"
 
@@ -177,7 +214,7 @@ case class BitSignDotExpr(left: Expression, right: Expression)
   * same truncate-at-shorter ragged rule, empty right bag → NULL, empty
   * left bag → 0.0 — but as one fused primitive loop: the HOF path
   * allocates a scores array per pair and walks lambda closures per token;
-  * this walks the nested `ArrayData` directly inside whole-stage codegen.
+  * this walks the nested `ArrayData` directly.
   */
 case class MaxSimExpr(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes {
@@ -190,75 +227,14 @@ case class MaxSimExpr(left: Expression, right: Expression)
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val q = a.asInstanceOf[ArrayData]
     val d = b.asInstanceOf[ArrayData]
-    val nq = q.numElements()
-    val nd = d.numElements()
-    if (nq > 0 && nd == 0) return null // array_max of an empty list
-    var total = 0.0
-    var t = 0
-    while (t < nq) {
-      val qt = q.getArray(t)
-      var best = Double.NegativeInfinity
-      var u = 0
-      while (u < nd) {
-        val dt = d.getArray(u)
-        val n = math.min(qt.numElements(), dt.numElements())
-        var s = 0.0
-        var i = 0
-        while (i < n) {
-          s += qt.getDouble(i) * dt.getDouble(i)
-          i += 1
-        }
-        // NaN is the greatest element under Spark's Double ordering, so
-        // array_max would return it — mirror that, or the two documented-
-        // identical forms diverge on NaN inputs
-        if (s > best || java.lang.Double.isNaN(s)) best = s
-        u += 1
-      }
-      total += best
-      t += 1
-    }
-    total
+    if (VectorKernels.emptyRightBag(q, d)) null else VectorKernels.maxSim(q, d)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val nq = ctx.freshName("nq")
-      val nd = ctx.freshName("nd")
-      val total = ctx.freshName("total")
-      val t = ctx.freshName("t")
-      val u = ctx.freshName("u")
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val best = ctx.freshName("best")
-      val qt = ctx.freshName("qt")
-      val dt = ctx.freshName("dt")
-      val ad = classOf[ArrayData].getName
-      s"""
-        |int $nq = $a.numElements();
-        |int $nd = $b.numElements();
-        |if ($nq > 0 && $nd == 0) {
-        |  ${ev.isNull} = true;
-        |} else {
-        |  double $total = 0.0;
-        |  for (int $t = 0; $t < $nq; $t++) {
-        |    $ad $qt = $a.getArray($t);
-        |    double $best = Double.NEGATIVE_INFINITY;
-        |    for (int $u = 0; $u < $nd; $u++) {
-        |      $ad $dt = $b.getArray($u);
-        |      int $n = java.lang.Math.min($qt.numElements(), $dt.numElements());
-        |      double $s = 0.0;
-        |      for (int $i = 0; $i < $n; $i++) {
-        |        $s += $qt.getDouble($i) * $dt.getDouble($i);
-        |      }
-        |      if ($s > $best || Double.isNaN($s)) $best = $s;
-        |    }
-        |    $total += $best;
-        |  }
-        |  ${ev.value} = $total;
-        |}
-      """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      |${ev.isNull} = ${VectorKernels.Name}.emptyRightBag($a, $b);
+      |if (!${ev.isNull}) ${ev.value} = ${VectorKernels.Name}.maxSim($a, $b);
+    """.stripMargin)
 
   override def prettyName: String = "maxsim"
 
@@ -290,91 +266,14 @@ case class MaxSimAdcExpr(left: Expression, right: Expression)
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val q = a.asInstanceOf[ArrayData]
     val d = b.asInstanceOf[ArrayData]
-    val nq = q.numElements()
-    val nd = d.numElements()
-    if (nq > 0 && nd == 0) return null
-    var total = 0.0
-    var t = 0
-    while (t < nq) {
-      val luts = q.getArray(t) // [s][k]
-      val ns = luts.numElements()
-      var best = Double.NegativeInfinity
-      var u = 0
-      while (u < nd) {
-        val codes = d.getArray(u) // [s]
-        val m = math.min(ns, codes.numElements())
-        var s = 0.0
-        var si = 0
-        while (si < m) {
-          val lut = luts.getArray(si)
-          val code = codes.getShort(si).toInt
-          if (code < 0 || code >= lut.numElements()) {
-            throw new IllegalArgumentException(
-              s"maxsim_adc: code $code out of range for LUT of ${lut.numElements()} entries (subspace $si)")
-          }
-          s += lut.getDouble(code)
-          si += 1
-        }
-        // NaN = greatest, matching array_max (see MaxSimExpr)
-        if (s > best || java.lang.Double.isNaN(s)) best = s
-        u += 1
-      }
-      total += best
-      t += 1
-    }
-    total
+    if (VectorKernels.emptyRightBag(q, d)) null else VectorKernels.maxSimAdc(q, d)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val nq = ctx.freshName("nq")
-      val nd = ctx.freshName("nd")
-      val total = ctx.freshName("total")
-      val t = ctx.freshName("t")
-      val u = ctx.freshName("u")
-      val si = ctx.freshName("si")
-      val m = ctx.freshName("m")
-      val ns = ctx.freshName("ns")
-      val s = ctx.freshName("s")
-      val best = ctx.freshName("best")
-      val luts = ctx.freshName("luts")
-      val codes = ctx.freshName("codes")
-      val lut = ctx.freshName("lut")
-      val code = ctx.freshName("code")
-      val ad = classOf[ArrayData].getName
-      s"""
-        |int $nq = $a.numElements();
-        |int $nd = $b.numElements();
-        |if ($nq > 0 && $nd == 0) {
-        |  ${ev.isNull} = true;
-        |} else {
-        |  double $total = 0.0;
-        |  for (int $t = 0; $t < $nq; $t++) {
-        |    $ad $luts = $a.getArray($t);
-        |    int $ns = $luts.numElements();
-        |    double $best = Double.NEGATIVE_INFINITY;
-        |    for (int $u = 0; $u < $nd; $u++) {
-        |      $ad $codes = $b.getArray($u);
-        |      int $m = java.lang.Math.min($ns, $codes.numElements());
-        |      double $s = 0.0;
-        |      for (int $si = 0; $si < $m; $si++) {
-        |        $ad $lut = $luts.getArray($si);
-        |        int $code = (int) $codes.getShort($si);
-        |        if ($code < 0 || $code >= $lut.numElements()) {
-        |          throw new IllegalArgumentException(
-        |            "maxsim_adc: code " + $code + " out of range for LUT of "
-        |            + $lut.numElements() + " entries (subspace " + $si + ")");
-        |        }
-        |        $s += $lut.getDouble($code);
-        |      }
-        |      if ($s > $best || Double.isNaN($s)) $best = $s;
-        |    }
-        |    $total += $best;
-        |  }
-        |  ${ev.value} = $total;
-        |}
-      """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      |${ev.isNull} = ${VectorKernels.Name}.emptyRightBag($a, $b);
+      |if (!${ev.isNull}) ${ev.value} = ${VectorKernels.Name}.maxSimAdc($a, $b);
+    """.stripMargin)
 
   override def prettyName: String = "maxsim_adc"
 

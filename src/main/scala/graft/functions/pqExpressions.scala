@@ -9,12 +9,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, ShortType}
 /** Native Catalyst expressions for the PQ kernels (ref semantics:
   * py/pq.py:242-349). The codebook rides along as a flat `double[]`
   * reference object — (M, K, D') row-major, `(mi*K + ki)*D' + j` — so the
-  * generated code indexes primitives directly: no per-row `Seq` boxing, no
+  * kernels index primitives directly: no per-row `Seq` boxing, no
   * broadcast dereference per row, and the whole projection stays inside
   * whole-stage codegen. Spark ships the task binary (expression tree
   * included) via its own torrent broadcast, so a codebook-sized array in
   * the plan costs one broadcast per stage — same wire cost as an explicit
   * `Broadcast[PQModel]`, without leaving codegen.
+  *
+  * One kernel per expression: each loop is written once, as a static
+  * method of [[PQKernels]] over `ArrayData`. `nullSafeEval` calls it, and
+  * `doGenCode` emits one call to it with the codebook reference, so
+  * interpreted eval and generated code run the same arithmetic and the
+  * same checks by construction.
   *
   * Accumulation orders are part of the observable contract (oracle queries
   * hash results at 6 decimals); ONE order is used engine-wide, pinned by
@@ -32,9 +38,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, ShortType}
   *    order.
   *
   * Every expression validates input types at analysis time
-  * (`checkInputDataTypes`) and array lengths at runtime — a wrong-length
-  * vector raises a descriptive error instead of an out-of-bounds Unsafe
-  * read (getDouble past numElements is undefined memory, not an exception).
+  * (`checkInputDataTypes`); every kernel validates array lengths and code
+  * values at runtime — a wrong-length vector or a code outside 0..K-1
+  * raises a descriptive error instead of an out-of-bounds Unsafe read
+  * (getDouble past numElements is undefined memory, not an exception) or
+  * a silent read of another subspace's centroid.
   */
 trait PQModelExpression {
   def flat: Array[Double]
@@ -48,18 +56,19 @@ trait PQModelExpression {
 }
 
 private[functions] object PQCheck {
-  val helper = "graft.functions.PQCheck"
-
   def requireLen(a: ArrayData, expected: Int, what: String, name: String): Unit =
     if (a.numElements() != expected)
       throw new IllegalArgumentException(
         s"$name: expected $what of length $expected, got ${a.numElements()}")
 
-  /** Codegen twin of [[requireLen]] (static call keeps generated code small). */
-  def checkLen(n: Int, expected: Int, what: String, name: String): Unit =
-    if (n != expected)
+  /** Code `c(mi)`, checked to lie in 0 until k. */
+  def code(c: ArrayData, mi: Int, k: Int, name: String): Int = {
+    val v = c.getShort(mi).toInt
+    if (v < 0 || v >= k)
       throw new IllegalArgumentException(
-        s"$name: expected $what of length $expected, got $n")
+        s"$name: code $v out of range for k=$k (subspace $mi)")
+    v
+  }
 
   def vecType(dt: DataType, name: String, side: String = "input"): TypeCheckResult =
     dt match {
@@ -76,19 +85,15 @@ private[functions] object PQCheck {
     }
 }
 
-/** PQ encode: array<double> vector -> array<short> code (one per subspace). */
-case class PQEncodeExpr(child: Expression, flat: Array[Double], m: Int, k: Int, dp: Int)
-    extends UnaryExpression with PQModelExpression {
+/** The PQ kernels shared by interpreted eval and generated code; `flat`
+  * is the (M, K, D') codebook of [[PQModelExpression]]. */
+object PQKernels {
+  import PQCheck.{code, requireLen}
 
-  override def dataType: DataType = ArrayType(ShortType, containsNull = false)
-  override def prettyName: String = "pq_encode_native"
+  private[functions] val Name = "graft.functions.PQKernels"
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    PQCheck.vecType(child.dataType, prettyName)
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    PQCheck.requireLen(v, m * dp, "vector", prettyName)
+  def encode(flat: Array[Double], m: Int, k: Int, dp: Int, v: ArrayData): ArrayData = {
+    requireLen(v, m * dp, "vector", "pq_encode_native")
     val out = new Array[Short](m)
     var mi = 0
     while (mi < m) {
@@ -110,37 +115,97 @@ case class PQEncodeExpr(child: Expression, flat: Array[Double], m: Int, k: Int, 
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
+  def decode(flat: Array[Double], m: Int, k: Int, dp: Int, c: ArrayData): ArrayData = {
+    requireLen(c, m, "code", "pq_decode_native")
+    val out = new Array[Double](m * dp)
+    var mi = 0
+    while (mi < m) {
+      val coff = (mi * k + code(c, mi, k, "pq_decode_native")) * dp
+      var j = 0
+      while (j < dp) { out(mi * dp + j) = flat(coff + j); j += 1 }
+      mi += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  def adc(flat: Array[Double], m: Int, k: Int, dp: Int, v: ArrayData, c: ArrayData): Double = {
+    requireLen(v, m * dp, "query vector", "pq_adc_native")
+    requireLen(c, m, "code", "pq_adc_native")
+    var s = 0.0
+    var mi = 0
+    while (mi < m) {
+      val coff = (mi * k + code(c, mi, k, "pq_adc_native")) * dp
+      val off = mi * dp
+      var sub = 0.0
+      var j = 0
+      while (j < dp) { val d = v.getDouble(off + j) - flat(coff + j); sub += d * d; j += 1 }
+      s += sub
+      mi += 1
+    }
+    s
+  }
+
+  def sdc(flat: Array[Double], m: Int, k: Int, dp: Int, x: ArrayData, y: ArrayData): Double = {
+    requireLen(x, m, "code", "pq_sdc_native")
+    requireLen(y, m, "code", "pq_sdc_native")
+    var s = 0.0
+    var mi = 0
+    while (mi < m) {
+      val ca = (mi * k + code(x, mi, k, "pq_sdc_native")) * dp
+      val cb = (mi * k + code(y, mi, k, "pq_sdc_native")) * dp
+      var j = 0
+      while (j < dp) { val d = flat(ca + j) - flat(cb + j); s += d * d; j += 1 }
+      mi += 1
+    }
+    s
+  }
+
+  def lut(flat: Array[Double], m: Int, k: Int, dp: Int, v: ArrayData): ArrayData = {
+    requireLen(v, m * dp, "query vector", "pq_adc_lut")
+    val out = new Array[Double](m * k)
+    var mi = 0
+    while (mi < m) {
+      val off = mi * dp
+      var ki = 0
+      while (ki < k) {
+        val coff = (mi * k + ki) * dp
+        var s = 0.0
+        var j = 0
+        while (j < dp) { val d = v.getDouble(off + j) - flat(coff + j); s += d * d; j += 1 }
+        out(mi * k + ki) = s
+        ki += 1
+      }
+      mi += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  def adcFromLut(m: Int, k: Int, lut: ArrayData, c: ArrayData): Double = {
+    requireLen(lut, m * k, "lut", "pq_adc_from_lut")
+    requireLen(c, m, "code", "pq_adc_from_lut")
+    var s = 0.0
+    var mi = 0
+    while (mi < m) { s += lut.getDouble(mi * k + code(c, mi, k, "pq_adc_from_lut")); mi += 1 }
+    s
+  }
+}
+
+/** PQ encode: array<double> vector -> array<short> code (one per subspace). */
+case class PQEncodeExpr(child: Expression, flat: Array[Double], m: Int, k: Int, dp: Int)
+    extends UnaryExpression with PQModelExpression {
+
+  override def dataType: DataType = ArrayType(ShortType, containsNull = false)
+  override def prettyName: String = "pq_encode_native"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    PQCheck.vecType(child.dataType, prettyName)
+
+  override protected def nullSafeEval(input: Any): Any =
+    PQKernels.encode(flat, m, k, dp, input.asInstanceOf[ArrayData])
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cb = cbRef(ctx)
-      val out = ctx.freshName("out")
-      val mi = ctx.freshName("mi")
-      val ki = ctx.freshName("ki")
-      val j = ctx.freshName("j")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      val coff = ctx.freshName("coff")
-      s"""
-        |${PQCheck.helper}.checkLen($a.numElements(), ${m * dp}, "vector", "$prettyName");
-        |short[] $out = new short[$m];
-        |for (int $mi = 0; $mi < $m; $mi++) {
-        |  int $best = 0; double $bestD = Double.MAX_VALUE;
-        |  for (int $ki = 0; $ki < $k; $ki++) {
-        |    int $coff = ($mi * $k + $ki) * $dp;
-        |    double $s = 0.0;
-        |    for (int $j = 0; $j < $dp; $j++) {
-        |      double $d = $a.getDouble($mi * $dp + $j) - $cb[$coff + $j];
-        |      $s += $d * $d;
-        |    }
-        |    if ($s < $bestD) { $bestD = $s; $best = $ki; }
-        |  }
-        |  $out[$mi] = (short) $best;
-        |}
-        |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-      """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a =>
+      s"${PQKernels.Name}.encode(${cbRef(ctx)}, $m, $k, $dp, $a)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -156,39 +221,12 @@ case class PQDecodeExpr(child: Expression, flat: Array[Double], m: Int, k: Int, 
   override def checkInputDataTypes(): TypeCheckResult =
     PQCheck.codeType(child.dataType, prettyName)
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val c = input.asInstanceOf[ArrayData]
-    PQCheck.requireLen(c, m, "code", prettyName)
-    val out = new Array[Double](m * dp)
-    var mi = 0
-    while (mi < m) {
-      val coff = (mi * k + c.getShort(mi)) * dp
-      var j = 0
-      while (j < dp) { out(mi * dp + j) = flat(coff + j); j += 1 }
-      mi += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    PQKernels.decode(flat, m, k, dp, input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cb = cbRef(ctx)
-      val out = ctx.freshName("out")
-      val mi = ctx.freshName("mi")
-      val j = ctx.freshName("j")
-      val coff = ctx.freshName("coff")
-      s"""
-        |${PQCheck.helper}.checkLen($a.numElements(), $m, "code", "$prettyName");
-        |double[] $out = new double[${m * dp}];
-        |for (int $mi = 0; $mi < $m; $mi++) {
-        |  int $coff = ($mi * $k + $a.getShort($mi)) * $dp;
-        |  for (int $j = 0; $j < $dp; $j++) {
-        |    $out[$mi * $dp + $j] = $cb[$coff + $j];
-        |  }
-        |}
-        |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-      """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a =>
+      s"${PQKernels.Name}.decode(${cbRef(ctx)}, $m, $k, $dp, $a)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -210,50 +248,12 @@ case class PQAdcExpr(left: Expression, right: Expression,
     else PQCheck.codeType(right.dataType, prettyName, "code (right)")
   }
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
-    val c = b.asInstanceOf[ArrayData]
-    PQCheck.requireLen(v, m * dp, "query vector", prettyName)
-    PQCheck.requireLen(c, m, "code", prettyName)
-    var s = 0.0
-    var mi = 0
-    while (mi < m) {
-      val coff = (mi * k + c.getShort(mi)) * dp
-      val off = mi * dp
-      var sub = 0.0
-      var j = 0
-      while (j < dp) { val d = v.getDouble(off + j) - flat(coff + j); sub += d * d; j += 1 }
-      s += sub
-      mi += 1
-    }
-    s
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    PQKernels.adc(flat, m, k, dp, a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val cb = cbRef(ctx)
-      val s = ctx.freshName("s")
-      val sub = ctx.freshName("sub")
-      val mi = ctx.freshName("mi")
-      val j = ctx.freshName("j")
-      val d = ctx.freshName("d")
-      val coff = ctx.freshName("coff")
-      s"""
-        |${PQCheck.helper}.checkLen($a.numElements(), ${m * dp}, "query vector", "$prettyName");
-        |${PQCheck.helper}.checkLen($b.numElements(), $m, "code", "$prettyName");
-        |double $s = 0.0;
-        |for (int $mi = 0; $mi < $m; $mi++) {
-        |  int $coff = ($mi * $k + $b.getShort($mi)) * $dp;
-        |  double $sub = 0.0;
-        |  for (int $j = 0; $j < $dp; $j++) {
-        |    double $d = $a.getDouble($mi * $dp + $j) - $cb[$coff + $j];
-        |    $sub += $d * $d;
-        |  }
-        |  $s += $sub;
-        |}
-        |${ev.value} = $s;
-      """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"${PQKernels.Name}.adc(${cbRef(ctx)}, $m, $k, $dp, $a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -276,47 +276,12 @@ case class PQSdcExpr(left: Expression, right: Expression,
     else PQCheck.codeType(right.dataType, prettyName, "code (right)")
   }
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    PQCheck.requireLen(x, m, "code", prettyName)
-    PQCheck.requireLen(y, m, "code", prettyName)
-    var s = 0.0
-    var mi = 0
-    while (mi < m) {
-      val ca = (mi * k + x.getShort(mi)) * dp
-      val cb = (mi * k + y.getShort(mi)) * dp
-      var j = 0
-      while (j < dp) { val d = flat(ca + j) - flat(cb + j); s += d * d; j += 1 }
-      mi += 1
-    }
-    s
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    PQKernels.sdc(flat, m, k, dp, a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val cb = cbRef(ctx)
-      val s = ctx.freshName("s")
-      val mi = ctx.freshName("mi")
-      val j = ctx.freshName("j")
-      val d = ctx.freshName("d")
-      val ca = ctx.freshName("ca")
-      val cbo = ctx.freshName("cbo")
-      s"""
-        |${PQCheck.helper}.checkLen($a.numElements(), $m, "code", "$prettyName");
-        |${PQCheck.helper}.checkLen($b.numElements(), $m, "code", "$prettyName");
-        |double $s = 0.0;
-        |for (int $mi = 0; $mi < $m; $mi++) {
-        |  int $ca = ($mi * $k + $a.getShort($mi)) * $dp;
-        |  int $cbo = ($mi * $k + $b.getShort($mi)) * $dp;
-        |  for (int $j = 0; $j < $dp; $j++) {
-        |    double $d = $cb[$ca + $j] - $cb[$cbo + $j];
-        |    $s += $d * $d;
-        |  }
-        |}
-        |${ev.value} = $s;
-      """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"${PQKernels.Name}.sdc(${cbRef(ctx)}, $m, $k, $dp, $a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -341,54 +306,12 @@ case class PQLutExpr(child: Expression, flat: Array[Double], m: Int, k: Int, dp:
   override def checkInputDataTypes(): TypeCheckResult =
     PQCheck.vecType(child.dataType, prettyName)
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    PQCheck.requireLen(v, m * dp, "query vector", prettyName)
-    val out = new Array[Double](m * k)
-    var mi = 0
-    while (mi < m) {
-      val off = mi * dp
-      var ki = 0
-      while (ki < k) {
-        val coff = (mi * k + ki) * dp
-        var s = 0.0
-        var j = 0
-        while (j < dp) { val d = v.getDouble(off + j) - flat(coff + j); s += d * d; j += 1 }
-        out(mi * k + ki) = s
-        ki += 1
-      }
-      mi += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    PQKernels.lut(flat, m, k, dp, input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val cb = cbRef(ctx)
-      val out = ctx.freshName("out")
-      val mi = ctx.freshName("mi")
-      val ki = ctx.freshName("ki")
-      val j = ctx.freshName("j")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      val coff = ctx.freshName("coff")
-      s"""
-        |${PQCheck.helper}.checkLen($a.numElements(), ${m * dp}, "query vector", "$prettyName");
-        |double[] $out = new double[${m * k}];
-        |for (int $mi = 0; $mi < $m; $mi++) {
-        |  for (int $ki = 0; $ki < $k; $ki++) {
-        |    int $coff = ($mi * $k + $ki) * $dp;
-        |    double $s = 0.0;
-        |    for (int $j = 0; $j < $dp; $j++) {
-        |      double $d = $a.getDouble($mi * $dp + $j) - $cb[$coff + $j];
-        |      $s += $d * $d;
-        |    }
-        |    $out[$mi * $k + $ki] = $s;
-        |  }
-        |}
-        |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-      """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a =>
+      s"${PQKernels.Name}.lut(${cbRef(ctx)}, $m, $k, $dp, $a)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -410,31 +333,11 @@ case class PQAdcLutExpr(left: Expression, right: Expression, m: Int, k: Int)
     else PQCheck.codeType(right.dataType, prettyName, "code (right)")
   }
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val lut = a.asInstanceOf[ArrayData]
-    val c = b.asInstanceOf[ArrayData]
-    PQCheck.requireLen(lut, m * k, "lut", prettyName)
-    PQCheck.requireLen(c, m, "code", prettyName)
-    var s = 0.0
-    var mi = 0
-    while (mi < m) { s += lut.getDouble(mi * k + c.getShort(mi)); mi += 1 }
-    s
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    PQKernels.adcFromLut(m, k, a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val s = ctx.freshName("s")
-      val mi = ctx.freshName("mi")
-      s"""
-        |${PQCheck.helper}.checkLen($a.numElements(), ${m * k}, "lut", "$prettyName");
-        |${PQCheck.helper}.checkLen($b.numElements(), $m, "code", "$prettyName");
-        |double $s = 0.0;
-        |for (int $mi = 0; $mi < $m; $mi++) {
-        |  $s += $a.getDouble($mi * $k + $b.getShort($mi));
-        |}
-        |${ev.value} = $s;
-      """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"${PQKernels.Name}.adcFromLut($m, $k, $a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

@@ -53,53 +53,33 @@ object HnswReplay {
     floor(-log(u) * lit(1.0 / math.log(m.toDouble))).cast("int")
   }
 
-  /** Idealized per-layer edges in ONE pass: broadcast the (id, level,
-    * vec) matrix, then each node computes its distance row once and
-    * selects top-m (top-m0 at layer 0) per layer it occupies, ties
-    * (dist, id)-ascending. Distance is the same ascending-index
-    * sequential sum as L2SqExpr / the oracle's list_sum, so ranks are
-    * bit-reproducible across engines. Returns (layer, src, dst).
+  /** Idealized per-layer edges in ONE pass: broadcast the node matrix
+    * and levels of [[LocalGraph.layeredNodes]], then each base row
+    * computes its distance row once and selects top-m (top-m0 at layer
+    * 0) per layer it occupies, ties (dist, id)-ascending. Distance is the
+    * same ascending-index sequential sum as L2SqExpr / the oracle's
+    * list_sum, so ranks are bit-reproducible across engines. Returns
+    * (layer, src, dst).
     */
-  private def idealEdges(base: DataFrame, m: Int, m0: Int): DataFrame = {
+  private def idealEdges(
+      base: DataFrame,
+      nodes: LocalGraph,
+      levels: Array[Int],
+      m: Int,
+      m0: Int
+  ): DataFrame = {
     val spark = base.sparkSession
     import spark.implicits._
-    val rows = base.select(col("id"), col("vec"), col("level"))
-      .as[(Long, Seq[Double], Int)]
-      .collect()
-      .sortBy(_._1)
-    require(rows.length <= LocalGraph.MaxAuditNodes,
-      s"idealEdges is the audit-scale path: ${rows.length} nodes > cap ${LocalGraph.MaxAuditNodes}")
-    require(rows.nonEmpty, "idealEdges on empty input")
-    val n = rows.length
-    val d = rows(0)._2.length
-    val ids = rows.map(_._1)
-    val lvls = rows.map(_._3)
-    val flat = new Array[Double](n * d)
-    var i = 0
-    while (i < n) {
-      val v = rows(i)._2
-      var t = 0
-      while (t < d) { flat(i * d + t) = v(t); t += 1 }
-      i += 1
-    }
-    val bc = spark.sparkContext.broadcast((ids, lvls, flat, d))
+    require(nodes.ids.nonEmpty, "idealEdges on empty input")
+    val bc = spark.sparkContext.broadcast((nodes, levels))
     base.select(col("id"), col("vec"), col("level"))
       .as[(Long, Seq[Double], Int)]
       .mapPartitions { it =>
-        val (ids, lvls, flat, d) = bc.value
+        val (g, lvls) = bc.value
+        val ids = g.ids
         val n = ids.length
         it.flatMap { case (sid, svecSeq, slvl) =>
-          val sv = svecSeq.toArray
-          val dist = new Array[Double](n)
-          var j = 0
-          while (j < n) {
-            var s = 0.0
-            var t = 0
-            val off = j * d
-            while (t < d) { val df = sv(t) - flat(off + t); s += df * df; t += 1 }
-            dist(j) = s
-            j += 1
-          }
+          val dist = Array.tabulate(n)(g.l2(svecSeq.toArray))
           (0 to math.min(slvl, MaxLevel)).iterator.flatMap { l =>
             val deg = if (l == 0) m0 else m
             // candidate indices at this layer, id-ascending, excl. self
@@ -128,17 +108,17 @@ object HnswReplay {
     *
     * `local` is the same artifact as one broadcast [[LocalGraph]] (ids,
     * flat vector matrix, per-layer adjacency) — legal at this component's
-    * declared audit scale (the edge build already collects and
-    * broadcasts the full matrix under [[LocalGraph.MaxAuditNodes]]), and it turns
-    * every |Q|-bounded search walk into ONE narrow mapPartitions pass
-    * instead of 10+ rounds of tiny joins/windows (guide §1.2 step 1:
-    * fix the distributed algorithm before anything else — the replay
-    * walks were paying per-round scheduling/shuffle machinery on
-    * kilobyte frontiers).
+    * declared audit scale ([[LocalGraph.MaxAuditNodes]]); the node matrix
+    * is the one the edge build collected, so a build collects the base
+    * table once. It turns every |Q|-bounded search walk into ONE narrow
+    * mapPartitions pass instead of 10+ rounds of tiny joins/windows
+    * (guide §1.2 step 1: fix the distributed algorithm before anything
+    * else — the replay walks were paying per-round scheduling/shuffle
+    * machinery on kilobyte frontiers).
     */
-  final case class LayeredIndex(base: DataFrame, edges: DataFrame) {
+  final case class LayeredIndex(base: DataFrame, edges: DataFrame)(nodes: LocalGraph) {
     @transient private[operators] lazy val local: Broadcast[LocalGraph] =
-      LocalGraph.layered(base, edges)
+      LocalGraph.layered(nodes, edges)
   }
 
   def buildLayered(
@@ -154,7 +134,8 @@ object HnswReplay {
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
       .withColumn("level", levelCol(col("id"), seed, mLevels))
       .localCheckpoint()
-    LayeredIndex(base, idealEdges(base, m, m0).localCheckpoint())
+    val (nodes, levels) = LocalGraph.layeredNodes(base)
+    LayeredIndex(base, idealEdges(base, nodes, levels, m, m0).localCheckpoint())(nodes)
   }
 
   /** Deterministic layered search replay over a prebuilt [[LayeredIndex]]:

@@ -201,22 +201,35 @@ private[operators] object LocalGraph {
     */
   val MaxAuditNodes = 200000
 
-  /** The HNSW replay index: nodes (id, vec, level), edges (layer, src,
-    * dst) — an edge naming an absent id or layer fails by name. Entry:
-    * the max-level node, ties to the smallest id. */
-  def layered(base: DataFrame, edges: DataFrame): Broadcast[LocalGraph] = {
+  /** The HNSW replay index's nodes (id, vec, level), collected once:
+    * the node matrix with no edges yet, and each node's level by index.
+    * Entry: the max-level node, ties to the smallest id. The edge build
+    * scores against this matrix, and [[layered]] adds its edges. */
+  def layeredNodes(base: DataFrame): (LocalGraph, Array[Int]) = {
     val rows = base.select(col("id"), col("vec"), col("level")).collect()
-    val top = rows.map(r => (r.getInt(2), r.getLong(0)))
-      .reduceOption((a, b) => if (a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)) a else b)
-    broadcast(base, assemble(
-      "LayeredIndex.local",
+    val levelOf = rows.iterator.map(r => r.getLong(0) -> r.getInt(2)).toMap
+    val g = assemble(
+      LayeredWhat,
       rows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)),
       HnswReplay.MaxLevel + 1,
+      Iterator.empty,
+      strict = true,
+      ids => if (ids.isEmpty) -1 else ids.indices.maxBy(i => levelOf(ids(i))))
+    (g, g.ids.map(levelOf))
+  }
+
+  /** The HNSW replay index: `nodes` from [[layeredNodes]] plus edges
+    * (layer, src, dst) — an edge naming an absent id or layer fails by
+    * name. */
+  def layered(nodes: LocalGraph, edges: DataFrame): Broadcast[LocalGraph] = {
+    val adj = adjacency(LayeredWhat, nodes.ids, nodes.adj.length,
       edges.select(col("layer"), col("src"), col("dst")).collect()
         .iterator.map(r => (r.getInt(0), r.getLong(1), r.getLong(2))),
-      strict = true,
-      ids => top.fold(-1)(t => java.util.Arrays.binarySearch(ids, t._2))))
+      strict = true)
+    broadcast(edges, new LocalGraph(nodes.ids, adj, nodes.flat, nodes.d, nodes.entry))
   }
+
+  private val LayeredWhat = "LayeredIndex.local"
 
   /** A one-layer vector graph: nodes `vecs` (idCol, vecCol), edges
     * `graph` (src, dst). An edge to or from an id with no vector row is
@@ -302,7 +315,18 @@ private[operators] object LocalGraph {
           s"id ${ids(first)} has width $d")
       System.arraycopy(v, 0, flat, i * d, d)
     }
-    val bufs = Array.fill(layers, n)(null: scala.collection.mutable.ArrayBuilder.ofInt)
+    new LocalGraph(ids, adjacency(what, ids, layers, edges, strict), flat, d, entry(ids))
+  }
+
+  /** Adjacency by layer and node index over the sorted `ids`. */
+  private def adjacency(
+      what: String,
+      ids: Array[Long],
+      layers: Int,
+      edges: Iterator[(Int, Long, Long)],
+      strict: Boolean
+  ): Array[Array[Array[Int]]] = {
+    val bufs = Array.fill(layers, ids.length)(null: scala.collection.mutable.ArrayBuilder.ofInt)
     edges.foreach { case (l, s, t) =>
       val si = java.util.Arrays.binarySearch(ids, s)
       val ti = java.util.Arrays.binarySearch(ids, t)
@@ -313,8 +337,7 @@ private[operators] object LocalGraph {
         s"$what: edge (layer=$l, src=$s, dst=$t) references a layer outside " +
           s"0..${layers - 1} or an id absent from the node table")
     }
-    val adj = bufs.map(_.map(b => if (b == null) Array.emptyIntArray else b.result().sorted.distinct))
-    new LocalGraph(ids, adj, flat, d, entry(ids))
+    bufs.map(_.map(b => if (b == null) Array.emptyIntArray else b.result().sorted.distinct))
   }
 
   /** `walk` over every query in ONE narrow mapPartitions pass against the
@@ -345,7 +368,9 @@ private[operators] object LocalGraph {
   /** Each node's PQ code by node index. Full coverage is part of the
     * contract: the relational walk's inner join against the code table
     * drops a codeless node, which a per-node scorer cannot express. A
-    * code whose id is not a node is never walked. */
+    * code whose id is not a node is never walked. Every code value is
+    * checked to lie in 0 until K here, once, so the walks' unchecked
+    * [[PQModel.adcFromLut]] never reads another subspace's LUT cell. */
   def codesByIndex(
       what: String,
       g: LocalGraph,
@@ -364,6 +389,11 @@ private[operators] object LocalGraph {
     require(bad < 0,
       s"$what: node id=${g.ids(math.max(bad, 0))} has no PQ code of length $m — " +
         "the code table must cover every index id")
+    for (i <- out.indices; mi <- 0 until m) {
+      val c = out(i)(mi)
+      require(c >= 0 && c < model.k,
+        s"$what: node id=${g.ids(i)} has code $c out of range for k=${model.k} (subspace $mi)")
+    }
     out
   }
 }

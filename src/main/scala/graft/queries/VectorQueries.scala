@@ -754,12 +754,13 @@ object VectorQueries {
       spark: org.apache.spark.sql.SparkSession,
       dir: String
   ): graft.operators.PQModel = {
+    // at most WPQK rows: sorted after the collect, not by a Spark sort
     val rows = t(spark, dir, "embeddings")
       .filter(col("vec_id") < WPQK)
-      .orderBy(col("vec_id"))
-      .select(toDouble(col("embedding")))
+      .select(col("vec_id"), toDouble(col("embedding")))
       .collect()
-      .map(_.getSeq[Double](0).toArray)
+      .sortBy(_.getLong(0))
+      .map(_.getSeq[Double](1).toArray)
     graft.operators.PQModel(
       WPQM, WPQK, rows(0).length,
       Array.tabulate(WPQM)(mi =>

@@ -133,6 +133,26 @@ class HnswReplaySpec extends SparkSpec {
     assert(adc == exact, "lossless-codebook ADC replay diverged from exact replay")
   }
 
+  test("searchReplayAdc: a code outside 0..K-1 fails by name when the code table loads") {
+    import graft.operators.{PQModel, ProductQuantizer}
+    val m = 8
+    val k = 16
+    val model = PQModel(m, k, 64, Array.fill(m)(Array.fill(k)(Array.fill(8)(0.5))))
+    for (bad <- Seq(k, -1)) {
+      val codes = emb.select(
+        col("vec_id").as("cid"),
+        when(col("vec_id") === 3L,
+          array((0 until m).map(i => lit(if (i == 1) bad else 0).cast("smallint")): _*))
+          .otherwise(ProductQuantizer.encodeCol(model, col("vec"))).as("code"))
+      val e = intercept[IllegalArgumentException] {
+        HnswReplay.searchReplayAdc(layered, codes, model, q, "query_id", "qv",
+          k = 10, ef = 16, greedyRounds = 2, beamRounds = 4).collect()
+      }
+      assert(e.getMessage.contains(s"id=3 has code $bad out of range for k=$k (subspace 1)"),
+        e.getMessage)
+    }
+  }
+
   test("searchReplayAdc: lossy fixed codebook — valid top-k shape, self found, recall floor") {
     import graft.operators.{PQModel, ProductQuantizer}
     val rows = emb.filter(col("vec_id") < 16).orderBy(col("vec_id"))

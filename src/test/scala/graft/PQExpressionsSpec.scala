@@ -247,6 +247,37 @@ class PQExpressionsSpec extends SparkSpec {
     assert(e2.getMessage.contains("pq_decode_native"), e2.getMessage)
   }
 
+  test("out-of-range codes fail by name, code = K and -1: interpreted eval and DataFrame") {
+    val good = model.encodeVec(vecs.head)
+    val q = vecs(1)
+    val lut = model.adcLut(q)
+    for (bad <- Seq(K, -1)) {
+      // subspace 1: not the last, so a missing check reads a neighbour
+      // subspace's cell silently instead of running off the array
+      val code = good.updated(1, bad.toShort)
+      val want = s"code $bad out of range for k=$K (subspace 1)"
+      def fails(what: String)(run: => Any): Unit = {
+        val e = intercept[Exception](run)
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .map(t => Option(t.getMessage).getOrElse("")).toList
+        assert(msgs.exists(_.contains(want)), s"$what, code $bad: $msgs")
+      }
+      fails("decode eval")(PQDecodeExpr(codeLit(code), flat, M, K, DP).eval(InternalRow.empty))
+      fails("adc eval")(PQAdcExpr(vecLit(q), codeLit(code), flat, M, K, DP).eval(InternalRow.empty))
+      fails("sdc eval")(PQSdcExpr(codeLit(good), codeLit(code), flat, M, K, DP).eval(InternalRow.empty))
+      fails("adc_from_lut eval")(PQAdcLutExpr(vecLit(lut), codeLit(code), M, K).eval(InternalRow.empty))
+      // repartition: keeps the projection off the local-relation fold, in codegen
+      val df = Seq((0, code.toSeq)).toDF("id", "c").repartition(1)
+      fails("decode DataFrame")(df.select(ProductQuantizer.decodeCol(model, col("c"))).collect())
+      fails("adc DataFrame")(
+        df.select(ProductQuantizer.adcCol(model, typedLit(q.toSeq), col("c"))).collect())
+      fails("sdc DataFrame")(
+        df.select(ProductQuantizer.sdcCol(model, typedLit(good.toSeq), col("c"))).collect())
+      fails("adc_from_lut DataFrame")(
+        df.select(ProductQuantizer.adcFromLutCol(model, typedLit(lut.toSeq), col("c"))).collect())
+    }
+  }
+
   test("runtime length validation: wrong-length vector errors, no unsafe read") {
     val df = Seq((1, Seq(1.0, 2.0))).toDF("id", "v") // D=16 expected
     val e = intercept[Exception] {
