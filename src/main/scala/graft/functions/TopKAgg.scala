@@ -2,12 +2,13 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.{col, posexplode}
 import org.apache.spark.sql.types._
 
 /** Bounded max-heap of (dist, id) pairs keeping the k smallest under the
@@ -142,6 +143,13 @@ case class TopKAgg(
     copy(dist = newChildren(0), id = newChildren(1))
 }
 
+/** The one top-k-per-key operator. Every site that turns a [[topK]] heap
+  * into ranked rows calls [[bestPer]]; none spells the heap's explode
+  * itself, and a source guard in TopKAggSpec keeps it so. Callers keep
+  * their own final `select` for renames, negations, rounding and the
+  * `rnk` width. Sites that fill several heaps in one aggregate (one per
+  * recall cut) or carry other aggregates beside the heap stay as they are.
+  */
 object TopKAgg {
 
   /** Column: k smallest (dist, id) pairs ascending, as an aggregate. */
@@ -153,4 +161,27 @@ object TopKAgg {
         k
       ).toAggregateExpression()
     )
+
+  /** The best `k` rows of `df` per `keys` by (score, id) ascending, with
+    * [[TopKBuffer]]'s order (NaN last, -0.0 ties 0.0): the bounded-heap
+    * aggregate (partial aggregation before the shuffle), then one row per
+    * kept entry. Returns `(keys…, <id>: bigint, dist: double, rnk: int)`
+    * with `dist` the score and `rnk` 1..n, n = min(k, group size).
+    */
+  def bestPer(
+      df: DataFrame,
+      keys: Seq[String],
+      score: Column,
+      id: String,
+      k: Int
+  ): DataFrame = {
+    val keyCols = keys.map(col)
+    df.groupBy(keyCols: _*)
+      .agg(topK(score, col(id), k).as("tk"))
+      .select(keyCols :+ posexplode(col("tk")).as(Seq("pos", "e")): _*)
+      .select(keyCols ++ Seq(
+        col("e.id").as(id),
+        col("e.dist").as("dist"),
+        (col("pos") + 1).cast("int").as("rnk")): _*)
+  }
 }

@@ -1,10 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.TopKAgg.topK
+import graft.functions.TopKAgg.bestPer
 import graft.functions.VectorExpressions._
 
 /** Exact k-nearest-neighbor search by full scan — the correctness oracle
@@ -20,31 +19,14 @@ import graft.functions.VectorExpressions._
   * ([[graft.functions.TopKAgg]]): each partition reduces to k rows per
   * query *before* the shuffle (partial aggregation), so shuffle volume is
   * O(|Q|·k·partitions) instead of the O(|Q|·|B|) a rank window would sort.
-  * [[knnWindow]] keeps the window formulation for comparison.
+  * The rank-window formulation lives in src/test (`BruteForceWindow`),
+  * where VectorFunctionsSpec checks heap == window.
   *
   * Results are `(query_id, neighbor_id, dist, rnk)` ascending by
   * `(dist, neighbor_id)` — squared L2, stable tie-break on id, matching the
   * reference's stable sort (ref: py/bruteforce.py:17).
   */
 object BruteForceKNN {
-
-  private def explodeTopK(
-      grouped: DataFrame,
-      qidCol: String,
-      bidCol: String,
-      valName: String,
-      negate: Boolean
-  ): DataFrame = {
-    val v = col("e.dist")
-    grouped
-      .select(col(qidCol), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(
-        col(qidCol),
-        col("e.id").as(bidCol),
-        (if (negate) -v else v).as(valName),
-        (col("pos") + 1).cast("int").as("rnk")
-      )
-  }
 
   /** Exact top-k similarity join by squared L2 (bounded-heap aggregate). */
   def knn(
@@ -56,11 +38,8 @@ object BruteForceKNN {
       bidCol: String = "neighbor_id",
       bvecCol: String = "bv"
   ): DataFrame = {
-    val grouped = base
-      .join(broadcast(queries))
-      .groupBy(col(qidCol))
-      .agg(topK(l2SqFast(col(qvecCol), col(bvecCol)), col(bidCol), k).as("tk"))
-    explodeTopK(grouped, qidCol, bidCol, "dist", negate = false)
+    bestPer(base.join(broadcast(queries)), Seq(qidCol),
+      l2SqFast(col(qvecCol), col(bvecCol)), bidCol, k)
   }
 
   /** Same, by cosine similarity descending (ties broken by ascending id) —
@@ -78,16 +57,10 @@ object BruteForceKNN {
   ): DataFrame = {
     val qn = queries.withColumn("qnorm", sqrt(dotFast(col(qvecCol), col(qvecCol))))
     val bn = base.withColumn("bnorm", sqrt(dotFast(col(bvecCol), col(bvecCol))))
-    val grouped = bn
-      .join(broadcast(qn))
-      .groupBy(col(qidCol))
-      .agg(
-        topK(
-          -(dotFast(col(qvecCol), col(bvecCol)) / (col("qnorm") * col("bnorm"))),
-          col(bidCol), k
-        ).as("tk")
-      )
-    explodeTopK(grouped, qidCol, bidCol, "sim", negate = true)
+    bestPer(bn.join(broadcast(qn)), Seq(qidCol),
+      -(dotFast(col(qvecCol), col(bvecCol)) / (col("qnorm") * col("bnorm"))),
+      bidCol, k)
+      .select(col(qidCol), col(bidCol), (-col("dist")).as("sim"), col("rnk"))
   }
 
   /** Same, by inner product descending (MIPS — the retrieval similarity
@@ -105,11 +78,9 @@ object BruteForceKNN {
       bidCol: String = "neighbor_id",
       bvecCol: String = "bv"
   ): DataFrame = {
-    val grouped = base
-      .join(broadcast(queries))
-      .groupBy(col(qidCol))
-      .agg(topK(-dotFast(col(qvecCol), col(bvecCol)), col(bidCol), k).as("tk"))
-    explodeTopK(grouped, qidCol, bidCol, "dot", negate = true)
+    bestPer(base.join(broadcast(queries)), Seq(qidCol),
+      -dotFast(col(qvecCol), col(bvecCol)), bidCol, k)
+      .select(col(qidCol), col(bidCol), (-col("dist")).as("dot"), col("rnk"))
   }
 
   /** Radius (range) search: every (query, neighbor) pair within squared-L2
@@ -155,11 +126,8 @@ object BruteForceKNN {
       bvecCol: String = "bv",
       bkeyCol: String = "bkey"
   ): DataFrame = {
-    val grouped = base
-      .join(broadcast(queries), col(qkeyCol) === col(bkeyCol))
-      .groupBy(col(qidCol))
-      .agg(topK(l2SqFast(col(qvecCol), col(bvecCol)), col(bidCol), k).as("tk"))
-    explodeTopK(grouped, qidCol, bidCol, "dist", negate = false)
+    bestPer(base.join(broadcast(queries), col(qkeyCol) === col(bkeyCol)),
+      Seq(qidCol), l2SqFast(col(qvecCol), col(bvecCol)), bidCol, k)
   }
 
   /** Maximal-Marginal-Relevance diversified top-k (Carbonell & Goldstein
@@ -247,17 +215,22 @@ object BruteForceKNN {
       .toDF(qidCol, bidCol, "mmr_rnk")
   }
 
+  /** The (query blocks, base blocks) grid of [[knnShuffled]], 4 × 8 = 32
+    * independent join tasks. One grid for every caller: no caller names
+    * a block count. */
+  val ShuffledGrid: (Int, Int) = (4, 8)
+
   /** Exact kNN for LARGE query batches — the both-sides-big regime where
     * [[knn]]'s broadcast of the query batch no longer fits an executor.
-    * Classic 2-D block grid: queries hash into `qBlocks` groups, base into
-    * `bBlocks`, each side replicated across the other's axis, and the
-    * equi-join on the composite (qblk, bblk) key creates qBlocks·bBlocks
-    * independent tasks each holding |Q|/qBlocks queries × |B|/bBlocks base
-    * rows. Shuffle volume is |B|·qBlocks + |Q|·bBlocks — both tunable —
-    * and NOTHING broadcasts except the two block-id tables; per-task
-    * memory is a block of each side, not a whole side. The bounded heap
-    * still reduces every task to k rows per query before the merge
-    * exchange, so the second shuffle stays O(|Q|·k·blocks).
+    * Classic 2-D block grid ([[ShuffledGrid]]): queries hash into
+    * `qBlocks` groups, base into `bBlocks`, each side replicated across the
+    * other's axis, and the equi-join on the composite (qblk, bblk) key
+    * creates qBlocks·bBlocks independent tasks each holding |Q|/qBlocks
+    * queries × |B|/bBlocks base rows. Shuffle volume is |B|·qBlocks +
+    * |Q|·bBlocks, and NOTHING broadcasts except the two block-id tables;
+    * per-task memory is a block of each side, not a whole side. The
+    * bounded heap still reduces every task to k rows per query before the
+    * merge exchange, so the second shuffle stays O(|Q|·k·blocks).
     *
     * Identical results to [[knn]] (spec-gated): same distance expression,
     * same heap, same tie-breaks — only the data placement differs.
@@ -266,13 +239,12 @@ object BruteForceKNN {
       queries: DataFrame,
       base: DataFrame,
       k: Int,
-      qBlocks: Int = 8,
-      bBlocks: Int = 8,
       qidCol: String = "query_id",
       qvecCol: String = "qv",
       bidCol: String = "neighbor_id",
       bvecCol: String = "bv"
   ): DataFrame = {
+    val (qBlocks, bBlocks) = ShuffledGrid
     // axis replication is an explode of a literal int array — a Generate
     // node, no join and no broadcast anywhere in the plan
     val qrep = queries
@@ -281,11 +253,8 @@ object BruteForceKNN {
     val brep = base
       .withColumn("bblk", pmod(hash(col(bidCol)), lit(bBlocks)))
       .withColumn("qblk", explode(typedLit((0 until qBlocks).toList)))
-    val grouped = brep
-      .join(qrep.hint("shuffle_hash"), Seq("qblk", "bblk"))
-      .groupBy(col(qidCol))
-      .agg(topK(l2SqFast(col(qvecCol), col(bvecCol)), col(bidCol), k).as("tk"))
-    explodeTopK(grouped, qidCol, bidCol, "dist", negate = false)
+    bestPer(brep.join(qrep.hint("shuffle_hash"), Seq("qblk", "bblk")),
+      Seq(qidCol), l2SqFast(col(qvecCol), col(bvecCol)), bidCol, k)
   }
 
   /** ColBERT-style late-interaction retrieval (Khattab & Zaharia 2020):
@@ -321,12 +290,9 @@ object BruteForceKNN {
       didCol: String = "doc_id",
       dtoksCol: String = "dtoks"
   ): DataFrame = {
-    val score = maxSimFast(col(qtoksCol), col(dtoksCol))
-    val grouped = docs
-      .join(broadcast(queries))
-      .groupBy(col(qidCol))
-      .agg(topK(-score, col(didCol), k).as("tk"))
-    explodeTopK(grouped, qidCol, didCol, "score", negate = true)
+    bestPer(docs.join(broadcast(queries)), Seq(qidCol),
+      -maxSimFast(col(qtoksCol), col(dtoksCol)), didCol, k)
+      .select(col(qidCol), col(didCol), (-col("dist")).as("score"), col("rnk"))
   }
 
   /** Retrieve-then-rerank: pooled-vector shortlist, late-interaction
@@ -356,14 +322,13 @@ object BruteForceKNN {
       docs.select(col(didCol).as("nid"), col(bvecCol)),
       kShort, qidCol, qvecCol, "nid", bvecCol
     ).select(col(qidCol), col("nid"))
-    val grouped = docs
+    val pairs = docs
       .select(col(didCol), col(dtoksCol))
       .join(broadcast(shortlist), col(didCol) === col("nid"))
       .join(broadcast(queries.select(col(qidCol).as("qq"), col(qtoksCol))),
         col("qq") === col(qidCol))
-      .groupBy(col(qidCol))
-      .agg(topK(-maxSimFast(col(qtoksCol), col(dtoksCol)), col(didCol), k).as("tk"))
-    explodeTopK(grouped, qidCol, didCol, "score", negate = true)
+    bestPer(pairs, Seq(qidCol), -maxSimFast(col(qtoksCol), col(dtoksCol)), didCol, k)
+      .select(col(qidCol), col(didCol), (-col("dist")).as("score"), col("rnk"))
   }
 
   /** Matryoshka (MRL) two-stage retrieval: a coarse exact kNN over the
@@ -395,34 +360,10 @@ object BruteForceKNN {
       base.select(col(bidCol).as("nid"), slice(col(bvecCol), 1, dPrefix).as(bvecCol)),
       kShort, qidCol, qvecCol, "nid", bvecCol
     ).select(col(qidCol), col("nid"))
-    val grouped = base
+    val pairs = base
       .join(broadcast(shortlist), col(bidCol) === col("nid"))
       .join(broadcast(queries.select(col(qidCol).as("qq"), col(qvecCol))),
         col("qq") === col(qidCol))
-      .groupBy(col(qidCol))
-      .agg(topK(l2SqFast(col(qvecCol), col(bvecCol)), col(bidCol), k).as("tk"))
-    explodeTopK(grouped, qidCol, bidCol, "dist", negate = false)
-  }
-
-  /** Rank-window formulation of [[knn]] — same results, kept for plan
-    * comparison and small inputs.
-    */
-  def knnWindow(
-      queries: DataFrame,
-      base: DataFrame,
-      k: Int,
-      qidCol: String = "query_id",
-      qvecCol: String = "qv",
-      bidCol: String = "neighbor_id",
-      bvecCol: String = "bv"
-  ): DataFrame = {
-    val pairs = base
-      .join(broadcast(queries))
-      .withColumn("dist", l2SqFast(col(qvecCol), col(bvecCol)))
-    val w = Window.partitionBy(col(qidCol)).orderBy(col("dist"), col(bidCol))
-    pairs
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col(qidCol), col(bidCol), col("dist"), col("rnk"))
+    bestPer(pairs, Seq(qidCol), l2SqFast(col(qvecCol), col(bvecCol)), bidCol, k)
   }
 }

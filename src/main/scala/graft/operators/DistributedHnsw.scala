@@ -6,7 +6,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TopKAgg.topK
+import graft.functions.TopKAgg.bestPer
 
 /** Sharded HNSW over Spark (SURVEY.md §3.1-3.2 "Spark shape", M5).
   *
@@ -584,7 +584,7 @@ object DistributedHnsw {
       .as[(Int, Long, Int)]
       .rdd.map { case (s, ep, h) => (s, (ep, h)) }
     val efArr = efs.toArray
-    base.cogroup(edges, entries, queries)
+    val walked = base.cogroup(edges, entries, queries)
       .flatMap { case (_, (nodes, es, ens, qs)) =>
         if (nodes.isEmpty || ens.isEmpty || qs.isEmpty) Iterator.empty
         else {
@@ -610,17 +610,11 @@ object DistributedHnsw {
         }
       }
       .toDF("ef", "query_id", "neighbor_id", "dist")
-      .groupBy(col("ef"), col("query_id"))
-      .agg(topK(col("dist"), col("neighbor_id"), k).as("tk"))
-      .select(col("ef"), col("query_id"),
-        posexplode(col("tk")).as(Seq("pos", "e")))
+    bestPer(walked, Seq("ef", "query_id"), col("dist"), "neighbor_id", k)
       .select(
         col("ef").cast("long").as("ef"),
         col("query_id").as(qidCol),
-        col("e.id").as("neighbor_id"),
-        col("e.dist").as("dist"),
-        (col("pos") + 1).cast("int").as("rnk")
-      )
+        col("neighbor_id"), col("dist"), col("rnk"))
   }
 }
 

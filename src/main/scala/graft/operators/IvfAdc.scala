@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TopKAgg.topK
+import graft.functions.TopKAgg.bestPer
 
 /** IVFADC — the coarse-quantizer + PQ-residual composition (Jégou et al.
   * 2011 §IV, the canonical billion-scale ANN layout; composes the
@@ -168,20 +168,13 @@ object IvfAdc {
         col("cell"), col(qidCol),
         ProductQuantizer.lutCol(model, col("qresid")).as("lut")
       )
-    index
+    val scored = index
       .join(luts, "cell")
       .withColumn(
         "dist",
         ProductQuantizer.adcFromLutCol(model, col("lut"), col("code")))
-      .groupBy(col(qidCol))
-      .agg(topK(col("dist"), col("id"), k).as("tk"))
-      .select(col(qidCol), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(
-        col(qidCol),
-        col("e.id").as("neighbor_id"),
-        col("e.dist").as("dist"),
-        (col("pos") + 1).cast("int").as("rnk")
-      )
+    bestPer(scored, Seq(qidCol), col("dist"), "id", k)
+      .withColumnRenamed("id", "neighbor_id")
   }
 
   /** IVFADC+R — ADC shortlist + exact refine (Jégou et al. 2011 §V's
@@ -211,7 +204,7 @@ object IvfAdc {
     require(kShort >= k, s"shortlist $kShort must be >= k $k")
     val short = search(
       spark, index, queries, qidCol, qvecCol, centroids, model, kShort, nprobe)
-    short
+    val pairs = short
       .join(queries.select(col(qidCol), col(qvecCol)), qidCol)
       .join(
         raw.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec")),
@@ -219,15 +212,7 @@ object IvfAdc {
       .withColumn(
         "xdist",
         graft.functions.VectorExpressions.l2SqFast(col(qvecCol), col("nvec")))
-      .groupBy(col(qidCol))
-      .agg(topK(col("xdist"), col("neighbor_id"), k).as("tk"))
-      .select(col(qidCol), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(
-        col(qidCol),
-        col("e.id").as("neighbor_id"),
-        col("e.dist").as("dist"),
-        (col("pos") + 1).cast("int").as("rnk")
-      )
+    bestPer(pairs, Seq(qidCol), col("xdist"), "neighbor_id", k)
   }
 
   /** Partition-pruned search against a [[build]]-written index: the

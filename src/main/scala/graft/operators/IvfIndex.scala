@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TopKAgg.topK
+import graft.functions.TopKAgg.{bestPer, topK}
 import graft.functions.VectorExpressions._
 
 /** IVF (inverted-file) approximate nearest neighbor — the bucketed scale
@@ -385,17 +385,9 @@ object IvfIndex {
       qvecCol: String,
       k: Int
   ): DataFrame =
-    base
-      .join(probes, "cell")
-      .groupBy(col(qidCol))
-      .agg(topK(l2SqFast(col(qvecCol), col("vec")), col("id"), k).as("tk"))
-      .select(col(qidCol), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(
-        col(qidCol),
-        col("e.id").as("neighbor_id"),
-        col("e.dist").as("dist"),
-        (col("pos") + 1).cast("int").as("rnk")
-      )
+    bestPer(base.join(probes, "cell"), Seq(qidCol),
+      l2SqFast(col(qvecCol), col("vec")), "id", k)
+      .withColumnRenamed("id", "neighbor_id")
 
   /** Approximate top-k against a [[build]]-written index with PARTITION
     * PRUNING: the distinct probed cells (≤ nCells ints — a bounded

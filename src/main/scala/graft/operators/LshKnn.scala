@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.TopKAgg.topK
+import graft.functions.TopKAgg.{bestPer, topK}
 import graft.functions.VectorExpressions._
 
 /** SRP-LSH approximate top-k cosine search — the FIFTH ANN index family
@@ -193,18 +193,13 @@ object LshKnn {
       col(qidCol).as("qid"),
       col(qvecCol).cast("array<double>").as("qv"))
       .withColumn("qnorm", sqrt(dotFast(col("qv"), col("qv"))))
-    cand
-      .join(bv, "bid")
-      .join(broadcast(qv), "qid")
-      .groupBy(col("qid"))
-      .agg(topK(
-        -(dotFast(col("qv"), col("bv")) / (col("qnorm") * col("bnorm"))),
-        col("bid"), k).as("tk"))
-      .select(col("qid"), posexplode(col("tk")).as(Seq("pos", "e")))
+    bestPer(cand.join(bv, "bid").join(broadcast(qv), "qid"), Seq("qid"),
+      -(dotFast(col("qv"), col("bv")) / (col("qnorm") * col("bnorm"))),
+      "bid", k)
       .select(
         col("qid").as("query_id"),
-        col("e.id").as("neighbor_id"),
-        (-col("e.dist")).as("sim"),
-        (col("pos") + 1).cast("int").as("rnk"))
+        col("bid").as("neighbor_id"),
+        (-col("dist")).as("sim"),
+        col("rnk"))
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.TopKAgg.topK
+import graft.functions.TopKAgg.bestPer
 import graft.functions.VectorExpressions.l2SqFast
 
 /** NN-Descent (Dong et al. 2011, "Efficient k-nearest neighbor graph
@@ -22,7 +22,7 @@ import graft.functions.VectorExpressions.l2SqFast
   *      Per-node candidates are bounded by (2k)², never by N;
   *   3. score candidates with the codegen L2² over a two-sided vector
   *      join, union the current edges, collapse duplicates, and keep the
-  *      best k per node with the bounded-heap [[topK]] aggregate (ties
+  *      best k per node with the bounded-heap [[bestPer]] aggregate (ties
   *      (dist, id) — total order, so every iteration is reproducible).
   *
   * Convergence follows the paper: each round propagates neighborhood
@@ -132,7 +132,8 @@ object NNDescent {
         .unionAll(g.select(col("src"), col("dst"), col("dist")))
         .groupBy(col("src"), col("dst"))
         .agg(min(col("dist")).as("dist"))
-      g = bestPer(merged, "src", "dst", k)
+      g = bestPer(merged, Seq("src"), col("dist"), "dst", k)
+        .withColumn("rnk", col("rnk").cast("long"))
       // the loop references g three times (two undirect arms + merge):
       // truncate the lineage each round or the plan tree grows 3^it
       if (truncateLineage) g = g.localCheckpoint()
@@ -320,14 +321,4 @@ object NNDescent {
       .join(v.select(col("id").as("dst"), col("vec").as("dv")), "dst")
       .select(
         col("src"), col("dst"), l2SqFast(col("sv"), col("dv")).as("dist"))
-
-  /** The best `k` rows by (dist, id) per `key` — the bounded-heap [[topK]]
-    * merge — as (key, id, dist, rnk), rnk 1..k. */
-  private def bestPer(df: DataFrame, key: String, id: String, k: Int): DataFrame =
-    df.groupBy(col(key))
-      .agg(topK(col("dist"), col(id), k).as("tk"))
-      .select(col(key), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(
-        col(key), col("e.id").as(id), col("e.dist").as("dist"),
-        (col("pos") + 1).cast("long").as("rnk"))
 }

@@ -480,7 +480,7 @@ object RpTree {
       spill: Double
   ): DataFrame = {
     import graft.functions.VectorExpressions.l2SqFast
-    import graft.functions.TopKAgg.topK
+    import graft.functions.TopKAgg.bestPer
     val q = queries.select(
       col(qidCol).cast("long").as("qid"),
       col(qvecCol).cast("array<double>").as("qvec"))
@@ -495,19 +495,17 @@ object RpTree {
       .join(forest.leaves, Seq("tree", "leaf"))
       .select(col("qid"), col("id"))
       .distinct()
-    cand
+    val pairs = cand
       .join(v, "id")
       .join(broadcast(q), "qid")
       .select(col("qid"), col("id"),
         l2SqFast(col("qvec"), col("vec")).as("dist"))
-      .groupBy(col("qid"))
-      .agg(topK(col("dist"), col("id"), k).as("tk"))
-      .select(col("qid"), posexplode(col("tk")).as(Seq("pos", "e")))
+    bestPer(pairs, Seq("qid"), col("dist"), "id", k)
       .select(
         col("qid").as("query_id"),
-        col("e.id").as("neighbor_id"),
-        col("e.dist").as("dist"),
-        (col("pos") + 1).cast("long").as("rnk"))
+        col("id").as("neighbor_id"),
+        col("dist"),
+        col("rnk").cast("long").as("rnk"))
   }
 
   /** Recall-vs-spill OPERATING CURVE — the forest family's measured
@@ -607,7 +605,7 @@ object RpTree {
       dim: Int
   ): DataFrame = {
     import graft.functions.VectorExpressions.l2SqFast
-    import graft.functions.TopKAgg.topK
+    import graft.functions.TopKAgg.bestPer
     val q = queries.select(
       col(qidCol).cast("long").as("qid"),
       col(qvecCol).cast("array<double>").as("qvec"))
@@ -622,18 +620,16 @@ object RpTree {
       .join(forest.leaves, Seq("tree", "leaf"))
       .select(col("qid"), col("id"))
       .distinct() // forest union: a point in the query's leaf of 2 trees scores once
-    cand
+    val pairs = cand
       .join(v, "id")
       .join(broadcast(q), "qid")
       .select(col("qid"), col("id"),
         l2SqFast(col("qvec"), col("vec")).as("dist"))
-      .groupBy(col("qid"))
-      .agg(topK(col("dist"), col("id"), k).as("tk"))
-      .select(col("qid"), posexplode(col("tk")).as(Seq("pos", "e")))
+    bestPer(pairs, Seq("qid"), col("dist"), "id", k)
       .select(
         col("qid").as("query_id"),
-        col("e.id").as("neighbor_id"),
-        col("e.dist").as("dist"),
-        (col("pos") + 1).cast("long").as("rnk"))
+        col("id").as("neighbor_id"),
+        col("dist"),
+        col("rnk").cast("long").as("rnk"))
   }
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.TopKAgg.bestPer
 import graft.functions.VectorFunctions._
 import graft.operators.BinaryQuantizer
 import Q._
@@ -99,14 +100,12 @@ object BQQueries {
       qidCol: String
   ): org.apache.spark.sql.DataFrame = {
     val fast = graft.functions.VectorExpressions
-    joined
+    val est = joined
       .withColumn("s", fast.bitSignDotFast(col("words"), col("rq")))
       .withColumn("est", col("nx") * (col("s") / lit(8.0)) / col("corr"))
       .withColumn("d2est", col("n2q") + col("n2x") - lit(2.0) * col("est"))
-      .groupBy(col(qidCol))
-      .agg(graft.functions.TopKAgg
-        .topK(col("d2est"), col("nid"), RKS).as("tk"))
-      .select(col(qidCol).as("query_id"), explode(col("tk.id")).as("nid"))
+    bestPer(est, Seq(qidCol), col("d2est"), "nid", RKS)
+      .select(col(qidCol).as("query_id"), col("nid"))
   }
 
   /** Exact L2² rerank of the broadcast shortlist, top-K per query. */
@@ -118,20 +117,17 @@ object BQQueries {
     val q = emb
       .filter(col("vec_id") % 10 === 0)
       .select(col("vec_id").as("qq2"), col("vec").as("qv"))
-    emb
+    val pairs = emb
       .select(col("vec_id").as("neighbor_id"), col("vec").as("bv"))
       .join(broadcast(shortlist), col("neighbor_id") === col("nid"))
       .join(broadcast(q), col("qq2") === col("query_id"))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopKAgg
-        .topK(fast.l2SqFast(col("qv"), col("bv")), col("neighbor_id"), K)
-        .as("tk"))
-      .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
+    bestPer(pairs, Seq("query_id"), fast.l2SqFast(col("qv"), col("bv")),
+      "neighbor_id", K)
       .select(
         col("query_id"),
-        col("e.id").as("neighbor_id"),
-        round(col("e.dist"), 4).as("dist"),
-        (col("pos") + 1).cast("long").as("rnk")
+        col("neighbor_id"),
+        round(col("dist"), 4).as("dist"),
+        col("rnk").cast("long").as("rnk")
       )
   }
 
@@ -219,7 +215,7 @@ object BQQueries {
         val q = codes
           .filter(col("vec_id") % 10 === 0)
           .select(col("vec_id").as("query_id"), col("words").as("qw"))
-        codes
+        val pairs = codes
           .select(col("vec_id").as("neighbor_id"), col("words").as("cw"))
           .join(broadcast(q))
           .withColumn(
@@ -227,15 +223,12 @@ object BQQueries {
             expr("aggregate(zip_with(qw, cw, (x, y) -> bit_count(x ^ y)), 0, (acc, h) -> acc + h)")
               .cast("double")
           )
-          .groupBy(col("query_id"))
-          .agg(graft.functions.TopKAgg
-            .topK(col("dist"), col("neighbor_id"), K).as("tk"))
-          .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
+        bestPer(pairs, Seq("query_id"), col("dist"), "neighbor_id", K)
           .select(
             col("query_id"),
-            col("e.id").as("neighbor_id"),
-            col("e.dist").cast("long").as("dist"),
-            (col("pos") + 1).cast("long").as("rnk")
+            col("neighbor_id"),
+            col("dist").cast("long").as("dist"),
+            col("rnk").cast("long").as("rnk")
           )
       },
       Some(s"""
@@ -271,7 +264,7 @@ object BQQueries {
         val qc = codes
           .filter(col("vec_id") % 10 === 0)
           .select(col("vec_id").as("query_id"), col("words").as("qw"))
-        val shortlist = codes
+        val hamming = codes
           .select(col("vec_id").as("nid"), col("words").as("cw"))
           .join(broadcast(qc))
           .withColumn(
@@ -279,27 +272,22 @@ object BQQueries {
             expr("aggregate(zip_with(qw, cw, (x, y) -> bit_count(x ^ y)), 0, (acc, h) -> acc + h)")
               .cast("double")
           )
-          .groupBy(col("query_id"))
-          .agg(graft.functions.TopKAgg
-            .topK(col("hdist"), col("nid"), 30).as("tk"))
-          .select(col("query_id"), explode(col("tk.id")).as("nid"))
+        val shortlist = bestPer(hamming, Seq("query_id"), col("hdist"), "nid", 30)
+          .select(col("query_id"), col("nid"))
         val q = emb
           .filter(col("vec_id") % 10 === 0)
           .select(col("vec_id").as("qq"), col("vec").as("qv"))
-        emb
+        val pairs = emb
           .select(col("vec_id").as("neighbor_id"), col("vec").as("bv"))
           .join(broadcast(shortlist), col("neighbor_id") === col("nid"))
           .join(broadcast(q), col("qq") === col("query_id"))
-          .groupBy(col("query_id"))
-          .agg(graft.functions.TopKAgg
-            .topK(fast.l2SqFast(col("qv"), col("bv")), col("neighbor_id"), K)
-            .as("tk"))
-          .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
+        bestPer(pairs, Seq("query_id"), fast.l2SqFast(col("qv"), col("bv")),
+          "neighbor_id", K)
           .select(
             col("query_id"),
-            col("e.id").as("neighbor_id"),
-            round(col("e.dist"), 4).as("dist"),
-            (col("pos") + 1).cast("long").as("rnk")
+            col("neighbor_id"),
+            round(col("dist"), 4).as("dist"),
+            col("rnk").cast("long").as("rnk")
           )
       },
       Some(s"""

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.TopKAgg.bestPer
 import graft.functions.VectorFunctions._
 import graft.operators.{BruteForceKNN, IvfAdc, IvfIndex, PQModel, RecallEval}
 import Q._
@@ -771,18 +772,15 @@ object IvfQueries {
         val probes = IvfIndex
           .probeCells(spark, q, "query_id", "qv", cents, NPROBE)
         val fast = graft.functions.VectorExpressions
-        probes
+        val pairs = probes
           .join(index, "cell")
           .withColumn("dist", fast.l2SqFast(col("qv"), col("dv")))
-          .groupBy(col("query_id"))
-          .agg(graft.functions.TopKAgg
-            .topK(col("dist"), col("neighbor_id"), K).as("tk"))
-          .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
+        bestPer(pairs, Seq("query_id"), col("dist"), "neighbor_id", K)
           .select(
             col("query_id"),
-            col("e.id").as("neighbor_id"),
-            round(col("e.dist"), 6).as("dist"),
-            (col("pos") + 1).cast("long").as("rnk")
+            col("neighbor_id"),
+            round(col("dist"), 6).as("dist"),
+            col("rnk").cast("long").as("rnk")
           )
       },
       Some(s"""
@@ -995,29 +993,20 @@ object IvfQueries {
           spark, path,
           IvfIndex.probeCells(spark, q, "query_id", "qv", cents, NPROBE),
           Some(col("label") <= 4))
-        val short = probes
+        val scored = probes
           .join(live, "cell")
           .withColumn("sdist", fast.l2SqFast(col("qv"),
             graft.operators.ScalarQuantizer.decodeCol(model, col("code"))))
-          .groupBy(col("query_id"))
-          .agg(graft.functions.TopKAgg
-            .topK(col("sdist"), col("id"), KSHORT).as("tk"))
-          .select(col("query_id"), explode(col("tk")).as("e"))
-          .select(col("query_id"), col("e.id").as("neighbor_id"))
-        val rer = short
+        val short = bestPer(scored, Seq("query_id"), col("sdist"), "id", KSHORT)
+          .select(col("query_id"), col("id").as("neighbor_id"))
+        val reranked = short
           .join(q, "query_id")
           .join(
             emb.select(col("vec_id").as("neighbor_id"), col("vec").as("bv")),
             "neighbor_id")
           .withColumn("rdist", fast.l2SqFast(col("qv"), col("bv")))
-          .groupBy(col("query_id"))
-          .agg(graft.functions.TopKAgg
-            .topK(col("rdist"), col("neighbor_id"), K).as("tk"))
-          .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-          .select(
-            col("query_id"), col("e.id").as("neighbor_id"),
-            col("e.dist").as("dist"),
-            (col("pos") + 1).cast("long").as("rnk"))
+        val rer = bestPer(reranked, Seq("query_id"), col("rdist"), "neighbor_id", K)
+          .withColumn("rnk", col("rnk").cast("long"))
         val truth = BruteForceKNN
           .knn(q,
             emb.filter(col("vec_id") % 7 =!= 0 && col("label") <= 4)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.functions.TopKAgg.bestPer
 import graft.functions.VectorFunctions._
 import graft.operators.{KMeans, PQModel, ProductQuantizer}
 import Q._
@@ -478,15 +479,12 @@ object PQQueries {
           .withColumn(
             "dist",
             ProductQuantizer.adcFromLutCol(model, col("lut"), col("code")))
-        pairs
-          .groupBy(col("query_id"))
-          .agg(graft.functions.TopKAgg.topK(col("dist"), col("neighbor_id"), 5).as("tk"))
-          .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
+        bestPer(pairs, Seq("query_id"), col("dist"), "neighbor_id", 5)
           .select(
             col("query_id"),
-            col("e.id").as("neighbor_id"),
-            round(col("e.dist"), 6).as("dist"),
-            (col("pos") + 1).cast("long").as("rnk")
+            col("neighbor_id"),
+            round(col("dist"), 6).as("dist"),
+            col("rnk").cast("long").as("rnk")
           )
       },
       Some(s"""
@@ -1067,7 +1065,6 @@ object PQQueries {
     GQuery(
       "knn_maxsim_pq",
       (spark, dir) => {
-        import graft.functions.TopKAgg.topK
         import graft.functions.VectorExpressions.dotFast
         val rows = headVecs(spark, dir, KCB)
         val tokModel = PQModel(
@@ -1102,17 +1099,12 @@ object PQQueries {
             ).as("qlut"))
         val score = graft.functions.VectorExpressions
           .maxSimAdcFast(col("qlut"), col("dtokcodes"))
-        val grouped = docs
-          .join(broadcast(q))
-          .groupBy(col("query_id"))
-          .agg(topK(-score, col("doc_id"), 10).as("tk"))
-        grouped
-          .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
+        bestPer(docs.join(broadcast(q)), Seq("query_id"), -score, "doc_id", 10)
           .select(
             col("query_id"),
-            col("e.id").as("doc_id"),
-            round(-col("e.dist"), 6).as("score"),
-            (col("pos") + 1).cast("long").as("rnk"))
+            col("doc_id"),
+            round(-col("dist"), 6).as("score"),
+            col("rnk").cast("long").as("rnk"))
       },
       Some(s"""
         WITH tc AS (SELECT vec_id AS ck, embedding::DOUBLE[] AS cv
@@ -1166,7 +1158,6 @@ object PQQueries {
     GQuery(
       "knn_maxsim_ivf",
       (spark, dir) => {
-        import graft.functions.TopKAgg.topK
         import graft.functions.VectorExpressions.{dotFast, maxSimAdcFast}
         import graft.operators.{IvfIndex, KMeans}
         val rows8 = headVecs(spark, dir, KKM)
@@ -1208,19 +1199,16 @@ object PQQueries {
                 (ks, s) =>
                   transform(ks, c => dotFast(slice(qt, s * MSDS + 1, lit(MSDS)), c)))
           ).as("qlut"))
-        val grouped = docs
+        val pairs = docs
           .join(broadcast(probes), Seq("cell"))
           .join(broadcast(qlut), col("qq") === col("query_id"))
-          .groupBy(col("query_id"))
-          .agg(topK(-maxSimAdcFast(col("qlut"), col("dtokcodes")),
-            col("doc_id"), 10).as("tk"))
-        grouped
-          .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
+        bestPer(pairs, Seq("query_id"),
+          -maxSimAdcFast(col("qlut"), col("dtokcodes")), "doc_id", 10)
           .select(
             col("query_id"),
-            col("e.id").as("doc_id"),
-            round(-col("e.dist"), 6).as("score"),
-            (col("pos") + 1).cast("long").as("rnk"))
+            col("doc_id"),
+            round(-col("dist"), 6).as("score"),
+            col("rnk").cast("long").as("rnk"))
       },
       Some(s"""
         WITH tc AS (SELECT vec_id AS ck, embedding::DOUBLE[] AS cv
@@ -1319,20 +1307,17 @@ object PQQueries {
             ProductQuantizer
               .lutCol(model, rot(toDouble(col("embedding")))).as("lut")
           )
-        enc
+        val pairs = enc
           .join(broadcast(q))
           .withColumn(
             "dist",
             ProductQuantizer.adcFromLutCol(model, col("lut"), col("code")))
-          .groupBy(col("query_id"))
-          .agg(graft.functions.TopKAgg
-            .topK(col("dist"), col("neighbor_id"), 5).as("tk"))
-          .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
+        bestPer(pairs, Seq("query_id"), col("dist"), "neighbor_id", 5)
           .select(
             col("query_id"),
-            col("e.id").as("neighbor_id"),
-            round(col("e.dist"), 6).as("dist"),
-            (col("pos") + 1).cast("long").as("rnk")
+            col("neighbor_id"),
+            round(col("dist"), 6).as("dist"),
+            col("rnk").cast("long").as("rnk")
           )
       },
       Some(s"""
@@ -1516,15 +1501,12 @@ object PQQueries {
             col("qq") - lit(2.0) * element_at(col("d0"), col("c0") + 1)
               - lit(2.0) * element_at(col("d1"), col("c1") + 1)
               + element_at(element_at(nrmLit, col("c0") + 1), col("c1") + 1))
-        pairs
-          .groupBy(col("query_id"))
-          .agg(graft.functions.TopKAgg.topK(col("dist"), col("neighbor_id"), 5).as("tk"))
-          .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
+        bestPer(pairs, Seq("query_id"), col("dist"), "neighbor_id", 5)
           .select(
             col("query_id"),
-            col("e.id").as("neighbor_id"),
-            round(col("e.dist"), 6).as("dist"),
-            (col("pos") + 1).cast("long").as("rnk"))
+            col("neighbor_id"),
+            round(col("dist"), 6).as("dist"),
+            col("rnk").cast("long").as("rnk"))
       },
       Some(s"""
         WITH $rqCtes,

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.TopKAgg.bestPer
 import graft.functions.VectorFunctions._
 import graft.operators.ScalarQuantizer
 import Q._
@@ -91,18 +92,15 @@ object SQQueries {
           .filter(col("vec_id") % 10 === 0)
           .select(col("vec_id").as("query_id"), col("vec").as("qv"))
         val fast = graft.functions.VectorExpressions
-        recon
+        val pairs = recon
           .join(broadcast(q))
           .withColumn("dist", fast.l2SqFast(col("qv"), col("dv")))
-          .groupBy(col("query_id"))
-          .agg(graft.functions.TopKAgg
-            .topK(col("dist"), col("neighbor_id"), K).as("tk"))
-          .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
+        bestPer(pairs, Seq("query_id"), col("dist"), "neighbor_id", K)
           .select(
             col("query_id"),
-            col("e.id").as("neighbor_id"),
-            round(col("e.dist"), 6).as("dist"),
-            (col("pos") + 1).cast("long").as("rnk")
+            col("neighbor_id"),
+            round(col("dist"), 6).as("dist"),
+            col("rnk").cast("long").as("rnk")
           )
       },
       Some(s"""

@@ -2473,7 +2473,7 @@ object TextQueries {
     GQuery(
       "pipeline_sample_weighted",
       (spark, dir) => {
-        import graft.functions.TopKAgg.topK
+        import graft.functions.TopKAgg.bestPer
         val docs = t(spark, dir, "documents")
           .select(
             col("doc_id"), col("lang"),
@@ -2481,13 +2481,8 @@ object TextQueries {
             ((Dedup.md5Long(concat(col("doc_id").cast("string"), lit(":aes")))
               % 1000000 + 1).cast("double") / lit(1000001.0)).as("u"))
           .withColumn("key", log(col("u")) / col("w"))
-        val picked = docs
-          .groupBy(col("lang"))
-          .agg(topK(-col("key"), col("doc_id"), 5).as("tk"))
-          .select(col("lang"), posexplode(col("tk")).as(Seq("pos", "e")))
-          .select(
-            col("lang"), col("e.id").as("doc_id"),
-            (col("pos") + 1).cast("long").as("rnk"))
+        val picked = bestPer(docs, Seq("lang"), -col("key"), "doc_id", 5)
+          .select(col("lang"), col("doc_id"), col("rnk").cast("long").as("rnk"))
         picked
           .join(docs.select(col("doc_id"), col("w"), col("key")), "doc_id")
           .select(

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.TopKAgg.bestPer
 import graft.functions.VectorFunctions._
 import graft.operators.{BruteForceKNN, NNDescent}
 import Q._
@@ -1438,7 +1439,6 @@ object VectorQueries {
       "knn_maxp",
       (spark, dir) => {
         import graft.functions.VectorExpressions.dotFast
-        import graft.functions.TopKAgg.topK
         val emb = t(spark, dir, "embeddings")
         val q = emb.filter(col("vec_id") % 40 === 0)
           .select(col("vec_id").as("query_id"),
@@ -1446,19 +1446,17 @@ object VectorQueries {
         val p = emb.select(
           expr("vec_id div 8").as("doc_id"),
           toDouble(col("embedding")).as("pv"))
-        p.join(broadcast(q))
+        val best = p.join(broadcast(q))
           .select(col("query_id"), col("doc_id"),
             dotFast(col("qv"), col("pv")).as("s"))
           .groupBy(col("query_id"), col("doc_id"))
           .agg(max(col("s")).as("s"))
-          .groupBy(col("query_id"))
-          .agg(topK(col("s") * lit(-1.0), col("doc_id"), 5).as("tk"))
-          .select(col("query_id"), posexplode(col("tk")).as(Seq("pos", "e")))
+        bestPer(best, Seq("query_id"), col("s") * lit(-1.0), "doc_id", 5)
           .select(
             col("query_id"),
-            col("e.id").as("doc_id"),
-            round(col("e.dist") * lit(-1.0), 6).as("maxp"),
-            (col("pos") + 1).cast("long").as("rnk"))
+            col("doc_id"),
+            round(col("dist") * lit(-1.0), 6).as("maxp"),
+            col("rnk").cast("long").as("rnk"))
       },
       Some(s"""
         WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
@@ -1517,7 +1515,7 @@ object VectorQueries {
       """)
     ),
     // The both-sides-big kNN: 2-D block-grid shuffle join instead of a
-    // query-batch broadcast — qBlocks*bBlocks independent tasks, each
+    // query-batch broadcast — BruteForceKNN.ShuffledGrid's 4x8 tasks, each
     // holding one block of each side; nothing corpus-sized broadcasts.
     // Same results as knn_bruteforce by construction (and by this oracle).
     GQuery(
@@ -1525,7 +1523,7 @@ object VectorQueries {
       (spark, dir) => {
         val (q, b) = qb(spark, dir)
         BruteForceKNN
-          .knnShuffled(q, b, K, qBlocks = 4, bBlocks = 8)
+          .knnShuffled(q, b, K)
           .select(
             col("query_id"),
             col("neighbor_id"),
@@ -1881,7 +1879,6 @@ object VectorQueries {
       "rpt_knn_filtered",
       (spark, dir) => {
         import graft.functions.VectorExpressions.l2SqFast
-        import graft.functions.TopKAgg.topK
         val embL = t(spark, dir, "embeddings")
         val lab = embL.select(
           col("vec_id").cast("long").as("id"),
@@ -1904,19 +1901,17 @@ object VectorQueries {
           .join(lab, "id")
           .filter(col("lab") === col("qlab"))
           .select(col("qid"), col("id"))
-        cand
+        val pairs = cand
           .join(emb, "id")
           .join(broadcast(q.select(col("query_id").as("qid"), col("qv"))), "qid")
           .select(col("qid"), col("id"),
             l2SqFast(col("qv"), col("vec")).as("dist"))
-          .groupBy(col("qid"))
-          .agg(topK(col("dist"), col("id"), K).as("tk"))
-          .select(col("qid"), posexplode(col("tk")).as(Seq("pos", "e")))
+        bestPer(pairs, Seq("qid"), col("dist"), "id", K)
           .select(
             col("qid").as("query_id"),
-            col("e.id").as("neighbor_id"),
-            round(col("e.dist"), 4).as("dist"),
-            (col("pos") + 1).cast("long").as("rnk"))
+            col("id").as("neighbor_id"),
+            round(col("dist"), 4).as("dist"),
+            col("rnk").cast("long").as("rnk"))
       },
       Some(s"""
         WITH $rptCtes,

@@ -395,7 +395,7 @@ object StreamingOps {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         import graft.operators.NNDescent
-        import graft.functions.TopKAgg.topK
+        import graft.functions.TopKAgg.bestPer
         val spark = batch.sparkSession
         val b = batch
           .select(
@@ -440,7 +440,7 @@ object StreamingOps {
                 .select(lit(0L).as("src"), lit(0L).as("dst"),
                   lit(0.0).as("dist")).limit(0)
             val edges = cand.unionAll(local)
-            graph
+            val merged = graph
               .select(col("src"), col("dst"), col("dist"))
               .unionAll(edges)
               .unionAll(edges.select(
@@ -448,12 +448,8 @@ object StreamingOps {
               .filter(col("src") =!= col("dst"))
               .groupBy(col("src"), col("dst"))
               .agg(min(col("dist")).as("dist"))
-              .groupBy(col("src"))
-              .agg(topK(col("dist"), col("dst"), k).as("tk"))
-              .select(col("src"), posexplode(col("tk")).as(Seq("pos", "e")))
-              .select(
-                col("src"), col("e.id").as("dst"), col("e.dist").as("dist"),
-                (col("pos") + 1).cast("long").as("rnk"))
+            bestPer(merged, Seq("src"), col("dist"), "dst", k)
+              .withColumn("rnk", col("rnk").cast("long"))
           }
         // materialize BEFORE overwriting the files the plan reads
         val out = next.localCheckpoint()

@@ -24,6 +24,16 @@ class StreamingSpec extends SparkSpec {
     dir
   }
 
+  /** Writes one CDC wave to a staging dir outside the stream's source and
+    * moves it in whole: a source listing mid-commit could otherwise see
+    * the wave's delete file before its upsert file, split the wave over
+    * two batches and revive the deleted ids. */
+  private def arriveWhole(wave: org.apache.spark.sql.DataFrame, dest: String): Unit = {
+    val staged = Files.createTempDirectory("cdcstage").resolve("wave")
+    wave.write.parquet(staged.toString)
+    Files.move(staged, Paths.get(dest), StandardCopyOption.ATOMIC_MOVE)
+  }
+
   test("streaming hourly windowed counts == batch window() aggregation") {
     val dir = stageEventsDir()
     val stream = StreamingOps.hourlyCounts(StreamingOps.readEvents(spark, dir))
@@ -349,7 +359,7 @@ class StreamingSpec extends SparkSpec {
       .unionByName(
         emb.filter(col("id") % 9 === 0)
           .withColumn("op", lit("delete")))
-    w1.write.parquet(s"$srcDir/w1")
+    arriveWhole(w1, s"$srcDir/w1")
     val stream = spark.readStream
       .schema("id LONG, vec ARRAY<DOUBLE>, op STRING")
       .parquet(s"$srcDir/*")
@@ -357,7 +367,7 @@ class StreamingSpec extends SparkSpec {
       stream, "id", "vec", "op", cents, index, ckpt)
     try {
       q.processAllAvailable()
-      w2.write.parquet(s"$srcDir/w2")
+      arriveWhole(w2, s"$srcDir/w2")
       q.processAllAvailable()
     } finally q.stop()
     // batch twin: the same history through the batch maintenance API
@@ -405,7 +415,7 @@ class StreamingSpec extends SparkSpec {
       .withColumn("op", lit("upsert"))
       .unionByName(
         emb.filter(col("id") % 9 === 0).withColumn("op", lit("delete")))
-    w1.write.parquet(s"$srcDir/w1")
+    arriveWhole(w1, s"$srcDir/w1")
     val stream = spark.readStream
       .schema("id LONG, vec ARRAY<DOUBLE>, op STRING")
       .parquet(s"$srcDir/*")
@@ -413,7 +423,7 @@ class StreamingSpec extends SparkSpec {
       stream, "id", "vec", "op", cents, model, index, ckpt)
     try {
       q.processAllAvailable()
-      w2.write.parquet(s"$srcDir/w2")
+      arriveWhole(w2, s"$srcDir/w2")
       q.processAllAvailable()
     } finally q.stop()
     IvfAdc.upsert(spark, twin, w1.drop("op"), "id", "vec", cents, model)

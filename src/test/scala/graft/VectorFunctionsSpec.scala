@@ -81,7 +81,7 @@ class VectorFunctionsSpec extends SparkSpec {
       .toDF("query_id", "qv")
     val heap = BruteForceKNN.knn(q, base, 10)
       .select("query_id", "neighbor_id", "dist", "rnk")
-    val win = BruteForceKNN.knnWindow(q, base, 10)
+    val win = BruteForceWindow.knnWindow(q, base, 10)
       .select("query_id", "neighbor_id", "dist", "rnk")
     assert(heap.except(win).count() == 0 && win.except(heap).count() == 0)
   }
@@ -94,7 +94,7 @@ class VectorFunctionsSpec extends SparkSpec {
       .toDF("query_id", "qv")
     val bc = BruteForceKNN.knn(q, base, 10)
       .select("query_id", "neighbor_id", "dist", "rnk")
-    val grid = BruteForceKNN.knnShuffled(q, base, 10, qBlocks = 3, bBlocks = 5)
+    val grid = BruteForceKNN.knnShuffled(q, base, 10)
       .select("query_id", "neighbor_id", "dist", "rnk")
     assert(grid.except(bc).count() == 0 && bc.except(grid).count() == 0)
   }
