@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{Decimal, DecimalType, DoubleType, LongType, StructField, StructType}
 
 /** Clustering evaluation — the measurements a selection/curation stack
   * publishes before trusting a clustering (SemDeDup blocking, topic
@@ -16,9 +16,10 @@ import org.apache.spark.sql.types.DecimalType
   * through DECIMAL(38,20) so both engines add exact decimals and divide
   * identical doubles.
   *
-  * Scale: one (cluster, label) contingency aggregation (≤ k·L rows),
-  * one per-point distance scan against broadcast centroids, k-row
-  * centroid geometry — nothing pairwise in the corpus.
+  * Scale: agreement is one aggregation, then driver arithmetic over
+  * ≤ min(n, k·L) rows (the (cluster, label) contingency table); the
+  * indexes are one per-point distance scan against broadcast centroids
+  * and k-row centroid geometry — nothing pairwise in the corpus.
   */
 object ClusterEval {
 
@@ -32,59 +33,84 @@ object ClusterEval {
     * E = Σi C(ai,2)·Σj C(bj,2) / C(n,2) — all exact longs until the two
     * final divisions. NMI = MI / sqrt(H(U)·H(V)) with each entropy/MI
     * term ln-computed on exact integer ratios and decimal-routed.
+    *
+    * One aggregation (assign ⋈ truth → count per (cluster, label)) runs in
+    * Spark; its ≤ min(n, k·L) cells are collected under
+    * [[LocalGraph.MaxAuditNodes]] (a named error above it) and the rest
+    * is driver arithmetic spelled exactly as Spark evaluates the
+    * relational formula: C(x,2) as a long product halved in double and
+    * truncated, `StrictMath.log` (what Spark's `log` calls), each entropy
+    * and MI term cast to DECIMAL(38,20) and summed as Spark's Decimal, and
+    * Spark's null and divide-by-zero rules — so both spellings agree bit
+    * for bit (AuditLocalSpec pins it). Returns a one-row local frame.
     */
   def agreement(
       assign: DataFrame, // (id, cluster)
       truth: DataFrame // (id, label)
   ): DataFrame = {
-    val j = assign
-      .select(col("id"), col("cluster").cast("long").as("u"))
-      .join(truth.select(col("id"), col("label").cast("long").as("v")), "id")
-      .localCheckpoint()
-    val cont = j.groupBy(col("u"), col("v")).agg(count(lit(1)).as("nij"))
-      .localCheckpoint()
-    val au = cont.groupBy(col("u")).agg(sum(col("nij")).as("ai"))
-    val bv = cont.groupBy(col("v")).agg(sum(col("nij")).as("bj"))
-    val nDf = j.agg(count(lit(1)).as("n"))
-    def c2(x: Column): Column = (x * (x - 1) / 2).cast("long")
-    val sums = cont.agg(sum(c2(col("nij"))).as("sij"))
-      .crossJoin(au.agg(sum(c2(col("ai"))).as("sa")))
-      .crossJoin(bv.agg(sum(c2(col("bj"))).as("sb")))
-      .crossJoin(nDf)
-    // MI/entropy terms: exact integers into ln, decimal-routed sums
-    val mi = cont
-      .join(au, "u").join(bv, "v")
-      .crossJoin(broadcast(nDf))
-      .agg(dsum(
-        (col("nij").cast("double") / col("n")) *
-          log(col("n").cast("double") * col("nij") /
-            (col("ai").cast("double") * col("bj")))).as("mi"))
-    val hu = au.crossJoin(broadcast(nDf))
-      .agg(dsum(-(col("ai").cast("double") / col("n")) *
-        log(col("ai").cast("double") / col("n"))).as("hu"))
-    val hv = bv.crossJoin(broadcast(nDf))
-      .agg(dsum(-(col("bj").cast("double") / col("n")) *
-        log(col("bj").cast("double") / col("n"))).as("hv"))
-    sums
-      .crossJoin(mi).crossJoin(hu).crossJoin(hv)
-      .select(
-        col("n"),
-        {
-          // ARI = (sij - E) / ((sa+sb)/2 - E) with E = sa*sb/C(n,2).
-          // Degenerate partitions (all-singletons or one-cluster on both
-          // sides) make the denominator 0; convention (matching sklearn):
-          // 1.0 when the index equals its expectation (identical trivial
-          // partitions), else 0.0.
-          val e = col("sa").cast("double") * col("sb") / c2(col("n"))
-          val num = col("sij").cast("double") - e
-          val den = (col("sa") + col("sb")).cast("double") / 2.0 - e
-          when(den === 0.0, when(num === 0.0, lit(1.0)).otherwise(lit(0.0)))
-            .otherwise(num / den)
-            .as("ari")
-        },
-        when(col("hu") > 0 && col("hv") > 0,
-          col("mi") / sqrt(col("hu") * col("hv")))
-          .otherwise(lit(0.0)).as("nmi"))
+    val spark = assign.sparkSession
+    // the contingency table, one cell per (cluster, label) incl. null keys
+    val cells = LocalGraph.collectCapped("agreement: contingency cells",
+      assign.select(col("id"), col("cluster").cast("long").as("u"))
+        .join(truth.select(col("id"), col("label").cast("long").as("v")), "id")
+        .groupBy(col("u"), col("v")).agg(count(lit(1)).as("nij")),
+      LocalGraph.MaxAuditNodes)
+      .map(r => (Option.unless(r.isNullAt(0))(r.getLong(0)),
+        Option.unless(r.isNullAt(1))(r.getLong(1)), r.getLong(2)))
+    val n = cells.iterator.map(_._3).sum
+    // Spark's arithmetic, term for term: a null operand makes a null, a
+    // zero divisor raises DIVIDE_BY_ZERO under ANSI (else null), `log`
+    // is null at or below 0, and every Σ is null over no input
+    val ansi = spark.conf.get("spark.sql.ansi.enabled").toBoolean
+    def div(a: Double, b: Double): Option[Double] =
+      if (b != 0) Some(a / b)
+      else if (ansi) throw new ArithmeticException(
+        s"agreement: [DIVIDE_BY_ZERO] Division by zero at n = $n")
+      else None
+    def ln(x: Double): Option[Double] = Option.when(x > 0)(StrictMath.log(x))
+    def c2(x: Long): Long = (Math.multiplyExact(x, x - 1).toDouble / 2).toLong
+    def lsum(xs: Iterable[Long]): Option[Long] = xs.reduceOption(Math.addExact(_: Long, _: Long))
+    def decSum(terms: Iterable[Option[Double]]): Option[Double] =
+      terms.flatten.map { t =>
+        val d = Decimal(t)
+        require(d.changePrecision(38, 20), s"agreement: term $t overflows DECIMAL(38,20)")
+        d
+      }.reduceOption(_ + _).map(_.toDouble)
+    val au = cells.groupMapReduce(_._1)(_._3)(_ + _)
+    val bv = cells.groupMapReduce(_._2)(_._3)(_ + _)
+    val (sij, sa, sb) = (lsum(cells.map(c => c2(c._3))), lsum(au.values.map(c2)),
+      lsum(bv.values.map(c2)))
+    // MI/entropy terms: exact integers into ln, decimal-routed sums; the
+    // MI cells are those whose cluster and label are both non-null
+    val mi = decSum(cells.collect { case (Some(u), Some(v), nij) =>
+      ln(n.toDouble * nij / (au(Some(u)).toDouble * bv(Some(v)))).map(nij.toDouble / n * _)
+    })
+    def entropy(margin: Iterable[Long]) =
+      decSum(margin.map(a => ln(a.toDouble / n).map(-(a.toDouble / n) * _)))
+    val (hu, hv) = (entropy(au.values), entropy(bv.values))
+    // ARI = (sij - E) / ((sa+sb)/2 - E) with E = sa*sb/C(n,2). Degenerate
+    // partitions (all-singletons or one-cluster on both sides) make the
+    // denominator 0; convention (matching sklearn): 1.0 when the index
+    // equals its expectation (identical trivial partitions), else 0.0.
+    val e = for (a <- sa; b <- sb; r <- div(a.toDouble * b, c2(n).toDouble)) yield r
+    val num = for (s <- sij; x <- e) yield s.toDouble - x
+    val den = for (a <- sa; b <- sb; x <- e) yield Math.addExact(a, b).toDouble / 2.0 - x
+    val ari = den match {
+      case Some(d) if d == 0.0 => Some(if (num.exists(_ == 0.0)) 1.0 else 0.0)
+      case Some(d) => num.flatMap(div(_, d))
+      case None => None
+    }
+    val nmi = (hu, hv) match {
+      case (Some(a), Some(b)) if a > 0 && b > 0 => mi.flatMap(div(_, math.sqrt(a * b)))
+      case _ => Some(0.0)
+    }
+    def boxed(x: Option[Double]): Any = x.map(Double.box).orNull
+    spark.createDataFrame(
+      java.util.List.of(Row(n, boxed(ari), boxed(nmi))),
+      StructType(Seq(
+        StructField("n", LongType, nullable = false),
+        StructField("ari", DoubleType),
+        StructField("nmi", DoubleType))))
   }
 
   /** Centroids as a broadcastable (ck, cvec) frame. */

@@ -1442,31 +1442,37 @@ object Dedup {
     val probe = e0.limit(localMaxEdges + 1).collect()
     if (probe.length <= localMaxEdges) {
       import spark.implicits._
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x // path compression
-        while (parent.getOrElse(c, c) != c) {
-          val n = parent.getOrElse(c, c); parent(c) = r; c = n
-        }
-        r
-      }
-      probe.foreach { row =>
-        val (a, b) = (row.getLong(0), row.getLong(1))
-        parent.getOrElseUpdate(a, a)
-        parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      // snapshot the keys BEFORE resolving: find() path-compresses (writes
-      // into the map), and mutating a mutable.HashMap under a live
-      // keysIterator drops entries
-      val ids = parent.keys.toArray.sorted
-      val out = ids.map(id => (id, find(id))).toSeq // root = min id
-      return out.toDF("doc_id", "rep_id")
+      return unionFind(probe.iterator.map(row => (row.getLong(0), row.getLong(1))))
+        .toSeq.toDF("doc_id", "rep_id")
     }
     connectedComponentsDistributed(e0)
+  }
+
+  /** Driver-local connected components of the pairs: (id, root) for
+    * every endpoint, ascending by id, the root being the component's
+    * minimum id — union-find with min-id roots and path compression.
+    */
+  private[operators] def unionFind(pairs: Iterator[(Long, Long)]): Array[(Long, Long)] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x // path compression
+      while (parent.getOrElse(c, c) != c) {
+        val n = parent.getOrElse(c, c); parent(c) = r; c = n
+      }
+      r
+    }
+    pairs.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    // snapshot the keys BEFORE resolving: find() path-compresses (writes
+    // into the map), and mutating a mutable.HashMap under a live
+    // keysIterator drops entries
+    parent.keys.toArray.sorted.map(id => (id, find(id)))
   }
 
   /** Edit-distance near-dup pairs — the classic character-level verify

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, LongType, StringType, StructField, StructType}
 
 /** Structural audits of the (kNN) neighbor graph — the measurements a
   * graph-based curation stack publishes next to hubness
@@ -548,9 +548,12 @@ object GraphAudit {
     * epsSqDen·(c+2)² ≥ epsSqNum·(da+1)·(db+1) — so every decision is
     * exact and the whole census hash-checks. Scale: the shared-neighbor
     * count is ONE equi-keyed wedge join (fan-out Σ_edge min-deg, bounded
-    * by the kNN graph's bounded degree); components ride the
-    * size-adaptive [[Dedup.connectedComponents]] (pointer-jumping above
-    * the local cutover); everything else is linear joins over edges.
+    * by the kNN graph's bounded degree), built by [[wedgeStats]]; the
+    * census then collects the degree table (≤ 200k nodes,
+    * [[LocalGraph.MaxAuditNodes]]) and the two edge tables (≤ 2M edges
+    * each, [[LocalGraph.MaxAuditEdges]]) and finishes on the driver, so a
+    * graph above either cap fails by name — SCAN is an audit-scale
+    * census.
     *
     * Returns one row per universe id: (id, deg, role, cluster) with
     * cluster NULL for hubs/outliers.
@@ -610,6 +613,17 @@ object GraphAudit {
 
   /** SCAN over a prebuilt [[WedgeStats]] artifact — the ε/μ decision is a
     * pure integer filter over the shared counts.
+    *
+    * Finishes on the driver: `stats.dg` is collected once under
+    * [[LocalGraph.MaxAuditNodes]] (200k nodes) and `stats.u` and
+    * `stats.cn` once each under [[LocalGraph.MaxAuditEdges]], each a
+    * named error above its cap, so a call runs three jobs whatever the
+    * number of clusters, components or ε settings. ε-edges, cores, core
+    * components (union-find with min-id roots, [[Dedup.unionFind]]),
+    * borders (the minimum adjacent core rep) and hubs (≥ 2 distinct reps
+    * among plain neighbors) are then exact integer and set arithmetic,
+    * row for row the relational census (AuditLocalSpec pins it), which
+    * comes back as a local frame.
     */
   def scan(
       stats: WedgeStats,
@@ -619,53 +633,58 @@ object GraphAudit {
   ): DataFrame = {
     require(epsSqNum > 0 && epsSqDen >= epsSqNum, "scan: need 0 < eps^2 <= 1")
     require(mu >= 2, s"scan: mu must be >= 2, got $mu")
-    val ub = stats.u.select(col("a").as("id"), col("b").as("nb"))
-      .unionAll(stats.u.select(col("b").as("id"), col("a").as("nb")))
-    val dg = stats.dg
-    val eps = stats.cn
-      .filter(
-        lit(epsSqDen) * (col("c") + 2) * (col("c") + 2)
-          >= lit(epsSqNum) * (col("da") + 1) * (col("db") + 1))
-      .select(col("a"), col("b"))
-      .localCheckpoint()
-    val epsb = eps.select(col("a").as("id"), col("b").as("nb"))
-      .unionAll(eps.select(col("b").as("id"), col("a").as("nb")))
-    val core = dg
-      .join(epsb.groupBy(col("id")).agg(count(lit(1)).as("ne")), Seq("id"), "left")
-      .filter(coalesce(col("ne"), lit(0L)) + 1 >= mu)
-      .select(col("id"))
-      .localCheckpoint()
-    val epsc = eps
-      .join(core.select(col("id").as("a")), "a")
-      .join(core.select(col("id").as("b")), "b")
-    val comps = Dedup.connectedComponents(epsc.select(col("a"), col("b")), "a", "b")
-    val coreRep = core
-      .join(
-        comps.select(col("doc_id").as("id"), col("rep_id")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("rep_id"), col("id")).as("rep"))
-      .localCheckpoint()
-    val bord = epsb
-      .join(coreRep.select(col("id").as("nb"), col("rep")), "nb")
-      .join(core, Seq("id"), "left_anti")
-      .groupBy(col("id"))
-      .agg(min(col("rep")).as("rep"))
-    val memb = coreRep.unionAll(bord).localCheckpoint()
-    val hubq = ub
-      .join(memb.select(col("id").as("nb"), col("rep")), "nb")
-      .groupBy(col("id"))
-      .agg(countDistinct(col("rep")).as("ncl"))
-    dg
-      .join(coreRep.select(col("id"), col("rep").as("crep")), Seq("id"), "left")
-      .join(bord.select(col("id"), col("rep").as("brep")), Seq("id"), "left")
-      .join(hubq, Seq("id"), "left")
-      .select(
-        col("id"), col("deg"),
-        when(col("crep").isNotNull, lit("core"))
-          .when(col("brep").isNotNull, lit("border"))
-          .when(coalesce(col("ncl"), lit(0L)) >= 2, lit("hub"))
-          .otherwise(lit("outlier")).as("role"),
-        when(col("crep").isNotNull, col("crep"))
-          .when(col("brep").isNotNull, col("brep"))
-          .otherwise(lit(null).cast("long")).as("cluster"))
+    def opt(r: Row, i: Int): Option[Long] = Option.unless(r.isNullAt(i))(r.getLong(i))
+    val dgRows = LocalGraph.collectCapped("scan: degree table",
+      stats.dg.select(col("id"), col("deg")), LocalGraph.MaxAuditNodes)
+    val uRows = LocalGraph.collectCapped("scan: undirected edges",
+      stats.u.select(col("a"), col("b")), LocalGraph.MaxAuditEdges)
+    val cnRows = LocalGraph.collectCapped("scan: wedge counts",
+      stats.cn.select(col("a"), col("b"), col("c"), col("da"), col("db")),
+      LocalGraph.MaxAuditEdges)
+    // σ ≥ ε in exact integers: epsSqDen·(c+2)² ≥ epsSqNum·(da+1)·(db+1);
+    // a null count compares as null, which the filter drops
+    import Math.{addExact, multiplyExact}
+    val eps = cnRows.collect {
+      case r if !r.isNullAt(2) && !r.isNullAt(3) && !r.isNullAt(4) && {
+        val shared = addExact(r.getLong(2), 2L)
+        multiplyExact(multiplyExact(epsSqDen, shared), shared) >= multiplyExact(
+          multiplyExact(epsSqNum, addExact(r.getLong(3), 1L)), addExact(r.getLong(4), 1L))
+      } => (opt(r, 0), opt(r, 1))
+    }
+    // both directions of a pair list as (id, nb)
+    def both(pairs: Iterable[(Option[Long], Option[Long])]) =
+      pairs.iterator.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
+    val ne = both(eps).flatMap(_._1).toSeq.groupMapReduce(identity)(_ => 1L)(_ + _)
+    val core = dgRows.iterator.flatMap(opt(_, 0))
+      .filter(id => ne.getOrElse(id, 0L) + 1 >= mu).toSet
+    val comp = Dedup.unionFind(eps.iterator.collect {
+      case (Some(a), Some(b)) if core(a) && core(b) => (a, b)
+    }).toMap
+    val coreRep = core.iterator.map(id => id -> comp.getOrElse(id, id)).toMap
+    val bord = both(eps).collect {
+      case (Some(id), Some(nb)) if !core(id) && core(nb) => id -> coreRep(nb)
+    }.toSeq.groupMapReduce(_._1)(_._2)(math.min)
+    val memb = coreRep ++ bord
+    val ncl = both(uRows.map(r => (opt(r, 0), opt(r, 1)))).collect {
+      case (Some(id), Some(nb)) if memb.contains(nb) => id -> memb(nb)
+    }.toSeq.groupMapReduce(_._1)(p => Set(p._2))(_ ++ _)
+    // a core id held by m universe rows joins its m rep rows: m² rows
+    val mult = dgRows.iterator.flatMap(opt(_, 0)).filter(core).toSeq
+      .groupMapReduce(identity)(_ => 1)(_ + _)
+    val out = dgRows.iterator.flatMap { r =>
+      val deg = r.get(1)
+      opt(r, 0) match {
+        case Some(id) if core(id) =>
+          Iterator.fill(mult(id))(Row(id, deg, "core", coreRep(id)))
+        case Some(id) if bord.contains(id) => Iterator(Row(id, deg, "border", bord(id)))
+        case Some(id) if ncl.get(id).exists(_.size >= 2) => Iterator(Row(id, deg, "hub", null))
+        case id => Iterator(Row(id.map(Long.box).orNull, deg, "outlier", null))
+      }
+    }.toSeq
+    stats.dg.sparkSession.createDataFrame(
+      java.util.Arrays.asList(out: _*),
+      StructType(Seq(stats.dg.schema("id"), stats.dg.schema("deg"),
+        StructField("role", StringType, nullable = false),
+        StructField("cluster", LongType))))
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.Decimal
 
@@ -200,6 +200,21 @@ private[operators] object LocalGraph {
     * Production ANN is [[DistributedHnsw]] / [[IvfIndex]].
     */
   val MaxAuditNodes = 200000
+
+  /** Edge cap of a driver-side audit over an edge list: ten undirected
+    * edges per node at [[MaxAuditNodes]], what the undirected view of a
+    * k ≤ 10 kNN graph holds. */
+  val MaxAuditEdges = 10 * MaxAuditNodes
+
+  /** `df`'s rows on the driver, or a named error above `cap` rows. ONE
+    * job on top of `df`'s own stages: a single-partition `limit(cap + 1)`
+    * probe, so the driver never holds more than cap + 1 rows. */
+  def collectCapped(what: String, df: DataFrame, cap: Int): Array[Row] = {
+    val rows = df.coalesce(1).limit(cap + 1).collect()
+    require(rows.length <= cap,
+      s"$what: more than $cap rows exceed the cap of a driver-side audit")
+    rows
+  }
 
   /** The HNSW replay index's nodes (id, vec, level), collected once:
     * the node matrix with no edges yet, and each node's level by index.

@@ -179,7 +179,7 @@ object RpTree {
     * with the +Infinity sentinel. Exactly two single-stage jobs over the
     * checkpointed base; nothing corpus-sized ever reaches the driver.
     */
-  private def levelMedians(
+  private[graft] def levelMedians(
       base: DataFrame,
       numTrees: Int,
       level: Int

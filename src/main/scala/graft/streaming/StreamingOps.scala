@@ -269,6 +269,14 @@ object StreamingOps {
     * history answers exactly like the same history applied with batch
     * [[graft.operators.IvfIndex.upsert]]/
     * [[graft.operators.IvfIndex.delete]] calls.
+    *
+    * Producer contract: upserts apply before deletes only WITHIN one
+    * micro-batch. Across batches the order is the order in which the
+    * file source lists files, so a CDC wave whose delete file lands in an
+    * earlier batch than its upsert file revives the ids it deletes. A
+    * producer must make each wave arrive whole: stage its files outside
+    * the watched directory, then move the staged directory in with one
+    * `Files.move(..., ATOMIC_MOVE)` (StreamingSpec's `arriveWhole`).
     */
   def cdcIvfSink(
       stream: DataFrame,
@@ -297,7 +305,10 @@ object StreamingOps {
     * contract and ordering rule as [[cdcIvfSink]], applied through
     * [[graft.operators.IvfAdc.upsert]]/[[graft.operators.IvfAdc.delete]]
     * (shared LSM log; codebooks and coarse centroids stay fixed, the
-    * batch only encodes).
+    * batch only encodes). Same producer contract: upserts apply before
+    * deletes only within one micro-batch, so each CDC wave must arrive
+    * whole (staged outside the watched directory, then moved in with
+    * `ATOMIC_MOVE`).
     */
   def cdcIvfAdcSink(
       stream: DataFrame,
@@ -508,11 +519,15 @@ object StreamingOps {
     * set of the accumulated edges (arrivals define the graph, the
     * maintained-sink convention).
     *
-    * Scale: the per-trigger recompute is the batch operator itself
-    * (wedge join + linear joins over the store) — the declared
-    * maintenance cadence is the micro-batch, matching the other
-    * maintained-artifact sinks (kNN graph, IVF); between triggers the
-    * census is a standing parquet artifact.
+    * Scale: the per-trigger recompute is the batch operator itself —
+    * the distributed wedge join over the store, then a collect of its
+    * degree table and edge tables and the census on the driver — so the
+    * accumulated graph is capped like the batch scan: above 200k nodes
+    * ([[graft.operators.GraphAudit.scan]]'s node cap) or 2M undirected
+    * edges a trigger fails by name. The declared maintenance cadence is
+    * the micro-batch, matching the other maintained-artifact sinks (kNN
+    * graph, IVF); between triggers the census is a standing parquet
+    * artifact.
     */
   def scanCensusSink(
       stream: DataFrame, // (src, dst) arriving edges

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.GraftSparkInternals
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -175,22 +171,6 @@ class GraphWalkSpec extends SparkSpec {
         GraphWalkRelational.betweennessBrandesRelational(g, sources, ids, rounds),
         s"betweennessBrandes seed $seed rounds $rounds")
     }
-  }
-
-  /** Jobs started by `body` on this thread, counted by a listener. */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"graph-walk-jobs-${System.nanoTime}"
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && group == e.properties.getProperty("spark.jobGroup.id"))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
-    try { body; GraftSparkInternals.drainListenerBus(sc); n.get }
-    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
   }
 
   test("job count does not grow with rounds: beam search, BFS, Brandes") {

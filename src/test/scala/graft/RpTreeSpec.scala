@@ -29,6 +29,47 @@ class RpTreeSpec extends SparkSpec {
     (got & exact).size.toDouble / exact.size
   }
 
+  test("levelMedians == the windowed lower median on seeded random frames: ties, even sizes, empty nodes") {
+    import org.apache.spark.sql.expressions.Window
+    val numTrees = 3
+    val sizes = scala.collection.mutable.ArrayBuffer.empty[Long]
+    var empty = 0
+    for (seed <- 1 to 4; level <- Seq(0, 2, 3)) {
+      val rng = new scala.util.Random(seed * 31 + level)
+      // 0..9 rows per (tree, node): odd and even counts and empty nodes;
+      // projections from a 5-value grid (ties, -0.0 beside 0.0)
+      val grid = Array(-1.0, -0.0, 0.0, 0.5, 1.0)
+      val frame = (for {
+        t <- 0 until numTrees
+        nd <- 0L until (1L << level)
+        _ <- 0 until rng.nextInt(10)
+      } yield (t, nd, grid(rng.nextInt(grid.length))))
+        .zipWithIndex.map { case ((t, nd, p), i) => (t, nd, p, i.toLong) }
+        .toDF("tree", "node", "proj", "id")
+      // the build's level layout: range-partitioned, sorted, checkpointed
+      val base = frame
+        .repartitionByRange(col("tree"), col("node"), col("proj"), col("id"))
+        .sortWithinPartitions(col("tree"), col("node"), col("proj"), col("id"))
+        .localCheckpoint()
+      val got = RpTree.levelMedians(base, numTrees, level)
+      val byNode = Window.partitionBy(col("tree"), col("node"))
+      val want = frame
+        .withColumn("rn", row_number().over(byNode.orderBy(col("proj"), col("id"))))
+        .withColumn("cnt", count(lit(1)).over(byNode))
+        .filter(col("rn") === floor((col("cnt") + 1) / 2))
+        .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      val complete = (for (t <- 0 until numTrees; nd <- 0L until (1L << level))
+        yield (t, nd) -> want.getOrElse((t, nd), Double.PositiveInfinity)).toMap
+      def bits(m: Map[(Int, Long), Double]) =
+        m.map { case (k, v) => k -> java.lang.Double.doubleToRawLongBits(v) }
+      assert(bits(got) == bits(complete), s"seed $seed level $level")
+      sizes ++= frame.groupBy("tree", "node").count().collect().map(_.getLong(2))
+      empty += complete.count(_._2.isPosInfinity)
+    }
+    assert(empty > 0 && sizes.exists(_ % 2 == 0) && sizes.exists(_ % 2 == 1),
+      s"the frames lack an empty, even or odd node: $empty empty, sizes ${sizes.distinct}")
+  }
+
   test("median splits keep leaves balanced; every point lands in one leaf per tree") {
     val f = RpTree.build(emb, "id", "vec", numTrees = 2, depth = 4, dim = 64)
     val n = emb.count()

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.GraftSparkInternals
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,6 +12,22 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf0001 = "/root/testdata/sf0.001"
   lazy val sf001 = "/root/testdata/sf0.01"
+
+  /** Jobs started by `body` on this thread, counted by a listener. */
+  def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"counted-jobs-${System.nanoTime}"
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && group == e.properties.getProperty("spark.jobGroup.id"))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try { body; GraftSparkInternals.drainListenerBus(sc); n.get }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
 }
 
 object SparkSpec {
