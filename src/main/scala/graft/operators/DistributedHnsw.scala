@@ -2,9 +2,12 @@ package graft.operators
 
 import scala.reflect.ClassTag
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.LongAccumulator
 
 import graft.functions.TopKAgg.bestPer
 
@@ -24,9 +27,15 @@ import graft.functions.TopKAgg.bestPer
   * (shard, layer, src, dst), a vector table (shard, id, vec) and an entry
   * table (shard, ep, height) — the reference's in-place graph mutation
   * (py/hnsw.py:348, 377-387) becomes immutable table-in/table-out.
-  * At 100 TB the vector table is the big one; it stays partitioned by
-  * shard, each executor holding only its shard's slice, while queries fan
-  * out to the shards through the same cogroup (never through the driver).
+  *
+  * Serving keeps the index partition-resident and moves only the queries
+  * (the REPOSE shape): the first search of a [[Shards]] replays each
+  * shard's tables into a [[LocalGraphSearcher]] once, held in an RDD of
+  * one searcher per shard, hash-partitioned by shard and persisted
+  * MEMORY_ONLY; every later search shuffles only its (shard, query)
+  * fan-out into the same partitioning and walks the resident graphs
+  * (the reference's `KNNSearch` over an in-memory graph,
+  * py/hnsw.py:394-410). Each executor holds only its shards' slice.
   */
 object DistributedHnsw {
 
@@ -46,15 +55,69 @@ object DistributedHnsw {
       levels: Option[DataFrame] = None,
       private[DistributedHnsw] val caches: Seq[DataFrame] = Nil
   ) {
+    /** The resident searchers by payload (None: raw vectors; Some(codec):
+      * that codec's code table), each built by the first search that
+      * needs it. Guarded by itself, so concurrent first searches share
+      * one build. */
+    private val resident =
+      scala.collection.mutable.HashMap.empty[Option[VectorCompression], RDD[(Int, ShardGraph)]]
+    private var replayed: LongAccumulator = _
+
     /** Release the build-time caches (the shard-partitioned vectors and the
-      * shared edge/entry materialization). Call once the index is persisted
+      * shared edge/entry materialization) and the resident searchers of
+      * every payload searched so far. Call once the index is persisted
       * or no longer queried — a long-lived session (or a streaming sink
       * building per micro-batch) otherwise accumulates executor storage
       * without bound. Idempotent; [[DistributedHnsw.load]]-opened shards
-      * are parquet-backed and hold no caches.
+      * hold no build-time caches but, once searched, hold resident
+      * searchers like built ones. A later search rebuilds them. Until
+      * then both stay held even after this object is unreachable: the
+      * build caches by Spark's cache manager, the resident searchers by
+      * [[DistributedHnsw]], so storage is released here, not whenever
+      * the JVM happens to collect garbage.
       */
-    def unpersist(): Unit = caches.foreach(_.unpersist(blocking = false))
+    def unpersist(): Unit = {
+      caches.foreach(_.unpersist(blocking = false))
+      resident.synchronized {
+        resident.values.foreach { g =>
+          g.unpersist(blocking = false)
+          held.remove(g)
+        }
+        resident.clear()
+      }
+    }
+
+    /** Shard replays run for this index so far, over every payload: one
+      * per non-empty shard per resident build, plus one per resident
+      * partition recomputed after an eviction. */
+    private[graft] def shardReplays: Long =
+      resident.synchronized(Option(replayed).fold(0L)(_.sum))
+
+    private[DistributedHnsw] def residentFor(payload: Option[VectorCompression])(
+        build: LongAccumulator => RDD[(Int, ShardGraph)]
+    ): RDD[(Int, ShardGraph)] =
+      resident.synchronized {
+        if (replayed == null)
+          replayed = edges.sparkSession.sparkContext
+            .longAccumulator("DistributedHnsw.shardReplays")
+        resident.getOrElseUpdate(payload, {
+          val g = build(replayed)
+          held.add(g)
+          g
+        })
+      }
   }
+
+  /** Every resident searcher RDD not yet released by [[Shards.unpersist]]:
+    * Spark drops a persisted RDD once nothing references it, which would
+    * free an index's storage at an arbitrary later moment. */
+  private val held = java.util.concurrent.ConcurrentHashMap.newKeySet[RDD[_]]()
+
+  /** One shard's resident searcher and its node ids by local index. */
+  private[operators] final case class ShardGraph(
+      ids: Array[Long], // ascending
+      searcher: LocalGraphSearcher
+  )
 
   /** Build per-shard HNSW graphs. Rows are assigned to shards by
     * `id % numShards` (deterministic, data-independent) and inserted in
@@ -190,7 +253,7 @@ object DistributedHnsw {
     * [[VectorCompression]] analog of
     * [[ProductQuantizer.encodePartitioned]]).
     */
-  private def shardCodes(
+  private[graft] def shardCodes(
       vectors: DataFrame, // shard int, id long, vec array<double>
       c: VectorCompression
   ): DataFrame = {
@@ -261,18 +324,30 @@ object DistributedHnsw {
     * then a global per-query top-k merge. Returns
     * (query_id, neighbor_id, dist, rnk).
     *
-    * Queries never pass through the driver: they fan out to each shard via
-    * a flatMap replication and meet the shard's base table/edges/entry in
-    * one 4-way cogroup, so a million-query batch is just another
-    * distributed input (per-shard iteration spills through the cogroup
-    * machinery rather than sitting in driver or broadcast memory).
+    * Queries never pass through the driver, and the index does not move:
+    * the first search replays each shard's vectors, edges and entry into
+    * a resident [[LocalGraphSearcher]] (one per shard, persisted
+    * MEMORY_ONLY in an RDD hash-partitioned by shard), and every search
+    * partitions only its (shard, query) fan-out with the same
+    * partitioner and walks the resident graphs partition by partition.
+    * A search shuffles O(|Q|·numShards) query rows plus the O(|Q|·k)
+    * merge, whatever the corpus size.
     *
-    * Compressed search cogroups the CODE table (persisted at build — ~M
-    * shorts per vector instead of D doubles on the wire) and measures
-    * asymmetric query-to-code distances; the raw vector table is not in
-    * the lineage and nothing encodes inside the search tasks. A
-    * compressed search over a raw-only artifact derives the code table
-    * once, distributed, before the cogroup.
+    * Executor memory: each executor keeps its shards' searchers for the
+    * life of the [[Shards]] (until [[Shards.unpersist]]) — the vectors as
+    * D doubles each (the codes, ~M shorts each, when compressed) plus a
+    * boxed hash adjacency of about 50 bytes per edge. Measured: 7.2 MB
+    * for 5,000 × 64-d vectors at m = 12 (96k edges), about 2.8× the raw
+    * vectors. Each payload searched (raw, or one per codec) holds its own
+    * copy. A partition that does not fit is replayed again by each search
+    * that needs it, like any MEMORY_ONLY block.
+    *
+    * Compressed search replays the CODE table (persisted at build — ~M
+    * shorts per vector instead of D doubles) and measures asymmetric
+    * query-to-code distances; the raw vector table is not in the
+    * lineage and nothing encodes inside the search tasks. A compressed
+    * search over a raw-only artifact derives the code table once,
+    * distributed, before the replay.
     */
   def search(
       shards: Shards,
@@ -283,11 +358,11 @@ object DistributedHnsw {
       efSearch: Int = -1,
       compression: Option[VectorCompression] = None
   ): DataFrame =
-    searchIndexed(shards, fanOut(shards, queries, qidCol, qvecCol), qidCol,
+    searchResident(shards, fanOut(shards, queries, qidCol, qvecCol), qidCol,
       k, Seq(efSearch), compression).drop("ef")
 
-  /** Operating-curve search: ONE shard cogroup (one adjacency rebuild,
-    * one upper-layer descent per query) serving EVERY efSearch setting —
+  /** Operating-curve search: ONE walk of the resident graphs (one
+    * upper-layer descent per query) serving EVERY efSearch setting —
     * the per-ef work is only the layer-0 beam. [[search]] is this curve
     * at one ef, so each ef slice is bit-equal to [[search]] at that ef
     * (spec-gated). Returns (ef, query_id, neighbor_id, dist, rnk) with
@@ -306,7 +381,7 @@ object DistributedHnsw {
     // top-k: the merge heap does not dedupe ids
     require(efs.distinct.length == efs.length,
       s"searchEfCurve: duplicate efs in ${efs.mkString("[", ", ", "]")}")
-    searchIndexed(shards, fanOut(shards, queries, qidCol, qvecCol), qidCol,
+    searchResident(shards, fanOut(shards, queries, qidCol, qvecCol), qidCol,
       k, efs, compression)
   }
 
@@ -329,7 +404,7 @@ object DistributedHnsw {
       efSearch: Int = -1,
       compression: Option[VectorCompression] = None
   ): DataFrame = {
-    val spark = shards.vectors.sparkSession
+    val spark = queries.sparkSession
     import spark.implicits._
     val queryRdd = IvfIndex
       .probeCells(spark, queries, qidCol, qvecCol, shardCentroids, nProbeShards)
@@ -337,9 +412,9 @@ object DistributedHnsw {
         col("cell"),
         col(qidCol).cast("long"),
         col(qvecCol).cast("array<double>"))
-      .as[(Int, Long, Seq[Double])]
+      .as[(Int, Long, Array[Double])]
       .rdd.map { case (s, id, v) => (s, (id, v)) }
-    searchIndexed(shards, queryRdd, qidCol, k, Seq(efSearch), compression)
+    searchResident(shards, queryRdd, qidCol, k, Seq(efSearch), compression)
       .drop("ef")
   }
 
@@ -348,9 +423,10 @@ object DistributedHnsw {
     * inverted-file half): `allowedIds` (one numeric id column — typically
     * a predicate over a metadata table) flags each shard vector, the
     * layer-0 traversal routes through disallowed nodes but only surfaces
-    * flagged ones. The flag rides the same shard-cogroup as the vectors —
-    * one extra boolean per row, no extra shuffle of the corpus, and the
-    * allow-set is never collected anywhere.
+    * flagged ones. The flags are per call: they ride to the resident
+    * shard graphs as a co-partitioned (shard, id, ok) input — one boolean
+    * per node, no vector moves, and the allow-set is never collected
+    * anywhere.
     *
     * Under a selective predicate raise `efSearch` (the standard
     * over-fetch) — recall is spec-gated; with every id allowed the result
@@ -367,7 +443,7 @@ object DistributedHnsw {
   ): DataFrame =
     searchFlagged(
       shards, queries, qidCol, qvecCol, k,
-      shards.vectors
+      shards.vectors.select(col("shard"), col("id"))
         .join(
           allowedIds
             .select(col(allowedIds.columns.head).cast("long").as("id"))
@@ -375,8 +451,7 @@ object DistributedHnsw {
             .withColumn("ok", lit(true)),
           Seq("id"), "left")
         .select(
-          col("shard"), col("id"), col("vec"),
-          coalesce(col("ok"), lit(false)).as("ok")),
+          col("shard"), col("id"), coalesce(col("ok"), lit(false)).as("ok")),
       efSearch)
 
   /** Tombstone-excluding search — the DELETE half of index maintenance
@@ -402,16 +477,14 @@ object DistributedHnsw {
   ): DataFrame =
     searchFlagged(
       shards, queries, qidCol, qvecCol, k,
-      shards.vectors
+      shards.vectors.select(col("shard"), col("id"))
         .join(
           tombstones
             .select(col(tombstones.columns.head).cast("long").as("id"))
             .distinct()
             .withColumn("dead", lit(true)),
           Seq("id"), "left")
-        .select(
-          col("shard"), col("id"), col("vec"),
-          col("dead").isNull.as("ok")),
+        .select(col("shard"), col("id"), col("dead").isNull.as("ok")),
       efSearch)
 
   private def searchFlagged(
@@ -420,22 +493,11 @@ object DistributedHnsw {
       qidCol: String,
       qvecCol: String,
       k: Int,
-      flagged: DataFrame, // shard int, id long, vec array<double>, ok boolean
+      flags: DataFrame, // shard int, id long, ok boolean
       efSearch: Int
-  ): DataFrame = {
-    val spark = shards.vectors.sparkSession
-    import spark.implicits._
-    val params = shards.params
-    val base = flagged
-      .as[(Int, Long, Seq[Double], Boolean)]
-      .rdd.map { case (s, id, v, ok) => (s, (id, (v, ok))) }
-    searchShards[(Seq[Double], Boolean)](
-      shards, base, fanOut(shards, queries, qidCol, qvecCol), qidCol, k,
-      Seq(efSearch),
-      (payload, height) => LocalGraphSearcher.rawFiltered(
-        payload.map(_._1.toArray), payload.map(_._2), height, params)
-    ).drop("ef")
-  }
+  ): DataFrame =
+    searchResident(shards, fanOut(shards, queries, qidCol, qvecCol), qidCol,
+      k, Seq(efSearch), None, Some(flags)).drop("ef")
 
   /** Shard-scoped compaction — the physical half of delete maintenance:
     * tombstoned vectors are removed by REBUILDING ONLY the shards that
@@ -510,39 +572,38 @@ object DistributedHnsw {
       queries: DataFrame,
       qidCol: String,
       qvecCol: String
-  ): RDD[(Int, (Long, Seq[Double]))] = {
+  ): RDD[(Int, (Long, Array[Double]))] = {
     val spark = queries.sparkSession
     import spark.implicits._
     val nShards = shards.numShards
     queries
       .select(col(qidCol).cast("long"), col(qvecCol).cast("array<double>"))
-      .as[(Long, Seq[Double])]
+      .as[(Long, Array[Double])]
       .rdd.flatMap { case (id, v) =>
         (0 until nShards).iterator.map(s => (s, (id, v)))
       }
   }
 
-  /** [[searchShards]] over the index's raw vectors, or over its code table
-    * when a codec is given. */
-  private def searchIndexed(
+  /** The partitioning of the resident graphs: one partition per shard. */
+  private def byShard(shards: Shards) = new HashPartitioner(shards.numShards)
+
+  /** The resident searchers for `payload`: the index's raw vectors, or
+    * its code table when a codec is given. Built on the first call per
+    * payload, by [[replay]]. */
+  private def resident(
       shards: Shards,
-      queries: RDD[(Int, (Long, Seq[Double]))],
-      qidCol: String,
-      k: Int,
-      efs: Seq[Int],
-      compression: Option[VectorCompression]
-  ): DataFrame = {
-    val spark = shards.vectors.sparkSession
+      payload: Option[VectorCompression]
+  ): RDD[(Int, ShardGraph)] = shards.residentFor(payload) { replays =>
+    val spark = shards.edges.sparkSession
     import spark.implicits._
     val params = shards.params
-    compression match {
+    payload match {
       case Some(c) =>
         val codeRdd = shards.codes.getOrElse(shardCodes(shards.vectors, c))
           .select(col("shard"), col("id"), col("code"))
           .as[(Int, Long, Seq[Short])]
           .rdd.map { case (s, id, cd) => (s, (id, cd)) }
-        searchShards[Seq[Short]](
-          shards, codeRdd, queries, qidCol, k, efs,
+        replay[Seq[Short]](shards, codeRdd, replays,
           (codes, height) => LocalGraphSearcher.compressed(
             codes.map(_.toArray), height, params, c))
       case None =>
@@ -550,32 +611,25 @@ object DistributedHnsw {
           .select(col("shard"), col("id"), col("vec"))
           .as[(Int, Long, Seq[Double])]
           .rdd.map { case (s, id, v) => (s, (id, v)) }
-        searchShards[Seq[Double]](
-          shards, vecRdd, queries, qidCol, k, efs,
+        replay[Seq[Double]](shards, vecRdd, replays,
           (vecs, height) => LocalGraphSearcher.raw(
             vecs.map(_.toArray), height, params))
     }
   }
 
-  /** The shard-cogroup search kernel, generic over the per-node payload
-    * (raw vectors, codes, or vectors with an allow flag): co-locate base
-    * table / edges / entry / the (shard, query) pairs per shard, replay
-    * the shard's edge table into a local searcher (no random level draws,
-    * so exactly the built graph), run every query of the shard's slice
-    * through it at every ef, then merge globally with a bounded-heap top-k
-    * per (ef, query) — partial agg per shard output partition, O(|Q|·k)
-    * shuffle per ef. Returns (ef, qidCol, neighbor_id, dist, rnk).
-    */
-  private def searchShards[V: ClassTag](
+  /** The one-time replay, generic over the per-node payload (raw vectors
+    * or codes): co-locate each shard's base table, edges and entry in one
+    * cogroup under [[byShard]], replay the edge table into a local
+    * searcher (no random level draws, so exactly the built graph), and
+    * persist the searchers MEMORY_ONLY. Materialized before it returns,
+    * so a caller waiting on the build finds it done. */
+  private def replay[V: ClassTag](
       shards: Shards,
       base: RDD[(Int, (Long, V))],
-      queries: RDD[(Int, (Long, Seq[Double]))],
-      qidCol: String,
-      k: Int,
-      efs: Seq[Int],
+      replays: LongAccumulator,
       mkSearcher: (Array[V], Int) => LocalGraphSearcher
-  ): DataFrame = {
-    val spark = shards.vectors.sparkSession
+  ): RDD[(Int, ShardGraph)] = {
+    val spark = shards.edges.sparkSession
     import spark.implicits._
     val edges = shards.edges
       .as[(Int, Int, Long, Long)]
@@ -583,10 +637,9 @@ object DistributedHnsw {
     val entries = shards.entries
       .as[(Int, Long, Int)]
       .rdd.map { case (s, ep, h) => (s, (ep, h)) }
-    val efArr = efs.toArray
-    val walked = base.cogroup(edges, entries, queries)
-      .flatMap { case (_, (nodes, es, ens, qs)) =>
-        if (nodes.isEmpty || ens.isEmpty || qs.isEmpty) Iterator.empty
+    val graphs = base.cogroup(edges, entries, byShard(shards))
+      .mapPartitions(_.flatMap { case (shard, (nodes, es, ens)) =>
+        if (nodes.isEmpty || ens.isEmpty) Iterator.empty
         else {
           val sorted = nodes.toArray.sortBy(_._1)
           val ids = sorted.map(_._1)
@@ -597,20 +650,81 @@ object DistributedHnsw {
             searcher.addEdge(l, localOf(a), localOf(b))
           }
           searcher.setEntry(localOf(ep))
-          qs.iterator.flatMap { case (qid, qv) =>
-            // the distance kernels loop over the query's length: a shorter
-            // query would silently score a prefix of every vector
-            require(qv.length == searcher.width,
-              s"query $qid has width ${qv.length}, the indexed vectors " +
-                s"have width ${searcher.width}")
-            searcher.search(qv.toArray, k, efArr).map { case (e, d, local) =>
-              (e, qid, ids(local), d)
-            }
+          replays.add(1L)
+          Iterator((shard, ShardGraph(ids, searcher)))
+        }
+      }, preservesPartitioning = true)
+      .setName("DistributedHnsw.resident")
+      .persist(StorageLevel.MEMORY_ONLY)
+    graphs.count()
+    graphs
+  }
+
+  /** The search kernel: partition the (shard, query) pairs — and, for a
+    * filtered search, the per-node (shard, id, ok) flags — like the
+    * resident graphs, zip them partition by partition, run every query of
+    * a shard through its searcher at every ef, then merge globally with a
+    * bounded-heap top-k per (ef, query) — partial agg per partition,
+    * O(|Q|·k) shuffle per ef. A shard with no graph (no nodes) yields
+    * nothing. Returns (ef, qidCol, neighbor_id, dist, rnk).
+    */
+  private def searchResident(
+      shards: Shards,
+      queries: RDD[(Int, (Long, Array[Double]))],
+      qidCol: String,
+      k: Int,
+      efs: Seq[Int],
+      payload: Option[VectorCompression],
+      flags: Option[DataFrame] = None // shard int, id long, ok boolean
+  ): DataFrame = {
+    val spark = shards.edges.sparkSession
+    import spark.implicits._
+    val graphs = resident(shards, payload)
+    val part = byShard(shards)
+    val qs = queries.partitionBy(part)
+    val efArr = efs.toArray
+    def walk(
+        graph: Map[Int, ShardGraph],
+        allow: Int => Int => Boolean, // per shard; null admits every node
+        it: Iterator[(Int, (Long, Array[Double]))]
+    ): Iterator[(Int, Long, Long, Double)] =
+      it.flatMap { case (shard, (qid, qv)) =>
+        graph.get(shard).fold(Iterator.empty[(Int, Long, Long, Double)]) { g =>
+          // the distance kernels loop over the query's length: a shorter
+          // query would silently score a prefix of every vector
+          require(qv != null && qv.length == g.searcher.width,
+            s"query $qid has width ${if (qv == null) "null" else qv.length}, " +
+              s"the indexed vectors have width ${g.searcher.width}")
+          // NaN compares false against every distance: the beam's
+          // ranking, and so the neighbors returned, would be arbitrary
+          require(!qv.exists(_.isNaN), s"query $qid has a NaN component")
+          g.searcher.search(qv, k, efArr, allow(shard)).map { case (e, d, local) =>
+            (e, qid, g.ids(local), d)
           }
         }
       }
-      .toDF("ef", "query_id", "neighbor_id", "dist")
-    bestPer(walked, Seq("ef", "query_id"), col("dist"), "neighbor_id", k)
+    val walked = flags match {
+      case None =>
+        graphs.zipPartitions(qs)((gs, it) => walk(gs.toMap, _ => null, it))
+      case Some(f) =>
+        val okRdd = f.select(col("shard"), col("id"), col("ok"))
+          .as[(Int, Long, Boolean)]
+          .rdd.map { case (s, id, ok) => (s, (id, ok)) }
+          .partitionBy(part)
+        graphs.zipPartitions(qs, okRdd) { (gs, it, oks) =>
+          val graph = gs.toMap
+          val allow = graph.map { case (s, g) => s -> new Array[Boolean](g.ids.length) }
+          oks.foreach { case (s, (id, ok)) =>
+            allow.get(s).foreach { a =>
+              val i = java.util.Arrays.binarySearch(graph(s).ids, id)
+              if (i >= 0) a(i) = ok
+            }
+          }
+          walk(graph, s => allow(s)(_), it)
+        }
+    }
+    bestPer(walked.toDF("ef", "query_id", "neighbor_id", "dist"),
+        Seq("ef", "query_id"), col("dist"), "neighbor_id", k)
       .select(
         col("ef").cast("long").as("ef"),
         col("query_id").as(qidCol),
@@ -629,8 +743,7 @@ final class LocalGraphSearcher private (
     val width: Int,
     height: Int,
     params: HnswParams,
-    distQ: (Array[Double], Int) => Double,
-    allow: Int => Boolean = null
+    distQ: (Array[Double], Int) => Double
 ) {
   import scala.collection.mutable
 
@@ -648,13 +761,16 @@ final class LocalGraphSearcher private (
     * ef=1 regardless of efSearch, so it runs once, then one layer-0 beam
     * per ef (ef ≤ 0 means the index default, raised to `topK`). Upper
     * layers route only — their result never enters W — so the descent is
-    * unfiltered even in a filtered search, the hnswlib semantics. Returns
-    * (ef, dist, localId) triples, ascending (dist, id) within each ef.
+    * unfiltered even in a filtered search, the hnswlib semantics: the
+    * layer-0 walk routes through every node but only nodes `allow` admits
+    * (every node when null) surface. Returns (ef, dist, localId) triples,
+    * ascending (dist, id) within each ef.
     */
   def search(
       q: Array[Double],
       topK: Int,
-      efs: Array[Int]
+      efs: Array[Int],
+      allow: Int => Boolean = null
   ): Iterator[(Int, Double, Int)] = {
     if (n == 0) return Iterator.empty
     val dist = distQ(q, _: Int)
@@ -685,20 +801,6 @@ object LocalGraphSearcher {
     new LocalGraphSearcher(
       vecs.length, vecs.headOption.fold(0)(_.length), height, params,
       (q, id) => KMeansLocal.l2Sq(q, vecs(id)))
-
-  /** Attribute-filtered: exact L2² plus a per-node admission flag. The
-    * walk routes through disallowed nodes; only flagged nodes surface.
-    */
-  def rawFiltered(
-      vecs: Array[Array[Double]],
-      flags: Array[Boolean],
-      height: Int,
-      params: HnswParams
-  ): LocalGraphSearcher =
-    new LocalGraphSearcher(
-      vecs.length, vecs.headOption.fold(0)(_.length), height, params,
-      (q, id) => KMeansLocal.l2Sq(q, vecs(id)),
-      allow = flags(_))
 
   /** Compressed: asymmetric query-to-code distance over the shard's
     * PERSISTED codes (ref py/hnsw.py:184-189 — search compares raw query

@@ -630,10 +630,23 @@ object GraphAudit {
       epsSqNum: Long,
       epsSqDen: Long,
       mu: Int
-  ): DataFrame = {
-    require(epsSqNum > 0 && epsSqDen >= epsSqNum, "scan: need 0 < eps^2 <= 1")
+  ): DataFrame =
+    scanCurve(stats, Seq(epsSqNum), epsSqDen, mu).head
+
+  /** [[scan]] at every ε² = num/epsSqDen of `epsSqNums`, over ONE collect
+    * of the three tables: three jobs however many ε settings, each
+    * census then driver arithmetic. Returns one frame per setting, in
+    * order, each row for row [[scan]] at that ε.
+    */
+  def scanCurve(
+      stats: WedgeStats,
+      epsSqNums: Seq[Long],
+      epsSqDen: Long,
+      mu: Int
+  ): Seq[DataFrame] = {
+    epsSqNums.foreach(n =>
+      require(n > 0 && epsSqDen >= n, "scan: need 0 < eps^2 <= 1"))
     require(mu >= 2, s"scan: mu must be >= 2, got $mu")
-    def opt(r: Row, i: Int): Option[Long] = Option.unless(r.isNullAt(i))(r.getLong(i))
     val dgRows = LocalGraph.collectCapped("scan: degree table",
       stats.dg.select(col("id"), col("deg")), LocalGraph.MaxAuditNodes)
     val uRows = LocalGraph.collectCapped("scan: undirected edges",
@@ -641,6 +654,20 @@ object GraphAudit {
     val cnRows = LocalGraph.collectCapped("scan: wedge counts",
       stats.cn.select(col("a"), col("b"), col("c"), col("da"), col("db")),
       LocalGraph.MaxAuditEdges)
+    epsSqNums.map(census(stats, dgRows, uRows, cnRows, _, epsSqDen, mu))
+  }
+
+  /** The SCAN census at one ε over the collected tables of [[scanCurve]]. */
+  private def census(
+      stats: WedgeStats,
+      dgRows: Array[Row],
+      uRows: Array[Row],
+      cnRows: Array[Row],
+      epsSqNum: Long,
+      epsSqDen: Long,
+      mu: Int
+  ): DataFrame = {
+    def opt(r: Row, i: Int): Option[Long] = Option.unless(r.isNullAt(i))(r.getLong(i))
     // σ ≥ ε in exact integers: epsSqDen·(c+2)² ≥ epsSqNum·(da+1)·(db+1);
     // a null count compares as null, which the filter drops
     import Math.{addExact, multiplyExact}

@@ -189,7 +189,7 @@ object HnswReplay {
   }
 
   /** Attribute-filtered search replay — the hnswlib filter contract
-    * ([[DistributedHnsw.searchFiltered]] / LocalGraphSearcher.rawFiltered:
+    * ([[DistributedHnsw.searchFiltered]] / LocalGraphSearcher.search's `allow`:
     * route THROUGH disallowed nodes, only allowed ids enter W) pinned by
     * an oracle instead of ScalaTest gates alone. The greedy descent and
     * the layer-0 ROUTING beam are completely unfiltered (severing

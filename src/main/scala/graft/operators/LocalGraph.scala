@@ -257,10 +257,40 @@ private[operators] object LocalGraph {
       vecCol: String,
       graph: DataFrame,
       entryId: Long
-  ): Broadcast[LocalGraph] = {
-    val nodes = vecs
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
+  ): Broadcast[LocalGraph] =
+    vectorGraph(what, vecs,
+      vecs.select(col(idCol).cast("long"), col(vecCol).cast("array<double>")).collect(),
+      graph, entryId)
+
+  /** [[vectors]] over a node table that also carries each node's PQ code
+    * in `codeCol`, and [[codesByIndex]] of those codes: the nodes,
+    * vectors and codes come from ONE collect of `vecs`. */
+  def vectorsWithCodes(
+      what: String,
+      vecs: DataFrame,
+      idCol: String,
+      vecCol: String,
+      codeCol: String,
+      graph: DataFrame,
+      entryId: Long,
+      model: PQModel
+  ): (Broadcast[LocalGraph], Array[Array[Short]]) = {
+    val rows = vecs
+      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"), col(codeCol))
       .collect()
+    val g = vectorGraph(what, vecs, rows, graph, entryId)
+    (g, codesOf(what, g.value, rows, 2, model))
+  }
+
+  /** The graph of [[vectors]] over collected (id, vec, …) node rows. */
+  private def vectorGraph(
+      what: String,
+      vecs: DataFrame,
+      rows: Array[Row],
+      graph: DataFrame,
+      entryId: Long
+  ): Broadcast[LocalGraph] = {
+    val nodes = rows
       .collect { case r if !r.isNullAt(0) => // a null id joins nothing
         (r.getLong(0), if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray)
       }
@@ -391,15 +421,26 @@ private[operators] object LocalGraph {
       g: LocalGraph,
       codes: DataFrame, // (id, code)
       model: PQModel
+  ): Array[Array[Short]] =
+    codesOf(what, g,
+      codes.select(col(codes.columns(0)).cast("long"), col(codes.columns(1))).collect(),
+      1, model)
+
+  /** [[codesByIndex]] over collected rows: the id at 0, the code at `at`. */
+  private def codesOf(
+      what: String,
+      g: LocalGraph,
+      rows: Array[Row],
+      at: Int,
+      model: PQModel
   ): Array[Array[Short]] = {
     require(model.d == g.d, s"$what: PQ model width ${model.d} != vector width ${g.d}")
     val m = model.m
     val out = new Array[Array[Short]](g.ids.length)
-    codes.select(col(codes.columns(0)).cast("long"), col(codes.columns(1))).collect()
-      .foreach { r =>
-        val i = if (r.isNullAt(0)) -1 else g.indexOf(r.getLong(0))
-        if (i >= 0 && !r.isNullAt(1)) out(i) = r.getSeq[Short](1).toArray
-      }
+    rows.foreach { r =>
+      val i = if (r.isNullAt(0)) -1 else g.indexOf(r.getLong(0))
+      if (i >= 0 && !r.isNullAt(at)) out(i) = r.getSeq[Short](at).toArray
+    }
     val bad = out.indexWhere(c => c == null || c.length != m)
     require(bad < 0,
       s"$what: node id=${g.ids(math.max(bad, 0))} has no PQ code of length $m — " +

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -292,9 +293,50 @@ object NNDescent {
     require(rounds >= 1, "beamSearchCompressed needs at least one round")
     val local = LocalGraph.vectors(
       "beamSearchCompressed", vecs, idCol, vecCol, graph, entryId)
-    val codesBc = queries.sparkSession.sparkContext.broadcast(
+    walkCompressed(local,
       LocalGraph.codesByIndex("beamSearchCompressed", local.value,
-        codes.select(col("id"), col("code")), model))
+        codes.select(col("id"), col("code")), model),
+      model, queries, qidCol, qvecCol, k, beam, rounds)
+  }
+
+  /** [[beamSearchCompressed]] over ONE corpus frame that carries each
+    * node's vector (`vecCol`) and PQ code (`codeCol`): the nodes, vectors
+    * and codes are collected in one pass instead of two. */
+  def beamSearchCoded(
+      graph: DataFrame, // src long, dst long
+      corpus: DataFrame,
+      idCol: String,
+      vecCol: String,
+      codeCol: String,
+      model: PQModel,
+      queries: DataFrame,
+      qidCol: String,
+      qvecCol: String,
+      k: Int,
+      beam: Int,
+      rounds: Int,
+      entryId: Long
+  ): DataFrame = {
+    require(beam >= k, "beam must be at least k")
+    require(rounds >= 1, "beamSearchCompressed needs at least one round")
+    val (local, codes) = LocalGraph.vectorsWithCodes(
+      "beamSearchCompressed", corpus, idCol, vecCol, codeCol, graph, entryId, model)
+    walkCompressed(local, codes, model, queries, qidCol, qvecCol, k, beam, rounds)
+  }
+
+  /** The ADC-scored walk and exact rerank of the compressed searches. */
+  private def walkCompressed(
+      local: Broadcast[LocalGraph],
+      codes: Array[Array[Short]],
+      model: PQModel,
+      queries: DataFrame,
+      qidCol: String,
+      qvecCol: String,
+      k: Int,
+      beam: Int,
+      rounds: Int
+  ): DataFrame = {
+    val codesBc = queries.sparkSession.sparkContext.broadcast(codes)
     LocalGraph.perQuery(local, queries, qidCol, qvecCol) { (g, qid, qv) =>
       val lut = model.adcLut(qv)
       val cds = codesBc.value

@@ -45,8 +45,8 @@ object Artifacts {
   }
 
   /** Remove the entry for (`name`, `dir`), if any, and release the
-    * executor storage it holds: an HNSW build's edge table and shard
-    * caches, or a `.cache()`d frame. Checkpointed frames are reclaimed
+    * executor storage it holds: an HNSW build's edge table, shard caches
+    * and resident searchers, or a `.cache()`d frame. Checkpointed frames are reclaimed
     * by the ContextCleaner once unreachable.
     */
   def drop(name: String, dir: String): Unit =

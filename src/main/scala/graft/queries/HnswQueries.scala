@@ -116,8 +116,8 @@ object HnswQueries {
 
   /** Shared PQ-compressed build per sf dir: the index whose shard artifact
     * carries the persisted code table (seeded codebooks, so rebuilds are
-    * deterministic). Compressed search cogroups codes — the path
-    * hnsw_knn_pq benches.
+    * deterministic). Compressed search walks resident graphs replayed
+    * from the codes — the path hnsw_knn_pq benches.
     */
   private def sharedPqBuild(
       spark: org.apache.spark.sql.SparkSession,
@@ -326,7 +326,7 @@ object HnswQueries {
         val shards = sharedBuild(spark, dir)
         val exact = sharedExact(spark, dir)
         val denom = exact.count().toDouble
-        // one multi-ef search: one shard cogroup + one descent per query
+        // one multi-ef search: one resident walk + one descent per query
         // serve every setting (the descent routes with ef=1 regardless of
         // efSearch — re-searching per setting paid it ×3, the r13 cost);
         // bround == the previous rint half-even rounding

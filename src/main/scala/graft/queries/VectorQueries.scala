@@ -1093,12 +1093,11 @@ object VectorQueries {
           .filter(col("id") % 10 === 0)
           .select(col("id").as("query_id"), col("vec").as("qv"))
         val model = fixedWalkModel(spark, dir)
-        val codes = emb.select(
-          col("id"),
-          graft.operators.ProductQuantizer.encodeCol(model, col("vec")).as("code"))
+        val corpus = emb.withColumn("code",
+          graft.operators.ProductQuantizer.encodeCol(model, col("vec")))
         NNDescent
-          .beamSearchCompressed(
-            sharedPruned(spark, dir), codes, model, emb, "id", "vec",
+          .beamSearchCoded(
+            sharedPruned(spark, dir), corpus, "id", "vec", "code", model,
             q, "query_id", "qv", k = K, beam = 24, rounds = 6, entryId = 0L)
           .select(
             col("query_id"), col("neighbor_id"),
@@ -2809,28 +2808,28 @@ object VectorQueries {
     GQuery(
       "knn_graph_scan_curve",
       (spark, dir) => {
-        // ONE wedge artifact; each ε is a pure integer filter over it
-        val stats = sharedWedge(spark, dir)
-        Seq(4L, 9L, 16L)
-          .map { num =>
-            graft.operators.GraphAudit
-              .scan(stats, epsSqNum = num, epsSqDen = 100L, mu = 3)
-              .agg(
-                sum(when(col("role") === "core", 1L).otherwise(0L))
-                  .as("n_core"),
-                sum(when(col("role") === "border", 1L).otherwise(0L))
-                  .as("n_border"),
-                sum(when(col("role") === "hub", 1L).otherwise(0L))
-                  .as("n_hub"),
-                sum(when(col("role") === "outlier", 1L).otherwise(0L))
-                  .as("n_outlier"),
-                countDistinct(col("cluster")).as("n_clusters"))
-              .withColumn("eps_sq_x100", lit(num))
+        // ONE wedge artifact, collected once; each ε is a pure integer
+        // filter over it, and each census a local frame whose counts are
+        // taken here: sum over no rows is null, countDistinct skips null
+        import org.apache.spark.sql.Row
+        import org.apache.spark.sql.types.{LongType, StructField, StructType}
+        val nums = Seq(4L, 9L, 16L)
+        val rows = graft.operators.GraphAudit
+          .scanCurve(sharedWedge(spark, dir), nums, epsSqDen = 100L, mu = 3)
+          .zip(nums)
+          .map { case (census, num) =>
+            // a local frame: this collect runs no job
+            val rs = census.select(col("role"), col("cluster")).collect()
+            def n(role: String): Any =
+              if (rs.isEmpty) null else rs.count(_.getString(0) == role).toLong
+            Row(num, n("core"), n("border"), n("hub"), n("outlier"),
+              rs.collect { case r if !r.isNullAt(1) => r.getLong(1) }.distinct.length.toLong)
           }
-          .reduce(_ unionByName _)
-          .select(
-            col("eps_sq_x100"), col("n_core"), col("n_border"),
-            col("n_hub"), col("n_outlier"), col("n_clusters"))
+        spark.createDataFrame(
+          java.util.Arrays.asList(rows: _*),
+          StructType(StructField("eps_sq_x100", LongType, nullable = false) +:
+            Seq("n_core", "n_border", "n_hub", "n_outlier").map(StructField(_, LongType)) :+
+            StructField("n_clusters", LongType, nullable = false)))
       },
       Some {
         val census = Seq(4, 9, 16).map { num =>

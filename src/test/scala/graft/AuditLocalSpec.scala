@@ -126,6 +126,25 @@ class AuditLocalSpec extends SparkSpec {
     }
   }
 
+  test("scanCurve == scan at each eps, from one collect of the wedge tables") {
+    for (seed <- 1 to 3) {
+      val (edges, ids) = graph(seed)
+      val stats = GraphAudit.wedgeStats(edges, ids)
+      for (den <- Seq(100L, 1L); mu <- Seq(2, 3)) {
+        val nums = epsSettings.filter(_._2 == den).map(_._1)
+        val curve = GraphAudit.scanCurve(stats, nums, den, mu)
+        assert(curve.length == nums.length)
+        for ((local, num) <- curve.zip(nums))
+          assertSame(local, GraphAudit.scan(stats, num, den, mu),
+            s"seed $seed eps $num/$den mu $mu")
+      }
+    }
+    val stats = GraphAudit.wedgeStats(graph(1)._1, graph(1)._2)
+    val jobs = Seq(Seq(4L), Seq(4L, 9L, 16L, 49L)).map(nums =>
+      jobsOf(GraphAudit.scanCurve(stats, nums, 100L, 3).foreach(_.collect())))
+    assert(jobs(0) == jobs(1) && jobs(0) <= 3, s"scanCurve jobs at 1 and 4 eps: $jobs")
+  }
+
   test("scan degenerate inputs: no edges, isolated ids, loops and repeats, outside ids, mu above every degree, eps^2 = 1, repeated and null ids") {
     val (edges, ids) = graph(7)
     val none = Seq.empty[(Long, Long)].toDF("src", "dst")

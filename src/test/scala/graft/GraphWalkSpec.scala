@@ -105,6 +105,38 @@ class GraphWalkSpec extends SparkSpec {
     }
   }
 
+  test("beamSearchCoded == beamSearchCompressed: vectors and codes from one corpus frame") {
+    for (seed <- 1 to 3; rounds <- Seq(1, 4)) {
+      val (vecs, graph, q) = vectorGraph(seed)
+      val model = fixedModel(vecs)
+      val corpus = vecs.withColumn("code", ProductQuantizer.encodeCol(model, col("vec")))
+      val coded = NNDescent.beamSearchCoded(graph, corpus, "id", "vec", "code", model,
+        q, "qid", "qv", k = 5, beam = 8, rounds = rounds, entryId = 0L)
+      assertSame(coded,
+        NNDescent.beamSearchCompressed(graph, corpus.select(col("id"), col("code")), model,
+          vecs, "id", "vec", q, "qid", "qv", k = 5, beam = 8, rounds = rounds, entryId = 0L),
+        s"beamSearchCoded seed $seed rounds $rounds")
+    }
+    val (vecs, graph, q) = vectorGraph(1)
+    val model = fixedModel(vecs)
+    val partial = vecs.withColumn("code",
+      when(col("id") =!= 9L, ProductQuantizer.encodeCol(model, col("vec"))))
+    val e = intercept[IllegalArgumentException](NNDescent.beamSearchCoded(graph, partial,
+      "id", "vec", "code", model, q, "qid", "qv", 5, 8, 2, 0L))
+    assert(e.getMessage.contains("id=9"), e.getMessage)
+  }
+
+  test("one collect per table: warm jobs of knn_graph_search_pq <= 6, knn_graph_scan_curve <= 7") {
+    val jobs = Seq("knn_graph_search_pq" -> 6, "knn_graph_scan_curve" -> 7).map { case (name, cap) =>
+      val q = SparkEntry.queries(name)
+      val cold = q(spark, sf001).collect()
+      val n = jobsOf(assert(q(spark, sf001).collect().length == cold.length))
+      assert(n <= cap, s"$name: $n warm jobs, cap $cap")
+      name -> n
+    }
+    info(s"warm jobs on the sf0.01 tables: ${jobs.mkString(", ")}")
+  }
+
   test("beam searches reject a wrong-width query, an unknown entry, two vectors for one id and a partial code table") {
     val (vecs, graph, _) = vectorGraph(1)
     def rejects(what: String, needles: String*)(run: => Any): Unit = {
