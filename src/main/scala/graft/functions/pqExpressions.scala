@@ -55,15 +55,23 @@ trait PQModelExpression {
     ctx.addReferenceObj("pqCodebook", flat, "double[]")
 }
 
-private[functions] object PQCheck {
+private[graft] object PQCheck {
   def requireLen(a: ArrayData, expected: Int, what: String, name: String): Unit =
     if (a.numElements() != expected)
       throw new IllegalArgumentException(
         s"$name: expected $what of length $expected, got ${a.numElements()}")
 
   /** Code `c(mi)`, checked to lie in 0 until k. */
-  def code(c: ArrayData, mi: Int, k: Int, name: String): Int = {
-    val v = c.getShort(mi).toInt
+  def code(c: ArrayData, mi: Int, k: Int, name: String): Int =
+    inRange(c.getShort(mi).toInt, mi, k, name)
+
+  /** [[code]] over a primitive code array; `name` is built only on failure. */
+  def code(c: Array[Short], mi: Int, k: Int, name: () => String): Int = {
+    val v = c(mi).toInt
+    if (v < 0 || v >= k) inRange(v, mi, k, name()) else v
+  }
+
+  private def inRange(v: Int, mi: Int, k: Int, name: String): Int = {
     if (v < 0 || v >= k)
       throw new IllegalArgumentException(
         s"$name: code $v out of range for k=$k (subspace $mi)")

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
+import graft.functions.{PQCheck, TopKBuffer}
 import graft.functions.TopKAgg.bestPer
 
 /** IVFADC — the coarse-quantizer + PQ-residual composition (Jégou et al.
@@ -17,16 +19,27 @@ import graft.functions.TopKAgg.bestPer
   * raw doubles at M=8/D=64, and the probed scan prunes partitions exactly
   * like [[IvfIndex]].
   *
-  * Search: each query probes its `nprobe` nearest cells; per (query,
-  * probed cell) ONE M×K lookup table is built from the query's residual
-  * against that cell ([[ProductQuantizer.lutCol]]); every candidate code
-  * in the cell then costs M array lookups inside whole-stage codegen
+  * Search over an index frame ([[search]]): each query probes its
+  * `nprobe` nearest cells; per (query, probed cell) ONE M×K lookup table
+  * is built from the query's residual against that cell
+  * ([[ProductQuantizer.lutCol]]); every candidate code in the cell then
+  * costs M array lookups inside whole-stage codegen
   * ([[ProductQuantizer.adcFromLutCol]]); a bounded heap keeps top-k per
   * query with partial aggregation before the shuffle.
   *
-  * Residuals are computed with `zip_with` (declarative, exact left-to-
-  * right element order — the oracle mirrors it element-wise); the hot
-  * per-candidate loop is entirely native expressions.
+  * Search over a built index ([[searchPartitioned]]) is one scan pass:
+  * the query batch is collected once under [[MaxQueryBatch]] and probed
+  * on the driver, only the query vectors and their probe lists are
+  * broadcast, each task builds a (query, cell) LUT when it first reads
+  * that cell's codes, and the per-task heaps merge through `bestPer`.
+  * Both paths compute the same residuals, LUTs and sums, so on distinct
+  * query ids they return the same rows, dist bits included.
+  *
+  * In [[search]], residuals are computed with `zip_with` (declarative,
+  * exact left-to-right element order — the oracle mirrors it
+  * element-wise) and the hot per-candidate loop is entirely native
+  * expressions; [[searchPartitioned]] subtracts in the same element order
+  * and sums each code in the LUT kernel's order.
   */
 object IvfAdc {
 
@@ -59,10 +72,22 @@ object IvfAdc {
       .withColumn("resid", expr("zip_with(vec, cvec, (x, y) -> x - y)"))
       .withColumn("resid", rotate.fold(col("resid"))(f => f(col("resid"))))
       .select(
-        col("id"), col("cell"),
+        col("id").cast("long").as("id"), col("cell"),
         ProductQuantizer.encodeCol(model, col("resid")).as("code")
       )
   }
+
+  /** Declared schema of a [[build]]-, [[upsert]]- or sink-written index:
+    * `cell` is the partition column, the rest is every data file's footer
+    * (ids are bigint whatever the input's id type, since [[encode]] casts
+    * them). [[searchPartitioned]] reads the index with it instead of
+    * inferring it; a spec pins it to the writers' footers, since Spark
+    * reads a missing column as null. */
+  private[graft] val IndexSchema: StructType = StructType(Seq(
+    StructField("id", LongType),
+    StructField("code", ArrayType(ShortType)),
+    StructField("gen", LongType),
+    StructField("cell", IntegerType)))
 
   /** Persist the residual-code index cell-partitioned (prunable like
     * [[IvfIndex.build]]).
@@ -138,11 +163,10 @@ object IvfAdc {
     )
 
   /** LUT derivation + candidate ADC scan over a precomputed
-    * (qid, cell, qvec) probe table — shared by [[search]] and
-    * [[searchPartitioned]] so the probe set is computed exactly once per
-    * call.
+    * (qid, cell, qvec) probe table: the relational spelling of the ADC
+    * search, which [[search]] runs over an index frame.
     */
-  private def searchWithProbes(
+  private[graft] def searchWithProbes(
       spark: SparkSession,
       index: DataFrame,
       probes: DataFrame,
@@ -215,12 +239,41 @@ object IvfAdc {
     bestPer(pairs, Seq(qidCol), col("xdist"), "neighbor_id", k)
   }
 
-  /** Partition-pruned search against a [[build]]-written index: the
-    * distinct probed cells become a static partition filter (bounded by
-    * the centroid count), same tactic as [[IvfIndex.searchPartitioned]] —
-    * and like there, the probe set is evaluated ONCE via an eager
-    * `localCheckpoint` shared by the partition-filter collect and the LUT
-    * join (blocks released by the ContextCleaner when the result drops).
+  /** Query-batch cap of [[searchPartitioned]], which holds the batch on
+    * the driver and broadcasts it: 10,000 queries are 5 MB of vectors at
+    * d = 64, and a task holds at most one cell's LUTs at a time, at most
+    * 10,000 · M · K doubles (40 MB at M = 8, K = 64). A larger batch
+    * fails by name; split it.
+    */
+  val MaxQueryBatch: Int = 10000
+
+  /** Partition-pruned search against a [[build]]-written index, in one
+    * scan pass:
+    *
+    *   1. the query batch is collected ONCE through
+    *      [[LocalGraph.collectCapped]] (a named error above
+    *      [[MaxQueryBatch]]) and validated: a null vector, a null or NaN
+    *      component, a width other than `model.d` or one query id with two
+    *      different vectors fails by name before any scan. Identical
+    *      repeated rows collapse, and an empty batch returns an empty
+    *      frame without scanning;
+    *   2. each query's `nprobe` cells are picked on the driver by
+    *      (L2², cell), the order of [[IvfIndex.probeCells]]' heap;
+    *   3. the index is read with its declared [[IndexSchema]], filtered
+    *      to the probed cells (a static partition filter, so only their
+    *      directories are read) and masked by the tombstone log;
+    *   4. one `mapPartitions` scores the scan against the broadcast
+    *      query vectors and probe lists: a task builds the LUT of each
+    *      (query, cell) with [[PQModel.adcLut]] over `q − centroid` when
+    *      it reaches that cell's codes, sums each code in
+    *      [[PQModel.adcFromLut]] order with the kernels' code range check,
+    *      and keeps a bounded heap per query;
+    *   5. the tasks' heap entries merge through `bestPer`.
+    *
+    * The result is lazy, `(qid, neighbor_id, dist, rnk)` with the
+    * caller's query-id type. On distinct query ids it equals the
+    * relational spelling over the same probes (probe table, LUT join,
+    * [[searchWithProbes]]) row for row, dist bits included.
     */
   def searchPartitioned(
       spark: SparkSession,
@@ -233,17 +286,137 @@ object IvfAdc {
       k: Int,
       nprobe: Int
   ): DataFrame = {
-    val probes = IvfIndex
-      .probeCells(spark, queries, qidCol, qvecCol, centroids, nprobe)
-      .localCheckpoint()
-    val cells = probes.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val pruned = spark.read.parquet(indexPath)
-      .filter(col("cell").isin(cells.map(Integer.valueOf).toSeq: _*))
-    // tombstone mask (when a maintenance log exists) applies on top of
-    // the pruned candidates only, same as IvfIndex
-    val index = IvfIndex.masked(spark, indexPath, pruned)
-    searchWithProbes(
-      spark, index, probes, qidCol, qvecCol, centroids, model, k)
+    require(k >= 1, s"$Name: k must be >= 1, got $k")
+    require(nprobe >= 1, s"$Name: nprobe must be >= 1, got $nprobe")
+    centroids.zipWithIndex.foreach { case (c, i) =>
+      require(c != null && c.length == model.d,
+        s"$Name: centroid $i has width ${if (c == null) "null" else c.length}, " +
+          s"the PQ model has width ${model.d}")
+    }
+    val picked = queries.select(col(qidCol), col(qvecCol).cast("array<double>"))
+    val batch = probeBatch(
+      LocalGraph.collectCapped(s"$Name: query batch", picked, MaxQueryBatch),
+      centroids, model.d, nprobe)
+    val scoredSchema = StructType(Seq(
+      picked.schema.head,
+      StructField("id", LongType, nullable = false),
+      StructField("dist", DoubleType, nullable = false)))
+    def ranked(scored: DataFrame): DataFrame =
+      bestPer(scored, Seq(qidCol), col("dist"), "id", k)
+        .withColumnRenamed("id", "neighbor_id")
+    if (batch.qids.isEmpty) {
+      // a search's schema, with no scan of the index planned
+      val none = java.util.Collections.emptyList[Row]()
+      spark.createDataFrame(none, ranked(spark.createDataFrame(none, scoredSchema)).schema)
+    } else {
+      import spark.implicits._
+      val cells = batch.probers.indices.filter(batch.probers(_).nonEmpty)
+      val pruned = spark.read.schema(IndexSchema).parquet(indexPath)
+        .filter(col("cell").isin(cells.map(Integer.valueOf): _*))
+      val bc = spark.sparkContext.broadcast(batch)
+      ranked(IvfIndex.masked(spark, indexPath, pruned)
+        .select(col("id"), col("cell"), col("code"))
+        .as[(Long, Int, Array[Short])]
+        .mapPartitions(rows => scoreCodes(bc.value, centroids, model, k, rows))(
+          Encoders.row(scoredSchema))
+        .toDF())
+    }
+  }
+
+  private val Name = "IvfAdc.searchPartitioned"
+
+  /** A validated query batch: its distinct query ids and vectors, and
+    * for each cell the indices of the queries that probe it. */
+  private final case class ProbeBatch(
+      qids: Array[Any],
+      vecs: Array[Array[Double]],
+      probers: Array[Array[Int]])
+
+  /** Validate collected (qid, qvec) rows, collapse repeats and pick each
+    * query's `nprobe` cells by (L2², cell) through a [[TopKBuffer]]: the
+    * sum and the tie order of the probe heap in [[IvfIndex.probeCells]]. */
+  private def probeBatch(
+      rows: Array[Row],
+      centroids: Array[Array[Double]],
+      d: Int,
+      nprobe: Int
+  ): ProbeBatch = {
+    val byQid = new java.util.LinkedHashMap[Any, Array[Double]]()
+    rows.foreach { r =>
+      val qid = r.get(0)
+      require(!r.isNullAt(1), s"$Name: query $qid has a null vector")
+      val xs = r.getSeq[Any](1)
+      require(xs.length == d,
+        s"$Name: query $qid has width ${xs.length}, the index has width $d")
+      val v = xs.iterator.zipWithIndex.map {
+        case (x: Double, _) if !x.isNaN => x
+        case (x, i) =>
+          throw new IllegalArgumentException(
+            s"$Name: query $qid has a ${if (x == null) "null" else "NaN"} component at $i")
+      }.toArray
+      val seen = byQid.putIfAbsent(qid, v)
+      require(seen == null || seen.indices.forall(i => seen(i) == v(i)),
+        s"$Name: query $qid has two different vectors")
+    }
+    val qids = byQid.keySet.toArray
+    val vecs = byQid.values.toArray(new Array[Array[Double]](0))
+    val probers = Array.fill(centroids.length)(Array.newBuilder[Int])
+    vecs.indices.foreach { q =>
+      val heap = new TopKBuffer(nprobe)
+      centroids.indices.foreach(c => heap.add(KMeansLocal.l2Sq(vecs(q), centroids(c)), c))
+      heap.sortedEntries.foreach { case (_, c) => probers(c.toInt) += q }
+    }
+    ProbeBatch(qids, vecs, probers.map(_.result()))
+  }
+
+  /** One task of [[searchPartitioned]]: the heap entries of every query
+    * over the task's (id, cell, code) rows. A data file holds one cell,
+    * so the task keeps one cell's LUTs at a time. */
+  private def scoreCodes(
+      batch: ProbeBatch,
+      centroids: Array[Array[Double]],
+      model: PQModel,
+      k: Int,
+      rows: Iterator[(Long, Int, Array[Short])]
+  ): Iterator[Row] = {
+    val heaps = new Array[TopKBuffer](batch.vecs.length)
+    val offs = new Array[Int](model.m)
+    var cell = -1
+    var probers = Array.emptyIntArray
+    var luts = Array.empty[Array[Double]]
+    rows.foreach { case (id, c, code) =>
+      require(code != null, s"$Name: index row $id has a null code")
+      require(code.length == model.m,
+        s"$Name: index row $id has a code of length ${code.length}, expected M = ${model.m}")
+      if (c != cell) {
+        cell = c
+        probers = batch.probers(c)
+        luts = probers.map { q =>
+          val qv = batch.vecs(q)
+          val cv = centroids(c)
+          model.adcLut(Array.tabulate(qv.length)(i => qv(i) - cv(i)))
+        }
+      }
+      val who = () => s"$Name: index row $id"
+      var mi = 0
+      while (mi < model.m) {
+        offs(mi) = mi * model.k + PQCheck.code(code, mi, model.k, who)
+        mi += 1
+      }
+      var j = 0
+      while (j < probers.length) {
+        val lut = luts(j)
+        var s = 0.0
+        mi = 0
+        while (mi < model.m) { s += lut(offs(mi)); mi += 1 }
+        val q = probers(j)
+        if (heaps(q) == null) heaps(q) = new TopKBuffer(k)
+        heaps(q).add(s, id)
+        j += 1
+      }
+    }
+    heaps.indices.iterator.filter(heaps(_) != null).flatMap { q =>
+      heaps(q).sortedEntries.iterator.map { case (d, id) => Row(batch.qids(q), id, d) }
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.TopKAgg.{bestPer, topK}
 import graft.functions.VectorExpressions._
@@ -78,10 +79,10 @@ object IvfIndex {
   // rows stamped gen = G — a CELL-PARTITIONED APPEND, so only the touched
   // cells' directories gain files, never a rewrite — and (b) tombstones
   // (id, G) to a tiny side log, meaning "versions of id older than G are
-  // dead". The live view joins the aggregated tombstone log (id → max
-  // gen, |log| rows — maintenance-sized, not corpus-sized; AQE broadcasts
-  // it) and keeps rows with row.gen >= tombstone.gen, so an upsert's own
-  // G-stamped row survives the tombstone it writes. An index that never
+  // dead". The live view anti-joins the tombstone log (|log| rows —
+  // maintenance-sized, not corpus-sized; AQE broadcasts it) and drops a
+  // row when a tombstone of its id carries a later gen, so an upsert's
+  // own G-stamped row survives the tombstone it writes. An index that never
   // saw a delete has no log and pays zero masking cost.
   //
   // Single-writer maintenance is assumed (the usual table-format
@@ -109,6 +110,13 @@ object IvfIndex {
     java.nio.file.Files.writeString(f, g.toString)
     g
   }
+
+  /** Declared schema of the tombstone log, which [[appendTombstones]]
+    * alone writes: [[masked]] reads the log with it instead of inferring
+    * it, one job less per masked read. A spec pins it to the footer of a
+    * written log, since Spark reads a missing column as null. */
+  private[graft] val TombstoneSchema: StructType = StructType(Seq(
+    StructField("id", LongType), StructField("gen", LongType)))
 
   private[operators] def appendTombstones(
       spark: SparkSession,
@@ -150,7 +158,7 @@ object IvfIndex {
     * input plan is returned unchanged (zero cost for append-only indexes).
     * `asOfGen` caps which tombstones apply (time travel).
     */
-  private[operators] def masked(
+  private[graft] def masked(
       spark: SparkSession,
       path: String,
       base: DataFrame,
@@ -158,13 +166,14 @@ object IvfIndex {
   ): DataFrame =
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(tombPath(path)))) base
     else {
-      val tomb = spark.read.parquet(tombPath(path))
+      val tomb = spark.read.schema(TombstoneSchema).parquet(tombPath(path))
         .filter(col("gen") <= asOfGen)
-        .groupBy(col("id")).agg(max(col("gen")).as("tomb_gen"))
-      base
-        .join(tomb, Seq("id"), "left")
-        .filter(col("tomb_gen").isNull || col("gen") >= col("tomb_gen"))
-        .drop("tomb_gen")
+        .select(col("id").as("tomb_id"), col("gen").as("tomb_gen"))
+      // a row lives while its gen is >= every tombstone gen of its id: no
+      // aggregation of the log, so no shuffle stage before the broadcast
+      base.join(tomb,
+        col("id") === col("tomb_id") && (col("tomb_gen") > col("gen") || col("gen").isNull),
+        "left_anti")
     }
 
   /** The live view of a maintained index: rows minus tombstoned versions.

@@ -308,7 +308,11 @@ object StreamingOps {
     * batch only encodes). Same producer contract: upserts apply before
     * deletes only within one micro-batch, so each CDC wave must arrive
     * whole (staged outside the watched directory, then moved in with
-    * `ATOMIC_MOVE`).
+    * `ATOMIC_MOVE`). The sink writes exactly the declared index and
+    * tombstone-log schemas that [[graft.operators.IvfAdc.searchPartitioned]]
+    * reads without inference; each file and tombstone a wave adds is
+    * read by the next search's single scan of the probed cells and its
+    * masking join.
     */
   def cdcIvfAdcSink(
       stream: DataFrame,
@@ -337,11 +341,13 @@ object StreamingOps {
   /** Incremental IVFADC maintenance: each micro-batch is assigned to its
     * coarse cell, the residual (vector − centroid) is PQ-encoded, and the
     * (id, cell, code) rows are APPENDED to the cell-partitioned
-    * residual-code index. Same argument as [[incrementalIvfSink]]: cells
-    * are unordered bags and the codebooks are fixed at build time, so
-    * streaming maintenance is pure partitioned append and
+    * residual-code index, ids as bigint, in the index's declared schema.
+    * Same argument as [[incrementalIvfSink]]: cells are unordered bags
+    * and the codebooks are fixed at build time, so streaming maintenance
+    * is pure partitioned append and
     * [[graft.operators.IvfAdc.searchPartitioned]] over the growing index
-    * is correct at every instant — no rebuild, ever.
+    * is correct at every instant — no rebuild, ever: each search scans
+    * the probed cells' files once, whatever appended them.
     */
   def incrementalIvfAdcSink(
       stream: DataFrame,
